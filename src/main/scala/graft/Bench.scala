@@ -73,7 +73,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // Bench-scale tuning (results are config-independent — aggregation is
     // order-insensitive by design). The VERDICT r20 #2 prescription
     // (default partitions max(8, 2×cpus)) was implemented mid-r21 and then

@@ -1240,7 +1240,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus)
       .config("spark.sql.shuffle.partitions",

@@ -83,6 +83,10 @@ object Scratch {
   * parallelism.
   */
 object GraftSession {
+  /** Cores of a local run: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -96,4 +100,20 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.warehouse.dir", Scratch.dir("warehouse"))
       .config("spark.ui.enabled", "false")
+      // Without libhadoop, Hadoop's local file system starts a `chmod`
+      // process per file or directory it creates and a `readlink` per
+      // FileContext rename — many per streaming trigger. Both APIs are
+      // rebound to graft.io's fork-free subclass: FileSystem for
+      // data files, AbstractFileSystem for streaming checkpoints (WAL,
+      // offsets, commits, state-store deltas). Only `file:` is rebound, so
+      // on HDFS/S3 this is inert.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.LocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.LocalFs].getName)
+      // Listing more than 32 paths (a stream's anti-join over touched
+      // pk_bucket directories) runs as a Spark job with one task per path
+      // by default; each task deserializes a whole Hadoop Configuration,
+      // which costs far more than listing one directory. One task per core.
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
 }

@@ -95,11 +95,11 @@ object SigningStream {
     * of the stream, so an anti-join against the WHOLE table is
     * O(total-history) per micro-batch — quadratic over the stream's life.
     * Instead the table is written Hive-partitioned by [[BucketCol]] and each
-    * batch anti-joins only the ≤256 partitions whose prefixes actually occur
-    * in the batch (`isin` on the partition column → directory-level
-    * partition pruning at planning time). Per-batch cost is then
-    * O(batch + touched-buckets), independent of bucket count growth beyond
-    * the 1/256 slice — the Spark-native analog of DynamoDB's hash-key
+    * batch anti-joins only the bucket directories that already exist and
+    * whose prefixes occur in the batch: only those directories are listed
+    * and read, and a batch touching no stored bucket skips the anti-join.
+    * Per-batch cost is then O(batch + touched buckets), independent of the
+    * rest of the table — the Spark-native analog of DynamoDB's hash-key
     * routing on `pk` (reference signer/index.js:210–216, table keyed by PK).
     */
   def upsert(batch: DataFrame, sigDir: String)(spark: SparkSession): Unit = {
@@ -117,35 +117,38 @@ object SigningStream {
       .persist()
     try {
       migrateLegacyLayout(sigDir, fresh.schema)(spark)
+      val stored = storedBuckets(sigDir)(spark)
+      // ≤256 two-hex-char strings — bounded driver-side metadata, not a
+      // data collect
+      val touched =
+        if (stored.isEmpty) Seq.empty
+        else fresh.select(BucketCol).distinct()
+          .collect().map(_.getString(0)).toSeq.filter(stored)
       val toWrite =
-        if (tableExists(sigDir)(spark)) {
-          // ≤256 two-hex-char strings — bounded driver-side metadata, not a
-          // data collect
-          val prefixes = fresh.select(BucketCol).distinct()
-            .collect().map(_.getString(0)).toSeq
-          fresh.join(existingPks(sigDir, prefixes, fresh.schema)(spark),
-            Seq("pk"), "left_anti")
-        } else fresh
+        if (touched.isEmpty) fresh
+        else fresh.join(existingPks(sigDir, touched, fresh.schema)(spark),
+          Seq("pk"), "left_anti")
       toWrite.write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(sigDir)
     } finally { fresh.unpersist(); () }
   }
 
-  /** PKs already present in the buckets named by `prefixes` — the `isin` on
-    * the Hive partition column prunes every other bucket directory from the
-    * scan (assert via `.inputFiles` in the spec).
+  /** PKs already present in the buckets named by `prefixes`, each of which
+    * must exist as a directory. Only those directories are listed and read
+    * (`basePath` keeps [[BucketCol]] as a partition column); listing the
+    * table root and pruning afterwards would list every file of every
+    * bucket, O(table history) per batch.
     *
     * The schema is passed explicitly rather than inferred: partition-column
     * type inference would read `pk_bucket` as an INT whenever every bucket
-    * directory present happens to be digit-only hex (`pk_bucket=07`,
-    * `pk_bucket=42` — likely early in a stream's life), making the column's
-    * type flip between string and int across batches and the `isin` match
-    * only via implicit casts. With a user schema the partition column is
-    * stably a 2-char string. */
+    * directory read happens to be digit-only hex (`pk_bucket=07`,
+    * `pk_bucket=42`), making the column's type flip between string and int
+    * across batches. With a user schema the partition column is stably a
+    * 2-char string. */
   def existingPks(sigDir: String, prefixes: Seq[String],
       schema: org.apache.spark.sql.types.StructType)(
       spark: SparkSession): DataFrame =
-    spark.read.schema(schema).parquet(sigDir)
-      .filter(col(BucketCol).isin(prefixes: _*))
+    spark.read.schema(schema).option("basePath", sigDir)
+      .parquet(prefixes.map(p => s"$sigDir/$BucketCol=$p"): _*)
       .select("pk")
 
   /** One-time migration of a signatures table written before the
@@ -218,16 +221,18 @@ object SigningStream {
     fs.delete(out, true)
   }
 
-  /** Existence probe through the Hadoop FileSystem API — works on HDFS/S3A,
-    * not just the local FS, and treats a present-but-empty directory (e.g.
-    * created by a previous failed attempt before any parquet landed) as
-    * absent so the first read can't die on schema inference. */
-  private def tableExists(dir: String)(spark: SparkSession): Boolean = {
+  /** The [[BucketCol]] values with a directory in the table, from one
+    * listing of the table root through the Hadoop FileSystem API (works on
+    * HDFS/S3A, not just the local FS). A missing or empty table (e.g. left
+    * by a previous failed attempt before any parquet landed) has none. */
+  private def storedBuckets(dir: String)(spark: SparkSession): Set[String] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) && fs.listStatus(path).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    val prefix = s"$BucketCol="
+    if (!fs.exists(path)) Set.empty
+    else fs.listStatus(path).iterator.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(prefix) =>
+        st.getPath.getName.stripPrefix(prefix)
+    }.toSet
   }
 }

@@ -107,6 +107,54 @@ class SigningStreamSpec extends SparkSpec {
     assert(sur.forall(_.getAs[String]("signature").matches("[0-9a-f]{64}")))
   }
 
+  test("upsert lists only touched buckets, in jobs no wider than the cores") {
+    val s = spark
+    import s.implicits._
+    val sigDir = Files.createTempDirectory("graft-wide-").toString + "/sigs"
+    // 64 rows in 64 buckets: past Spark's 32-path parallel-listing threshold
+    val batch = (0 until 64).map(i =>
+      (f"$i%02x" + "a" * 62, i.toLong, s"0xaddr$i", "s" * 64, s"raw/p0/$i.json"))
+      .toDF("pk", "key_id", "address", "signature", "s3_path")
+    SigningStream.upsert(batch, sigDir)(s)
+    val bucketDirs = new java.io.File(sigDir).listFiles()
+      .count(_.getName.startsWith(SigningStream.BucketCol + "="))
+    assert(bucketDirs === 64)
+
+    // (description, widest stage) of every job one upsert starts
+    def jobsOf(upsert: => Unit): Seq[(String, Int)] = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add((Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""), e.stageInfos.map(_.numTasks).max))
+      }
+      s.sparkContext.addSparkListener(listener)
+      try {
+        upsert
+        org.apache.spark.ListenerBusAccess.flush(s.sparkContext)
+      } finally s.sparkContext.removeSparkListener(listener)
+      jobs.toArray.toSeq.map(_.asInstanceOf[(String, Int)])
+    }
+    def isListing(job: (String, Int)) = job._1.startsWith("Listing leaf files")
+
+    // replaying all 64 buckets: the listing job is one task per core
+    val cores = s.sparkContext.defaultParallelism
+    val replay = jobsOf(SigningStream.upsert(batch, sigDir)(s))
+    assert(replay.exists(isListing))
+    assert(replay.forall(_._2 <= cores), s"job wider than $cores cores: $replay")
+    assert(s.read.parquet(sigDir).count() === 64) // the replay added no row
+
+    // one row into one stored bucket: that directory alone is listed, on
+    // the driver, not all 64 through a listing job
+    val one = Seq(("00" + "b" * 62, 64L, "0xaddr64", "s" * 64, "raw/p0/64.json"))
+      .toDF("pk", "key_id", "address", "signature", "s3_path")
+    val single = jobsOf(SigningStream.upsert(one, sigDir)(s))
+    assert(!single.exists(isListing), s"whole table listed: $single")
+    assert(s.read.parquet(sigDir).count() === 65)
+  }
+
   test("legacy flat signatures table is migrated to the bucketed layout") {
     val s = spark
     import s.implicits._
