@@ -27,7 +27,7 @@ object Probe {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val parts = sys.env.getOrElse("SPARK_GRAFT_PROBE_PART", "8")
     val spark = GraftSession.configure(
-      SparkSession.builder().master("local[32]"), parts)
+      SparkSession.builder().master(s"local[${GraftSession.cpus}]"), parts)
       .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -62,7 +62,7 @@ object Curation {
     * applies verbatim: q68's own registered query still rebuilds per call
     * (its cost stays measured in the bench); composed consumers read the
     * checkpoint, built once per (session, dir). */
-  private val evalHitsCache = new SessionCache
+  private val evalHitsCache = SessionCache.frames()
   private[graft] def cachedEvalHits(s: SparkSession, dir: String): DataFrame =
     evalHitsCache.getOrBuild(s, dir)(
       q68Decontaminate(s, dir).localCheckpoint(true))

@@ -83,25 +83,24 @@ object Maintenance {
     * specs in one session) all see the same pristine input and the timed
     * body never re-pays fixture construction (the dedup_prep discipline —
     * VERDICT r8 #2). */
-  private val lakeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val lakeCache = SessionCache.values[String]()
 
   private def forgetRoot(dir: String): String = graft.Scratch.forSf("forget", dir)
 
   private[graft] def ensureForgetLake(s: SparkSession, dir: String): String =
-    lakeCache.getOrElseUpdate((s, dir), {
+    lakeCache.getOrBuild(s, dir) {
       val lake = s"${forgetRoot(dir)}/events_lake"
       Tables(s, dir, "events")
         .withColumn("day_bucket", expr("unix_millis(ts) div 86400000"))
         .write.mode("overwrite").partitionBy("day_bucket").parquet(lake)
       lake
-    })
+    }
 
   /** Bench prep hook: force the next [[ensureForgetLake]] to rebuild, so
     * the prep entry times the lake build COLD (and a post-swap lake is
     * never mistaken for the pristine one). */
   private[graft] def evictForgetLake(s: SparkSession, dir: String): Unit =
-    lakeCache.remove((s, dir))
+    lakeCache.evict(s, dir)
 
   private def partitionDirs(path: String): Set[Long] = {
     val fs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
@@ -247,21 +246,20 @@ object Maintenance {
     * exactly the debris Firehose-style buffered ingest leaves behind when
     * the buffer interval, not size, flushes. Built once per (session, sf
     * dir), immutable — the q100 lake discipline. */
-  private val fragCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val fragCache = SessionCache.values[String]()
 
   private[graft] def ensureFragmentedLake(s: SparkSession, dir: String): String =
-    fragCache.getOrElseUpdate((s, dir), {
+    fragCache.getOrBuild(s, dir) {
       val lake = s"${graft.Scratch.forSf("compact", dir)}/fragmented"
       Tables(s, dir, "events")
         .withColumn("day_bucket", expr("unix_millis(ts) div 86400000"))
         .repartition(16)
         .write.mode("overwrite").partitionBy("day_bucket").parquet(lake)
       lake
-    })
+    }
 
   private[graft] def evictFragmentedLake(s: SparkSession, dir: String): Unit =
-    fragCache.remove((s, dir))
+    fragCache.evict(s, dir)
 
   /** The compaction kernel: bin-pack every bucket's rows into
     * ceil(rows / rowsPerFile) files. One shuffle clusters each bucket

@@ -126,78 +126,6 @@ object Planner {
     cacheJoin.clear()
   }
 
-  /** Run independent per-batch maintainer bodies concurrently against a
-    * persisted (and pre-materialized) micro-batch. Each leg is its own
-    * tiny Spark job writing its own artifact partition — they share no
-    * output path, and a cached batch serves all of them, so the wall
-    * cost of a batch is max(leg) instead of sum(legs). VERDICT r16 #6:
-    * the sequential fan was the dominant planner_prep cost (tiny-job
-    * scheduling floors × 16 jobs). */
-  /** Fan concurrency: 32 simultaneous tiny Spark jobs inflate EVERY
-    * leg's wall ~10× (scheduler + commit contention — profiled r19:
-    * even a precomputed 1-row count write reads 1.4s inside a 32-wide
-    * fan vs ~0.1s isolated), so the fan runs bounded waves instead.
-    * 8 → 16 in r21: under the direct carve replay each leg is a 1–2
-    * task job over the cached staged union, so 16 in flight keeps the
-    * 32 local cores busy without the r19 contention regime (measured:
-    * replay 4.4 → 3.5 s cold, planner_prep 8.6 → 7.7 s cold).
-    * Overridable for profiling via SPARK_GRAFT_FAN_PAR. */
-  private def fanPar: Int = math.max(1, scala.util.Try(
-    sys.env.getOrElse("SPARK_GRAFT_FAN_PAR", "16").toInt).getOrElse(16))
-
-  private[graft] def fanOut(legs: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    // A DEDICATED bounded pool, not the global pool (r19 — see
-    // [[fanPar]]): each leg blocks inside a Spark action, and an
-    // unbounded fan makes every concurrent job ~10× slower than the
-    // same job in a small wave, so max(leg) stops being the wall.
-    // Every leg is awaited TO COMPLETION before any failure is rethrown
-    // (ADVICE r17): Future.sequence rethrows on the first failed leg
-    // while siblings keep running, and the streaming engine's retry of
-    // the same foreachBatch could then overwrite the same batch=<id>
-    // artifact partitions concurrently with the orphans — a torn write.
-    val dbg = sys.env.contains("SPARK_GRAFT_FAN_DEBUG")
-    // DAEMON threads (ADVICE r19): a leg that somehow survives the
-    // timeout teardown below must never pin JVM exit.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fanPar,
-      new java.util.concurrent.ThreadFactory {
-        override def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, "graft-fan")
-          t.setDaemon(true)
-          t
-        }
-      })
-    val ec = ExecutionContext.fromExecutorService(pool)
-    try {
-      implicit val fanEc: ExecutionContext = ec
-      val done = Await.result(
-        Future.sequence(legs.zipWithIndex.map { case (f, i) =>
-          Future {
-            val t0 = System.nanoTime()
-            val r = scala.util.Try(f())
-            if (dbg) System.err.println(
-              f"[fan] leg $i%2d ${(System.nanoTime() - t0) / 1e9}%.2fs")
-            r
-          }
-        }), 10.minutes)
-      done.collectFirst { case scala.util.Failure(e) => throw e }
-      ()
-    } catch { case e: java.util.concurrent.TimeoutException =>
-      // ADVICE r19: on the Await timeout the still-running legs must
-      // not outlive this call — the streaming engine's retry of the
-      // batch would otherwise overwrite batch=<id> partitions
-      // CONCURRENTLY with the orphans (the torn write the happy path's
-      // await-to-completion discipline exists to prevent). shutdownNow
-      // interrupts the leg threads (Spark actions abort on interrupt)
-      // and the bounded awaitTermination drains them before the
-      // failure propagates to the retry.
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      throw e
-    } finally { ec.shutdown(); () }
-  }
-
   /** The maintained-statistics suite root (q205/q206): built by the
     * SINGLE combined pass ([[buildAll]] — VERDICT r17 #5 folded the
     * planner suite, the TPC-H join catalog, and the registered pipeline
@@ -330,7 +258,7 @@ object Planner {
           a.zip(b).flatMap { case (x, y) => Seq(x, y) } ++
             a.drop(b.size) ++ b.drop(a.size)
         } else legs
-      fanOut(interleaved)
+      Fan.out(interleaved)
       val tStream = System.nanoTime()
       writeDescriptors(s, TpchChainSpec, artJoin, histJoin)
       writeDescriptors(s, PipelineCatalogSpec, artPipe, histPipe)
@@ -411,7 +339,7 @@ object Planner {
     import s.implicits._
     // three independent metadata writes — fanned like the batch legs
     // (each is a tiny job whose wall cost is scheduling floor)
-    fanOut(Seq(
+    Fan.out(Seq(
       () => spec.sketches.map(c => (c.column, c.table, c.tag, c.id))
         .toDF("col", "tbl", "tag", "id")
         .coalesce(1).write.mode("overwrite").parquet(s"$art/columns"),
@@ -1169,7 +1097,7 @@ object Planner {
         batch.persist()
         val counts = batch.groupBy($"tbl").agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        fanOut(specLegs(spec, art, histBounds, batch, batchId, counts))
+        Fan.out(specLegs(spec, art, histBounds, batch, batchId, counts))
         batch.unpersist()
         ()
       }

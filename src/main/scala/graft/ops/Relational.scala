@@ -542,11 +542,10 @@ object Relational {
     * once per query run. The build is the one-time pre-partitioning cost the
     * operator exists to amortize; leaving it inside the timed query made the
     * bench entry measure parquet writes instead of the zero-exchange join. */
-  private val bucketedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val bucketedCache = SessionCache.values[(String, String)]()
 
   private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketedCache.getOrElseUpdate((s, dir), {
+    bucketedCache.getOrBuild(s, dir) {
       // The tag carries a digest of the FULL canonical path, not just the
       // basename: two dirs named sf0.1 must not share physical tables, or
       // the second build would overwrite the first and its cache entry
@@ -575,7 +574,7 @@ object Relational {
       Tables(s, dir, "lineitem").write.mode("overwrite")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(liT)
       (ordT, liT)
-    })
+    }
 
   def q38BucketedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -442,7 +442,7 @@ object Retrieval {
     val plans: Seq[DataFrame] = Seq(vecTopK(s, dir, K), lexTopK(s, dir),
       ivfVec(s, dir), lshVec(s, dir), sqVec(s, dir))
     val ckpt = new Array[DataFrame](plans.size)
-    graft.ops.Planner.fanOut(plans.zipWithIndex.map { case (df, i) =>
+    Fan.out(plans.zipWithIndex.map { case (df, i) =>
       () => ckpt(i) = df.localCheckpoint(true)
     })
     val (brute, lex) = (ckpt(0), ckpt(1))
@@ -555,7 +555,7 @@ object Retrieval {
         when($"doc_id" % 13 === 0, concat($"text", lit(" rev2")))
           .otherwise($"text")))
     val legs = new Array[DataFrame](4)
-    graft.ops.Planner.fanOut(carves.zipWithIndex.flatMap {
+    Fan.out(carves.zipWithIndex.flatMap {
       case ((carve, text), i) =>
         val corpus = docs.filter(carve($"doc_id"))
           .select($"doc_id", text.as("text"))

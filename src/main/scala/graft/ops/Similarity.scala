@@ -202,57 +202,31 @@ object Similarity {
     * consuming query (r11: previously q59/q77/q92/q102/q104/q114/q124/
     * q128 each re-trained it inline). Plain driver arrays — no RDD
     * blocks, so no liveness probe; evicted with [[evictCentroids]]
-    * (bench cold-prep) and on application end via the map key's session
-    * identity going stale. */
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Array[Long], Array[Array[Double]])]
-
-  /** App-end eviction for the three artifact maps (the SessionCache
-    * listener discipline): entries are plain driver arrays — no RDD
-    * blocks to leak — but a stopped session's keys must not accumulate
-    * for the process lifetime in a shared-JVM test/notebook run. */
-  private val annHooked =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
-  private def hookAnnEviction(s: SparkSession): Unit =
-    annHooked.getOrElseUpdate(s, {
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = { evictCentroids(s); annHooked.remove(s); () }
-        })
-    })
+    * (bench cold-prep). */
+  private val centroidCache =
+    SessionCache.values[(Array[Long], Array[Array[Double]])]()
 
   private[graft] def cachedCentroidMeta(s: SparkSession,
-      dir: String): (Array[Long], Array[Array[Double]]) = {
-    hookAnnEviction(s)
-    centroidCache.getOrElseUpdate(
-      (s, new java.io.File(dir).getCanonicalPath), ivfCentroidMeta(s, dir))
-  }
+      dir: String): (Array[Long], Array[Array[Double]]) =
+    centroidCache.getOrBuild(s, dir)(ivfCentroidMeta(s, dir))
 
   /** The SQ8 index's trained artifact — per-dim corpus (min, range) — and
     * the PQ index's — 8 subspace codebooks — cached with the same
     * standing-artifact argument as the IVF centroids: all three are what
     * FAISS serializes WITH the index, trained once per corpus snapshot,
     * not once per query. */
-  private val sqBoundsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Array[Double], Array[Double])]
-  private val pqCodebookCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Array[Double]]]]
+  private val sqBoundsCache =
+    SessionCache.values[(Array[Double], Array[Double])]()
+  private val pqCodebookCache =
+    SessionCache.values[Array[Array[Array[Double]]]]()
 
   private[graft] def cachedSqBounds(s: SparkSession,
-      dir: String): (Array[Double], Array[Double]) = {
-    hookAnnEviction(s)
-    sqBoundsCache.getOrElseUpdate(
-      (s, new java.io.File(dir).getCanonicalPath), trainSqBounds(s, dir))
-  }
+      dir: String): (Array[Double], Array[Double]) =
+    sqBoundsCache.getOrBuild(s, dir)(trainSqBounds(s, dir))
 
   private[graft] def cachedPqCodebooks(s: SparkSession,
-      dir: String): Array[Array[Array[Double]]] = {
-    hookAnnEviction(s)
-    pqCodebookCache.getOrElseUpdate(
-      (s, new java.io.File(dir).getCanonicalPath), trainPqCodebooks(s, dir))
-  }
+      dir: String): Array[Array[Array[Double]]] =
+    pqCodebookCache.getOrBuild(s, dir)(trainPqCodebooks(s, dir))
 
   /** Train + stage all three ANN artifacts (the bench `ann_prep` body). */
   private[graft] def stageAnnArtifacts(s: SparkSession, dir: String): Unit = {
@@ -262,16 +236,9 @@ object Similarity {
     ()
   }
 
-  /** The annHooked marker survives an explicit evict (the SessionCache
-    * listener-leak rule, review r11); only the app-end callback clears
-    * it. */
-  private[graft] def evictCentroids(s: SparkSession): Unit = {
-    centroidCache.keys.filter(_._1 eq s).foreach(centroidCache.remove)
-    sqBoundsCache.keys.filter(_._1 eq s).foreach(sqBoundsCache.remove)
-    pqCodebookCache.keys.filter(_._1 eq s).foreach(pqCodebookCache.remove)
-    assignedCache.evict(s)
-    ()
-  }
+  private[graft] def evictCentroids(s: SparkSession): Unit =
+    Seq(centroidCache, sqBoundsCache, pqCodebookCache, assignedCache)
+      .foreach(_.evict(s))
 
   /** Every vector with its nearest-cell assignment — a single codegen'd
     * map-side projection over the scan ([[graft.functions.NearestCells]]),
@@ -340,7 +307,7 @@ object Similarity {
     * online probe joins against per micro-batch, so serving never re-runs
     * the assignment projection per batch. The localCheckpoint pins it for
     * the session, the SessionCache liveness/eviction contract applies. */
-  private val assignedCache = new SessionCache
+  private val assignedCache = SessionCache.frames()
   private[graft] def stagedAssigned(s: SparkSession, dir: String): DataFrame =
     assignedCache.getOrBuild(s, dir)(ivfAssigned(s, dir).localCheckpoint(true))
 
@@ -709,7 +676,7 @@ object Similarity {
           q120AnnSq(s, dir))
           .map(_.select($"q_id", $"vec_id", lit(1).as("hit")))
     val ckpt = new Array[DataFrame](plans.size)
-    Planner.fanOut(plans.zipWithIndex.map { case (df, i) =>
+    Fan.out(plans.zipWithIndex.map { case (df, i) =>
       () => ckpt(i) = df.localCheckpoint(true)
     })
     val (truth, fams) = (ckpt.head, ckpt.tail)
@@ -801,7 +768,7 @@ object Similarity {
     // truth scan + nlist-row occupancy: two independent eager checkpoints,
     // materialized concurrently (guide §2.6, the q92 fan)
     val pair = new Array[DataFrame](2)
-    Planner.fanOut(Seq(
+    Fan.out(Seq(
       () => pair(0) = q55AnnBrute(s, dir).filter($"rank" <= 3)
         .select($"q_id", $"vec_id").localCheckpoint(true),
       () => pair(1) = ivfAssigned(s, dir).groupBy($"cell")

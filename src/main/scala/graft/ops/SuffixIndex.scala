@@ -330,7 +330,7 @@ object SuffixIndex {
     * ([[prepGlobalRanks]]), so the cost is measured, never hidden.
     * Liveness probing and eviction (only missing-checkpoint-block
     * failures self-heal — ADVICE r9) live in [[SessionCache]]. */
-  private val rankCache = new SessionCache
+  private val rankCache = SessionCache.frames()
 
   private def sharedGlobalRanks(s: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(s, dir)(

@@ -751,32 +751,10 @@ object TextAnalysis {
     * composed-query caches so q153's timed iterations are uniformly warm
     * (the suffix_prep / warmEvalHits discipline). Bounded metadata: the
     * list is [[BpeRounds]] 4-tuples. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, String, Long)]]
-  private val mergeHooked =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
-  private def hookMergeEviction(s: SparkSession): Unit =
-    mergeHooked.getOrElseUpdate(s, {
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = { evictMerges(s); mergeHooked.remove(s); () }
-        })
-    })
-  /** The hooked marker survives an explicit evict — the SessionCache
-    * listener-leak rule (review r11): listeners cannot be unregistered,
-    * so only the app-end callback clears it. */
-  private[graft] def evictMerges(s: SparkSession): Unit = {
-    mergeCache.keys.filter(_._1 eq s).foreach(mergeCache.remove)
-    ()
-  }
+  private val mergeCache = SessionCache.values[Seq[(Long, String, String, Long)]]()
   private[graft] def cachedMerges(s: SparkSession, dir: String)
-      : Seq[(Long, String, String, Long)] = {
-    hookMergeEviction(s)
-    mergeCache.getOrElseUpdate((s, new java.io.File(dir).getCanonicalPath),
-      bpeTrain(trainerWordFreq(s, dir), BpeRounds))
-  }
+      : Seq[(Long, String, String, Long)] =
+    mergeCache.getOrBuild(s, dir)(bpeTrain(trainerWordFreq(s, dir), BpeRounds))
   /** Bench hook: build the merge artifact untimed (no-op when cached). */
   private[graft] def warmMerges(s: SparkSession, dir: String): Unit = {
     cachedMerges(s, dir); ()

@@ -81,7 +81,7 @@ object DecontamStream {
         // identical split (pure function of batch × fixed eval set); the
         // two disjoint-sink writes overlap through the bounded fan (both
         // hang off the checkpointed hit set — guide §2.6, r21)
-        graft.ops.Planner.fanOut(Seq(
+        graft.ops.Fan.out(Seq(
           () => contam.write.mode(SaveMode.Overwrite)
             .parquet(s"$root/contam/batch=$batchId"),
           () => clean.write.mode(SaveMode.Overwrite)

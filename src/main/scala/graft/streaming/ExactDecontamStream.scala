@@ -59,7 +59,7 @@ object ExactDecontamStream {
     * ⇒ a modest constant; the carry table is this many rows. */
   private val RangeParts = 32
 
-  private val evalKeysCache = new SessionCache
+  private val evalKeysCache = SessionCache.frames()
 
   /** The staged artifact: every eval-doc suffix as (tie, ekey) — tie is
     * the q133/q134 witness encoding doc_id·2²⁰+pos (guarded there), ekey
@@ -181,7 +181,7 @@ object ExactDecontamStream {
           Seq("doc_id"), "left_semi")
         // disjoint-sink writes off the checkpointed verdict — overlap
         // through the bounded fan (guide §2.6, r21)
-        graft.ops.Planner.fanOut(Seq(
+        graft.ops.Fan.out(Seq(
           () => contam.write.mode(SaveMode.Overwrite)
             .parquet(s"$root/contam/batch=$batchId"),
           () => clean.write.mode(SaveMode.Overwrite)

@@ -40,7 +40,7 @@ class SessionCacheSpec extends SparkSpec {
   test("evicted checkpoint blocks rebuild; a genuine read fault propagates") {
     val s = spark
     import s.implicits._
-    val cache = new SessionCache
+    val cache = SessionCache.frames()
     val dir = Files.createTempDirectory("graft-sc-").toString
 
     // (a) self-heal: cache a localCheckpoint'd plan, then evict its RDD
@@ -65,7 +65,7 @@ class SessionCacheSpec extends SparkSpec {
     // (b) propagate: cache an UNCHECKPOINTED scan, delete its files —
     // the probe's FileNotFound is a real fault and must escape, and the
     // broken entry must not be silently replaced
-    val cache2 = new SessionCache
+    val cache2 = SessionCache.frames()
     val data = Files.createTempDirectory("graft-sc-data-").toString
     Seq((1L, "x")).toDF("id", "v").write.mode("overwrite").parquet(data)
     var builds2 = 0
@@ -79,5 +79,77 @@ class SessionCacheSpec extends SparkSpec {
       // contract under test is that NO rebuild happened
       builds2 === 1)
     assert(builds2 === 1, "a real read fault must propagate, not rebuild")
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusAccess.flush(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusAccess.flush(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("driver-value cache: built once, a hit starts no job, evict rebuilds") {
+    val s = spark
+    val cache = SessionCache.values[Array[Long]]()
+    val dir = Files.createTempDirectory("graft-sc-v-").toString
+    var builds = 0
+    def build() = { builds += 1; s.range(3).collect().map(_.longValue) }
+    assert(cache.getOrBuild(s, dir)(build()).toSeq === Seq(0L, 1L, 2L))
+    assert(builds === 1)
+    val jobs = jobsDuring {
+      assert(cache.getOrBuild(s, dir)(build()).toSeq === Seq(0L, 1L, 2L))
+    }
+    assert(builds === 1, "a hit must not rebuild")
+    assert(jobs === 0, "a driver-value hit must not probe")
+    cache.evict(s)
+    cache.getOrBuild(s, dir)(build())
+    assert(builds === 2, "evict must force a rebuild")
+  }
+
+  test("entries are per session: newSession never shares, evict is per session") {
+    val s = spark
+    val other = s.newSession()
+    val cache = SessionCache.values[String]()
+    val dir = Files.createTempDirectory("graft-sc-s-").toString
+    assert(cache.getOrBuild(s, dir)("mine") === "mine")
+    assert(cache.getOrBuild(other, dir)("theirs") === "theirs")
+    assert(cache.getOrBuild(s, dir)("rebuilt") === "mine")
+    cache.evict(other)
+    assert(cache.getOrBuild(s, dir)("rebuilt") === "mine",
+      "evicting one session must leave the other's entries")
+    assert(cache.getOrBuild(other, dir)("again") === "again")
+  }
+
+  test("dir, dir/ and a relative path to the same dir share one entry") {
+    val s = spark
+    val cache = SessionCache.values[String]()
+    val dir = Files.createTempDirectory("graft-sc-c-")
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(dir).toString
+    assert(!new java.io.File(rel).isAbsolute)
+    assert(cache.getOrBuild(s, dir.toString)("first") === "first")
+    for (alias <- Seq(dir.toString + "/", rel, s"$dir/./"))
+      assert(cache.getOrBuild(s, alias)("second") === "first", alias)
+  }
+
+  test("a per-dir evict drops only that dir's entry") {
+    val s = spark
+    val cache = SessionCache.values[String]()
+    val a = Files.createTempDirectory("graft-sc-a-").toString
+    val b = Files.createTempDirectory("graft-sc-b-").toString
+    cache.getOrBuild(s, a)("a1")
+    cache.getOrBuild(s, b)("b1")
+    cache.evict(s, a + "/")
+    assert(cache.getOrBuild(s, a)("a2") === "a2")
+    assert(cache.getOrBuild(s, b)("b2") === "b1")
   }
 }
