@@ -71,8 +71,9 @@ object Bench {
       }
     }.getOrElse(original)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The session of both bench mains, Bench and StreamBench: local[cpus]
+    * with the bench's shuffle width and AQE setting. */
+  def session(): SparkSession = {
     val cpus = GraftSession.cpus
     // Bench-scale tuning (results are config-independent — aggregation is
     // order-insensitive by design). The VERDICT r20 #2 prescription
@@ -109,6 +110,12 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Untimed warmup: JVM/classloading/codegen startup must not be booked
     // against whichever query happens to run first. Guarded: a warmup
     // failure must never break the one-JSON-line contract.
