@@ -3,73 +3,111 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
 
-  /** How to re-run a prep entry cleanly (VERDICT r15 #2): `evict` drops
-    * the session-cached artifact (untimed), `build` is exactly the
-    * original prep's TIMED body, `rewarm` restores the untimed warm
-    * state the main loop's queries ran under (so later requeued queries
-    * in the same pass see the same caches). Preps are clean rebuilds —
-    * unlike gates/dirty queries, a fresh rebuild measures the same cold
-    * work as the original stamp, so min(original, rebuild) cannot
-    * understate them. */
-  final case class PrepRerun(evict: () => Unit, build: () => Unit,
-      rewarm: () => Unit)
+  type Step = (SparkSession, String) => Unit
+
+  /** One prep entry: a session-staged artifact whose COLD build goes on
+    * the books as its own stamp, so the queries that consume it are
+    * timed warm, the way production consumes a staged index. `evict`
+    * drops the artifact (untimed), `build` is the timed body, `rewarm`
+    * restores the warm state the queries run under (untimed). When
+    * SPARK_GRAFT_BENCH_ONLY selects one of the `dependents` without the
+    * prep, `stage` (default: the build itself) runs untimed, so the
+    * query's first timed iteration does not mix cold and warm regimes. */
+  final case class Prep(name: String, evict: Step, build: Step,
+      rewarm: Step = (_, _) => (), dependents: Set[String] = Set.empty,
+      stage: Option[Step] = None)
+
+  /** The preps in run (and stamp) order. */
+  val Preps: Seq[Prep] = Seq(
+    // Dedup's shingle checkpoint, built once; the rewarm fills the
+    // composed-query caches so every query's timed iterations are
+    // uniformly warm (the pair-graph and CC build costs stay measured:
+    // they are q51's and q60's own timed bodies, rebuilt per iteration).
+    // It also warms q68's hit-table checkpoint for q81/q115 (q68's own
+    // build stays its timed body) and q153's BPE merge artifact
+    // (training cost stays q137's timed body) — the one artifact staged
+    // when q153 is selected alone.
+    Prep("dedup_prep",
+      (s, _) => { graft.ops.Dedup.evictSession(s)
+        graft.ops.Curation.evictSession(s) },
+      graft.ops.Dedup.prepShingles,
+      (s, d) => { graft.ops.Dedup.warmComposedCaches(s, d)
+        graft.ops.Curation.warmEvalHits(s, d)
+        graft.ops.TextAnalysis.warmMerges(s, d) },
+      dependents = Set("q153_bpe_encode"),
+      stage = Some(graft.ops.TextAnalysis.warmMerges)),
+    // q100's standing lake is fixture, not operator: q100's timed
+    // iterations measure only find-affected + staged rewrite + audit.
+    Prep("forget_prep", graft.ops.Maintenance.evictForgetLake,
+      (s, d) => { graft.ops.Maintenance.ensureForgetLake(s, d); () }),
+    // q103's fragmented-lake fixture, same discipline.
+    Prep("compact_prep", graft.ops.Maintenance.evictFragmentedLake,
+      (s, d) => { graft.ops.Maintenance.ensureFragmentedLake(s, d); () }),
+    // The global suffix index, q132–q135's shared prep.
+    Prep("suffix_prep", (s, _) => graft.ops.SuffixIndex.evictSession(s),
+      graft.ops.SuffixIndex.prepGlobalRanks,
+      dependents = Set("q132_global_suffix_rank", "q133_corpus_repeats",
+        "q134_eval_lcs", "q135_eval_exposure")),
+    // The ANN shelf's trained artifacts — IVF coarse centroids, SQ8
+    // per-dim bounds, PQ subspace codebooks — are STANDING assets (what
+    // FAISS serializes WITH an index; what S10's retrain job maintains
+    // behind a generation pointer).
+    Prep("ann_prep", (s, _) => graft.ops.Similarity.evictCentroids(s),
+      graft.ops.Similarity.stageAnnArtifacts,
+      dependents = Set("q59_ann_ivf", "q73_ann_pq", "q77_semdedup",
+        "q92_ann_recall_families", "q102_hybrid_indexed",
+        "q104_hard_negatives", "q114_retrieval_quality", "q120_ann_sq",
+        "q124_hybrid_sq", "q128_ivf_balance", "q149_embedding_drift",
+        "q151_ivf_sweep")),
+    // The maintained-statistics artifact suite — ONE combined streaming
+    // pass (VERDICT r17 #5) building the q205/q206 planner suite, the
+    // q207 TPC-H join catalog, AND the registered pipeline catalog from
+    // a single staged union; the audits then consult it warm, the way a
+    // planner consults a catalog.
+    Prep("planner_prep", (s, _) => graft.ops.Planner.evictSession(s),
+      (s, d) => { graft.ops.Planner.ensureArtifacts(s, d); () },
+      dependents = Set("q205_planner_audit", "q206_compaction_plan",
+        "q207_join_order_plan", "q208_selective_join_order",
+        "q209_equality_join_order", "q210_rescaled_join_order",
+        "q211_skew_salt_decision", "q212_bushy_join_plan",
+        "q213_nine_join_order", "q214_between_join_order",
+        "q215_inlist_join_order", "q216_or_join_order")))
 
   /** The prep entries Bench stamps (also the extra names BENCH_ONLY may
-    * select and the prev-stamp parser must keep — prep names are not in
-    * SparkEntry.queries, and parsing them out of the baseline is what
-    * lets an inflated prep trip the requeue at all). */
-  val PrepNames: Set[String] = Set("dedup_prep", "forget_prep",
-    "compact_prep", "suffix_prep", "ann_prep", "planner_prep")
+    * select — prep names are not in SparkEntry.queries). */
+  val PrepNames: Seq[String] = Preps.map(_.name)
 
-  def prepReruns(spark: SparkSession, sfDir: String): Map[String, PrepRerun] =
-    Map(
-      "dedup_prep" -> PrepRerun(
-        () => { graft.ops.Dedup.evictSession(spark)
-          graft.ops.Curation.evictSession(spark) },
-        () => graft.ops.Dedup.prepShingles(spark, sfDir),
-        () => { graft.ops.Dedup.warmComposedCaches(spark, sfDir)
-          graft.ops.Curation.warmEvalHits(spark, sfDir)
-          graft.ops.TextAnalysis.warmMerges(spark, sfDir) }),
-      "forget_prep" -> PrepRerun(
-        () => graft.ops.Maintenance.evictForgetLake(spark, sfDir),
-        () => { graft.ops.Maintenance.ensureForgetLake(spark, sfDir); () },
-        () => ()),
-      "compact_prep" -> PrepRerun(
-        () => graft.ops.Maintenance.evictFragmentedLake(spark, sfDir),
-        () => { graft.ops.Maintenance.ensureFragmentedLake(spark, sfDir); () },
-        () => ()),
-      "suffix_prep" -> PrepRerun(
-        () => graft.ops.SuffixIndex.evictSession(spark),
-        () => graft.ops.SuffixIndex.prepGlobalRanks(spark, sfDir),
-        () => ()),
-      "ann_prep" -> PrepRerun(
-        () => graft.ops.Similarity.evictCentroids(spark),
-        () => graft.ops.Similarity.stageAnnArtifacts(spark, sfDir),
-        () => ()),
-      "planner_prep" -> PrepRerun(
-        () => graft.ops.Planner.evictSession(spark),
-        () => { graft.ops.Planner.ensureArtifacts(spark, sfDir); () },
-        () => ()))
-
-  /** One prep re-stamp: evict (untimed) → rebuild (timed, ONE run — a
-    * prep is seconds-scale, and load noise is one-sided so a single
-    * clean rebuild suffices) → rewarm (untimed) → min(original,
-    * rebuild). Guarded: a rerun failure keeps the original stamp. */
-  def rerunPrep(spark: SparkSession, sfDir: String, name: String,
-      original: Double): Double =
-    prepReruns(spark, sfDir).get(name).map { pr =>
-      try {
-        pr.evict()
+  /** Runs the prep table in order. A selected prep is evicted, built
+    * under the clock and rewarmed, and stamps its build seconds (-1 on
+    * failure); an unselected prep whose dependents are selected is
+    * staged untimed and stamps nothing. `only` is the BENCH_ONLY set
+    * (None = every entry). */
+  def runPreps(preps: Seq[Prep], only: Option[Set[String]],
+      spark: SparkSession, sfDir: String): Seq[(String, Double)] =
+    preps.flatMap { p =>
+      if (only.forall(_.contains(p.name))) Some(p.name -> (try {
+        p.evict(spark, sfDir)
         val t0 = System.nanoTime()
-        pr.build()
-        val re = (System.nanoTime() - t0) / 1e9
-        pr.rewarm()
-        math.min(original, re)
+        p.build(spark, sfDir)
+        val dt = (System.nanoTime() - t0) / 1e9
+        p.rewarm(spark, sfDir)
+        dt
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] prep rerun $name failed: ${e.getMessage}")
-        original
+        System.err.println(s"[bench] ${p.name} failed: ${e.getMessage}")
+        -1.0
+      }))
+      else {
+        val selected = only.toSeq.flatMap(_ & p.dependents).sorted
+        if (selected.nonEmpty) try {
+          System.err.println(s"[bench] ${selected.mkString(",")} selected " +
+            s"without ${p.name}: staging it untimed")
+          p.stage.getOrElse(p.build)(spark, sfDir)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] untimed ${p.name} failed: ${e.getMessage}")
+        }
+        None
       }
-    }.getOrElse(original)
+    }
 
   /** The session of both bench mains, Bench and StreamBench: local[cpus]
     * with the bench's shuffle width and AQE setting. */
@@ -163,8 +201,8 @@ object Bench {
       val ti = LoadCanary.ioProbe(spark)
       ioCanaryTimes += ti
       System.err.println(f"[bench] load canary ($tag): cpu $t%.3fs " +
-        f"(expected ${LoadCanary.expectedSec}%.3fs), io $ti%.3fs " +
-        f"(expected ${LoadCanary.ioExpectedSec}%.3fs quiesced)")
+        f"(expected ${LoadCanary.ExpectedSec}%.3fs), io $ti%.3fs " +
+        f"(expected ${LoadCanary.IoExpectedSec}%.3fs quiesced)")
     }
     canary("start")
     // Clamped ≥ 1 and guarded against non-numeric values: a bad env var
@@ -188,171 +226,7 @@ object Bench {
       if (unknown.nonEmpty) System.err.println(
         s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY names match no query: ${unknown.mkString(",")}")
     }
-    // Dedup shared-prep cost, on the books: time the shingle-checkpoint
-    // build exactly once, COLD (evict first), as its own entry — then warm
-    // the composed-query caches so every query's timed iterations are
-    // uniformly warm (the pair-graph and CC build costs stay measured:
-    // they are q51's and q60's own timed bodies, rebuilt per iteration).
-    val prepEntry: Seq[(String, Double)] =
-      if (!only.forall(_.contains("dedup_prep"))) {
-        // q153 consumes the staged BPE merge artifact (warmed below on the
-        // full-run path); selecting it without dedup_prep must not mix a
-        // cold trainer run into its first timed iteration (the suffix_prep
-        // discipline — training cost is q137's timed body either way)
-        if (only.exists(_.contains("q153_bpe_encode"))) try {
-          System.err.println(
-            "[bench] q153 selected without dedup_prep: staging the BPE merge artifact untimed")
-          graft.ops.TextAnalysis.warmMerges(spark, sfDir)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] untimed merge warm failed: ${e.getMessage}")
-        }
-        Seq.empty
-      }
-      else try {
-        graft.ops.Dedup.evictSession(spark)
-        graft.ops.Curation.evictSession(spark)
-        val t0 = System.nanoTime()
-        graft.ops.Dedup.prepShingles(spark, sfDir)
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.ops.Dedup.warmComposedCaches(spark, sfDir)
-        // q68's hit-table checkpoint (VERDICT r9 #6): warmed here so
-        // q81/q115's timed iterations are uniformly warm; q68's own build
-        // cost stays measured as q68's timed body
-        graft.ops.Curation.warmEvalHits(spark, sfDir)
-        // q153's staged tokenizer artifact — training cost stays q137's
-        // timed body; this keeps q153's iterations uniformly warm
-        graft.ops.TextAnalysis.warmMerges(spark, sfDir)
-        Seq("dedup_prep" -> dt)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] dedup_prep failed: ${e.getMessage}")
-        Seq("dedup_prep" -> -1.0)
-      }
-    // q100's standing lake is fixture, not operator: build it COLD as its
-    // own timed prep entry (the dedup_prep pattern — VERDICT r8 #2), so
-    // q100's timed iterations measure only find-affected + staged rewrite
-    // + audit.
-    val forgetPrep: Seq[(String, Double)] =
-      if (!only.forall(_.contains("forget_prep"))) Seq.empty
-      else try {
-        graft.ops.Maintenance.evictForgetLake(spark, sfDir)
-        val t0 = System.nanoTime()
-        graft.ops.Maintenance.ensureForgetLake(spark, sfDir)
-        Seq("forget_prep" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] forget_prep failed: ${e.getMessage}")
-        Seq("forget_prep" -> -1.0)
-      }
-    // q103's fragmented-lake fixture, same discipline.
-    val compactPrep: Seq[(String, Double)] =
-      if (!only.forall(_.contains("compact_prep"))) Seq.empty
-      else try {
-        graft.ops.Maintenance.evictFragmentedLake(spark, sfDir)
-        val t0 = System.nanoTime()
-        graft.ops.Maintenance.ensureFragmentedLake(spark, sfDir)
-        Seq("compact_prep" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] compact_prep failed: ${e.getMessage}")
-        Seq("compact_prep" -> -1.0)
-      }
-    // The global suffix index (q132/q133's shared prep), same discipline:
-    // built COLD once on the books; the queries then probe it warm, the
-    // way a staged production index is consumed. ADVICE r9: when
-    // BENCH_ONLY selects a suffix-backed query (q132–q135) WITHOUT
-    // suffix_prep, run the prep untimed anyway — otherwise the first
-    // timed iteration pays the cold global-rank build and the reported
-    // median mixes cold and warm regimes (the dedup_prep discipline).
-    val suffixQueries = Set("q132_global_suffix_rank", "q133_corpus_repeats",
-      "q134_eval_lcs", "q135_eval_exposure")
-    val suffixPrep: Seq[(String, Double)] =
-      if (!only.forall(_.contains("suffix_prep"))) {
-        if (only.exists(names => (names & suffixQueries).nonEmpty)) try {
-          System.err.println(
-            "[bench] suffix-backed query selected without suffix_prep: running prepGlobalRanks untimed")
-          graft.ops.SuffixIndex.prepGlobalRanks(spark, sfDir)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] untimed suffix prep failed: ${e.getMessage}")
-        }
-        Seq.empty
-      }
-      else try {
-        graft.ops.SuffixIndex.evictSession(spark)
-        val t0 = System.nanoTime()
-        graft.ops.SuffixIndex.prepGlobalRanks(spark, sfDir)
-        Seq("suffix_prep" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] suffix_prep failed: ${e.getMessage}")
-        Seq("suffix_prep" -> -1.0)
-      }
-    // The ANN shelf's trained artifacts — IVF coarse centroids, SQ8
-    // per-dim bounds, PQ subspace codebooks — are STANDING assets (what
-    // FAISS serializes WITH an index; what S10's retrain job maintains
-    // behind a generation pointer), so they are staged once per session
-    // (Similarity.stageAnnArtifacts) and their build cost goes on the
-    // books as one COLD prep entry, the dedup_prep/suffix_prep
-    // discipline; the ANN-backed queries then probe them warm, the way
-    // production consumes a staged index. Same BENCH_ONLY guard as
-    // suffix_prep: selecting an ANN-backed query without ann_prep runs
-    // the prep untimed so the first timed iteration does not mix cold
-    // and warm regimes.
-    val annQueries = Set("q59_ann_ivf", "q73_ann_pq", "q77_semdedup",
-      "q92_ann_recall_families", "q102_hybrid_indexed", "q104_hard_negatives",
-      "q114_retrieval_quality", "q120_ann_sq", "q124_hybrid_sq",
-      "q128_ivf_balance", "q149_embedding_drift", "q151_ivf_sweep")
-    val annPrep: Seq[(String, Double)] =
-      if (!only.forall(_.contains("ann_prep"))) {
-        if (only.exists(names => (names & annQueries).nonEmpty)) try {
-          System.err.println(
-            "[bench] ANN-backed query selected without ann_prep: training the index artifacts untimed")
-          graft.ops.Similarity.stageAnnArtifacts(spark, sfDir)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] untimed ann prep failed: ${e.getMessage}")
-        }
-        Seq.empty
-      }
-      else try {
-        graft.ops.Similarity.evictCentroids(spark)
-        val t0 = System.nanoTime()
-        graft.ops.Similarity.stageAnnArtifacts(spark, sfDir)
-        Seq("ann_prep" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ann_prep failed: ${e.getMessage}")
-        Seq("ann_prep" -> -1.0)
-      }
-    // The maintained-statistics artifact suite — ONE combined streaming
-    // pass (VERDICT r17 #5) building the q205/q206 planner suite, the
-    // q207 TPC-H join catalog, AND the registered pipeline catalog from
-    // a single staged union (S28/S29/S31/S32 bodies + every bounds
-    // generation off one aggregate). Same discipline: built COLD once
-    // on the books; the audits then consult it warm, the way a planner
-    // consults a catalog. Selecting any planner-backed query without
-    // planner_prep stages it untimed so the first timed iteration does
-    // not mix a streaming build into a pure audit stamp.
-    val plannerQueries = Set("q205_planner_audit", "q206_compaction_plan",
-      "q207_join_order_plan", "q208_selective_join_order",
-      "q209_equality_join_order", "q210_rescaled_join_order",
-      "q211_skew_salt_decision", "q212_bushy_join_plan",
-      "q213_nine_join_order", "q214_between_join_order",
-      "q215_inlist_join_order", "q216_or_join_order")
-    val plannerPrep: Seq[(String, Double)] =
-      if (!only.forall(_.contains("planner_prep"))) {
-        if (only.exists(names => (names & plannerQueries).nonEmpty)) try {
-          System.err.println(
-            "[bench] planner-backed query selected without planner_prep: building the artifact suite untimed")
-          graft.ops.Planner.ensureArtifacts(spark, sfDir)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] untimed planner prep failed: ${e.getMessage}")
-        }
-        Seq.empty
-      }
-      else try {
-        graft.ops.Planner.evictSession(spark)
-        val t0 = System.nanoTime()
-        graft.ops.Planner.ensureArtifacts(spark, sfDir)
-        Seq("planner_prep" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] planner_prep failed: ${e.getMessage}")
-        Seq("planner_prep" -> -1.0)
-      }
+    val preps = runPreps(Preps, only, spark, sfDir)
     // Side-effecting queries (real file writes in the timed body) run LAST
     // and behind an untimed settle, so their page-cache/GC churn cannot
     // bleed into alphabetical neighbors (VERDICT r8 #1: the stamped r8 run
@@ -382,9 +256,7 @@ object Bench {
     val (pure, gates) = rest.partition { case (name, _) => !gateCluster(name) }
     val ordered = (pure ++ gates ++ dirty)
     val midIdx = ordered.size / 2
-    val measured = prepEntry ++ forgetPrep ++ compactPrep ++ suffixPrep ++
-      annPrep ++ plannerPrep ++
-      ordered.zipWithIndex.map { case ((name, fn), idx) =>
+    val results = preps ++ ordered.zipWithIndex.map { case ((name, fn), idx) =>
       // Median of `iters` timed runs: single-run per-query times swing up to
       // 6× run-to-run on identical code at this scale (JIT, GC, page cache),
       // which is far beyond the 2× regression threshold the gate enforces.
@@ -406,180 +278,13 @@ object Bench {
       // must not masquerade as a fast one
       name -> (if (times.size == iters) times.sorted.apply(iters / 2) else -1.0)
     }
-    // Outlier re-pass (VERDICT r13 #2): full-run stamps inflate 2–40×
-    // under transient driver load (three rounds of judge-adjudicated
-    // phantom movers); any stamp ≥2× its previous-round value (the trip
-    // line lives in BenchPrev.inflated — 2×, because the adjudicated
-    // movers sat at ~2×) is re-timed
-    // AFTER the main loop behind a settle, median-of-3, and the final
-    // stamp is min(original, re-run) — load noise is one-sided (it only
-    // inflates), so the smaller of two medians is the better estimate of
-    // steady-state cost. Previous stamps come from the latest
-    // driver-committed BENCH_r*.json in the working directory, with
-    // target/bench.json (the previous run's own full-precision archive,
-    // not yet overwritten at this point) filling in names the driver
-    // file lacks — the committed tail may carry only family subtotals
-    // once the line ladder floors out (SPARK_GRAFT_BENCH_PREV overrides
-    // the path; "none" disables). Everything is guarded: a missing or
-    // malformed prev file simply skips the re-pass.
-    // the previous run's load_index (VERDICT r19 #4): the mover
-    // comparison below divides each side's stamps by its own run's
-    // canary factor, so a loaded run vs a quiet baseline (or the
-    // reverse) stops manufacturing phantom ≥2× movers
-    var prevLoadIdx: Option[Double] = None
-    val prevStamps: Map[String, Double] = {
-      val spec = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "auto")
-      if (spec == "none") Map.empty
-      else {
-        val primary = scala.util.Try {
-          val path =
-            if (spec != "auto") java.nio.file.Paths.get(spec)
-            else {
-              val re = """BENCH_r(\d+)\.json""".r
-              val listing = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-              val candidates =
-                try listing.toArray.toSeq.map(_.toString)
-                  .flatMap { p =>
-                    re.findFirstMatchIn(p).map(m => (m.group(1).toInt, p))
-                  }
-                finally listing.close() // Files.list leaks the dir handle otherwise
-              java.nio.file.Paths.get(candidates.maxBy(_._1)._2)
-            }
-          val content = new String(
-            java.nio.file.Files.readAllBytes(path), "UTF-8")
-          val parsed = BenchPrev.parse(content, SparkEntry.queries.keySet ++ PrepNames)
-          prevLoadIdx = BenchPrev.loadIndexOf(content)
-          System.err.println(
-            s"[bench] outlier re-pass baseline: $path (${parsed.size} " +
-              s"stamps, load_index ${prevLoadIdx.getOrElse(-1.0)})")
-          parsed
-        }.getOrElse(Map.empty)
-        // the fallback only rides in AUTO mode: an explicit
-        // SPARK_GRAFT_BENCH_PREV path is a pinned baseline and must not
-        // be contaminated with stamps from a different run
-        val fallback =
-          if (spec != "auto") Map.empty[String, Double]
-          else scala.util.Try {
-            val content = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get("target", "bench.json")), "UTF-8")
-            // ADVICE r15: target/bench.json may be an arbitrary earlier
-            // LOCAL run — only trust it as a baseline when it measured
-            // the same sf dir as this run (the emitted line always
-            // carries "sf"); cross-sf stamps differ wholesale and would
-            // only feed spurious requeues.
-            if (!content.contains(s""""sf":"$sfDir"""")) {
-              System.err.println("[bench] re-pass fallback skipped: " +
-                s"target/bench.json measured a different sf dir than $sfDir")
-              Map.empty[String, Double]
-            } else {
-              val parsed = BenchPrev.parse(content, SparkEntry.queries.keySet ++ PrepNames)
-              if (parsed.nonEmpty) System.err.println(
-                s"[bench] re-pass fallback stamps: target/bench.json (${parsed.size})")
-              parsed
-            }
-          }.getOrElse(Map.empty[String, Double])
-        fallback ++ primary
-      }
-    }
-    // VERDICT r16 #1: the re-pass is now TWO-phase — select the roster
-    // first (pure, ratio-DESCENDING so the worst offenders are always
-    // adjudicated before the cap bites; the r16 official run exhausted
-    // the cap in visit order and q199 shipped stamped 3.8s against a
-    // 1.29s isolated truth), then adjudicate — and its outcome rides the
-    // committed artifact: requeued/requeue_cap_hit on every final-line
-    // rung, names + before/after on a bench_requeues detail line.
-    // Cap guarded like every env knob; the default bounds the re-pass
-    // wall-clock at ~12 × (settle + 3 medians).
-    val requeueCap = math.max(0, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REQUEUE_CAP", "12").toInt)
-      .getOrElse(12))
-    val preps = prepReruns(spark, sfDir)
-    // ADVICE r14: of the QUERIES only the pure partition re-runs — a
-    // warm isolated rerun of a gate/dirty query against already-mutated
-    // scratch state can undercut its honest cold cost (and mutate state
-    // after the suite ended), so min(original, rerun) would understate
-    // it. PREPS re-run too (VERDICT r15 #2): they are clean
-    // evict-and-rebuild bodies — a cold rebuild measures the same work
-    // as the original stamp.
-    def requeueable(name: String): Boolean =
-      preps.contains(name) || (SparkEntry.queries.contains(name) &&
-        !sideEffecting(name) && !gateCluster(name))
-    // NORMALIZED comparison factors (VERDICT r19 #4): this run's
-    // provisional canary index (start + middle probes — the end probe
-    // has not run yet) and the baseline's stamped index. Stamps divide
-    // by max(index, 1) on each side before the 2× trip line.
-    val provLoad = LoadCanary.index(canaryTimes.toSeq, LoadCanary.expectedSec)
-    val curNormF = BenchPrev.normFactor(Some(provLoad))
-    val prevNormF = BenchPrev.normFactor(prevLoadIdx)
-    if (curNormF > 1.0 || prevNormF > 1.0) System.err.println(
-      f"[bench] mover comparison canary-normalized: this run ÷ " +
-        f"$curNormF%.2f, baseline ÷ $prevNormF%.2f")
-    // gate/dirty movers are named in stderr (never requeued — a warm
-    // rerun would understate them) so their inflation stays visible
-    measured.foreach { case (name, v) =>
-      if (BenchPrev.inflated(v / curNormF,
-          prevStamps.get(name).map(_ / prevNormF)) && !requeueable(name))
-        System.err.println(f"[bench] $name inflated ≥2× vs prev " +
-          f"(${prevStamps(name)}%.2fs → $v%.2fs, canary-normalized) " +
-          "but is a gate/dirty " +
-          "query — not requeued (warm rerun would understate it)")
-    }
-    // preps trip at 1.5× (VERDICT r20 #3): a prep rerun is one clean
-    // rebuild, cheap insurance against the planner_prep-style drift that
-    // shipped unadjudicated at 1.91× in r20; queries keep the 2× line
-    val roster = BenchPrev.selectRequeues(measured, prevStamps,
-      requeueable, requeueCap, curNormF, prevNormF,
-      n => if (preps.contains(n)) 1.5 else 2.0)
-    roster.skipped.foreach { name =>
-      System.err.println(s"[bench] requeue cap $requeueCap hit; " +
-        s"$name left at its stamped value (lower inflation ratio than " +
-        "every adjudicated mover)")
-    }
-    val adjudicated = roster.selected.map { name =>
-      val v = measured.collectFirst { case (`name`, t) => t }.getOrElse(-1.0)
-      settle()
-      val stamped =
-        if (preps.contains(name)) {
-          val st = rerunPrep(spark, sfDir, name, v)
-          System.err.println(f"[bench] requeued prep $name: stamped $v%.2fs " +
-            f"(prev ${prevStamps(name)}%.2fs); clean rebuild → " +
-            f"final $st%.2fs")
-          st
-        } else {
-          val fn = SparkEntry.queries(name)
-          val times = (1 to 3).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] requeued $name failed: ${e.getMessage}")
-              None
-            }
-          }
-          if (times.size < 3) v
-          else {
-            val re = times.sorted.apply(1)
-            val st = math.min(v, re)
-            System.err.println(f"[bench] requeued $name: stamped $v%.2fs " +
-              f"(prev ${prevStamps(name)}%.2fs); isolated median $re%.2fs; " +
-              f"final $st%.2fs")
-            st
-          }
-        }
-      BenchLine.Requeued(name, v, prevStamps(name), stamped)
-    }
-    val finals = adjudicated.map(r => r.name -> r.finalStamp).toMap
-    val results = measured.map { case (name, v) =>
-      name -> finals.getOrElse(name, v)
-    }
-    val requeueInfo = Some((adjudicated.size, roster.capHit))
     canary("end")
-    val loadIndex = LoadCanary.index(canaryTimes.toSeq, LoadCanary.expectedSec)
+    val loadIndex = LoadCanary.index(canaryTimes.toSeq, LoadCanary.ExpectedSec)
     if (loadIndex >= 1.4) System.err.println(
       f"[bench] WARNING: load_index $loadIndex%.2f — the machine was LOADED " +
         "during this run; stamps are inflated wholesale. Adjudicate movers " +
         "with isolated re-runs (SPARK_GRAFT_BENCH_ONLY), not round-over-round.")
-    val ioIndex = LoadCanary.index(ioCanaryTimes.toSeq, LoadCanary.ioExpectedSec)
+    val ioIndex = LoadCanary.index(ioCanaryTimes.toSeq, LoadCanary.IoExpectedSec)
     // io trip line 2.0 vs the CPU leg's 1.4: buffered-write timings are
     // intrinsically noisier (writeback scheduling), and the r15 failure
     // mode this leg exists to flag inflated I/O entries 2–12× — a 2×
@@ -618,7 +323,7 @@ object Bench {
     val li = Some(loadIndex)
     val ii = Some(ioIndex)
     val chosen = BenchLine.finalLine(results, sfDir, tailBudget, li, ii,
-      requeueInfo, System.err.println)
+      System.err.println)
     val (line, rung) = (chosen.line, chosen.rung)
     if (chosen.degraded) System.err.println(
       s"[bench] WARNING: query line over $tailBudget chars at 3 decimals; emitted at $rung (${line.length} chars)")
@@ -631,7 +336,7 @@ object Bench {
     // Subset (BENCH_ONLY) runs write *_subset.json: target/bench.json and
     // target/streambench.json are standing judge-read artifacts of the
     // last FULL run, and a dev subset run must not clobber them with a
-    // 1-query file (it also poisons the re-pass fallback baseline).
+    // 1-query file.
     def writeFile(name0: String, content: String): Unit = try {
       val name = if (only.isEmpty) name0
         else name0.stripSuffix(".json") + "_subset.json"
@@ -655,21 +360,13 @@ object Bench {
       println(dl)
       System.err.println(dl)
     }
-    // the re-pass outcome as its own detail line (names + before/after),
-    // printed even when nothing requeued — an explicitly-empty roster is
-    // itself the evidence that no stamp tripped the line
-    val rqLine = BenchLine.requeueLine(adjudicated, roster.skipped,
-      requeueCap, sfDir)
-    println(rqLine)
-    System.err.println(rqLine)
-    writeFile("bench_requeues.json", rqLine)
     println(line)
     System.err.println(line)
     // target/bench.json stays self-sufficient for the judge: the full
     // 3-decimal query line (with load_index), with streambench inlined
     // when it was measured.
     val fullLine = BenchLine.queryLine(results, sfDir, 3, stripQ = false,
-      deci = false, loadIndex = li, ioIndex = ii, requeue = requeueInfo)
+      deci = false, loadIndex = li, ioIndex = ii)
     writeFile("bench.json", streamJson match {
       case Some(sj) =>
         fullLine.stripSuffix(s""","sf":"$sfDir"}""") +

@@ -55,15 +55,10 @@ object BenchLine {
     loadIndex.map(l => s""""load_index":${fmtSec(l, 2)},""").getOrElse("") +
       ioIndex.map(i => s""""io_index":${fmtSec(i, 2)},""").getOrElse("")
 
-  /** Re-pass visibility (VERDICT r16 #1): how many entries the outlier
-    * re-pass adjudicated and whether its cap excluded any — on EVERY
-    * rung, so no committed artifact can again say nothing about whether
-    * its stamps were re-passed. The names and before/after ride the
-    * [[requeueLine]] detail emission. */
-  private def requeueKey(requeue: Option[(Int, Boolean)]): String =
-    requeue.map { case (n, capHit) =>
-      s""""requeued":$n,"requeue_cap_hit":$capHit,"""
-    }.getOrElse("")
+  /** The retired outlier re-pass's keys, kept so the line's schema and
+    * key order stay byte-compatible: no stamp is re-passed, so every
+    * rung truthfully reports zero requeues. */
+  private val RequeueKey = """"requeued":0,"requeue_cap_hit":false,"""
 
   private def totalStr(results: Seq[(String, Double)]): String =
     fmtSec(results.map(_._2).filter(_ >= 0).sum, 3)
@@ -91,7 +86,6 @@ object BenchLine {
       decimals: Int, stripQ: Boolean, deci: Boolean = false,
       loadIndex: Option[Double] = None,
       ioIndex: Option[Double] = None,
-      requeue: Option[(Int, Boolean)] = None,
       warn: String => Unit = _ => ()): String = {
     def key0(name: String): String = {
       val p = shortKey(name)
@@ -113,7 +107,7 @@ object BenchLine {
     val qunit = if (deci) "\"qunit\":\"ds\"," else ""
     s"""{"metric":"total","value":${totalStr(results)},"unit":"sec",""" +
       normKey(results, loadIndex) +
-      loadKey(loadIndex, ioIndex) + requeueKey(requeue) + qunit +
+      loadKey(loadIndex, ioIndex) + RequeueKey + qunit +
       s""""queries":$qs,"sf":"$sfDir"}"""
   }
 
@@ -127,8 +121,7 @@ object BenchLine {
   val MaxFailedNames = 8
   def familyLine(results: Seq[(String, Double)], sfDir: String,
       loadIndex: Option[Double] = None,
-      ioIndex: Option[Double] = None,
-      requeue: Option[(Int, Boolean)] = None): String = {
+      ioIndex: Option[Double] = None): String = {
     val (ok, failed) = results.partition(_._2 >= 0)
     val fams = ok.groupBy { case (k, _) => familyKey(k) }
       .map { case (f, vs) => f -> vs.map(_._2).sum }
@@ -142,7 +135,7 @@ object BenchLine {
           .mkString("[", ",", "]") + ","
     s"""{"metric":"total","value":${totalStr(results)},"unit":"sec",""" +
       normKey(results, loadIndex) +
-      loadKey(loadIndex, ioIndex) + requeueKey(requeue) +
+      loadKey(loadIndex, ioIndex) + RequeueKey +
       s""""detail":"target/bench.json",$failedKey"queries":$fams,"sf":"$sfDir"}"""
   }
 
@@ -163,38 +156,6 @@ object BenchLine {
     }
   }
 
-  /** One adjudicated requeue: original full-run stamp, the prev-round
-    * baseline that tripped it, and the final (min) stamp. */
-  final case class Requeued(name: String, stamped: Double, prev: Double,
-      finalStamp: Double)
-
-  /** Bound on the skipped-name list in [[requeueLine]] — the same
-    * budget discipline as [[MaxFailedNames]]. */
-  val MaxSkippedNames = 12
-
-  /** The re-pass detail line (VERDICT r16 #1): every adjudicated entry
-    * with its before/after, plus the names the cap excluded — so a judge
-    * reads WHICH stamps were re-passed and what the re-pass found,
-    * straight off the committed artifact. Selected entries are bounded
-    * by the cap itself; the skipped list is truncated loudly. */
-  def requeueLine(entries: Seq[Requeued], skipped: Seq[String], cap: Int,
-      sfDir: String): String = {
-    val es = entries.map { e =>
-      "\"" + e.name + "\":{\"stamped\":" + fmtSec(e.stamped, 3) +
-        ",\"prev\":" + fmtSec(e.prev, 3) +
-        ",\"final\":" + fmtSec(e.finalStamp, 3) + "}"
-    }.mkString("{", ",", "}")
-    val skip = skipped.take(MaxSkippedNames).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val more =
-      if (skipped.size > MaxSkippedNames)
-        s""","skipped_more":${skipped.size - MaxSkippedNames}"""
-      else ""
-    s"""{"metric":"bench_requeues","requeued":${entries.size},""" +
-      s""""cap":$cap,"cap_hit":${skipped.nonEmpty},"entries":$es,""" +
-      s""""skipped":$skip$more,"sf":"$sfDir"}"""
-  }
-
   /** Rung descriptors for the ladder warning. */
   private val Ladder = Seq((3, false, false), (2, false, false),
     (1, false, false), (1, true, false), (1, true, true))
@@ -212,20 +173,19 @@ object BenchLine {
   def finalLine(results: Seq[(String, Double)], sfDir: String,
       tailBudget: Int, loadIndex: Option[Double] = None,
       ioIndex: Option[Double] = None,
-      requeue: Option[(Int, Boolean)] = None,
       warn: String => Unit = _ => ()): Chosen = {
     val warnings = scala.collection.mutable.LinkedHashSet.empty[String]
     val chosen = Ladder.iterator
       .map { case (d, sq, ds) =>
         Chosen(
-          queryLine(results, sfDir, d, sq, ds, loadIndex, ioIndex, requeue,
+          queryLine(results, sfDir, d, sq, ds, loadIndex, ioIndex,
             warnings += _),
           if (ds) s"deciseconds, stripQ=$sq" else s"$d decimals, stripQ=$sq",
           degraded = (d, sq, ds) != Ladder.head)
       }
       .find(_.line.length <= tailBudget)
       .getOrElse(Chosen(
-        familyLine(results, sfDir, loadIndex, ioIndex, requeue),
+        familyLine(results, sfDir, loadIndex, ioIndex),
         "family subtotals + detail pointer", degraded = true))
     if (chosen.line.length > tailBudget)
       warnings += s"[bench] WARNING: even the family floor is ${chosen.line.length} chars (> $tailBudget) — driver tail may clip"

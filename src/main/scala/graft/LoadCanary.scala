@@ -19,49 +19,40 @@ import org.apache.spark.sql.SparkSession
   * there).
   *
   * The probe: a pure-CPU whole-stage-codegen'd aggregate over
-  * `spark.range` — [[ProbeRows]] rows in 32 fixed partitions, integer
-  * arithmetic only. No I/O, no shuffle, no data dependence: its quiesced
-  * cost is a machine constant ([[DefaultExpectedSec]], env-overridable
-  * via `SPARK_GRAFT_LOAD_EXPECTED`), and CPU contention — the thing that
-  * inflates every other stamp — inflates it proportionally. Each probe
-  * point warms to a JIT plateau and takes the MIN of [[ProbeIters]]
-  * runs, so neither a cold JVM nor a single scheduler hiccup can fake a
-  * loaded machine.
+  * `spark.range` — [[ProbeRowsPerCore]] rows per core, one partition per
+  * session core, integer arithmetic only. No I/O, no shuffle, no data
+  * dependence: each core does the same work at any core count, so its
+  * quiesced cost is a machine constant ([[ExpectedSec]]), and CPU
+  * contention — the thing that inflates every other stamp — inflates it
+  * proportionally. Each probe point warms to a JIT plateau and takes the
+  * MIN of [[ProbeIters]] runs, so neither a cold JVM nor a single
+  * scheduler hiccup can fake a loaded machine.
   */
 object LoadCanary {
 
-  /** Probe size: 4M rows per core at the bench's local[32] — big enough
-    * to span many scheduler quanta AND to drown per-job scheduling
-    * jitter (a 32M-row probe swung 0.08–0.22 s quiesced across JVM
-    * states, a 2.7× spread that would have drowned the 1.4× signal the
-    * canary looks for), small enough that three probe points cost a few
-    * seconds of a 150+ s run. The quiesced cost of THIS size, fully
-    * warmed, is [[DefaultExpectedSec]] — calibrate against that
-    * constant, not this comment. */
-  val ProbeRows: Long = 128L * 1000 * 1000
+  /** Probe size per core: big enough to span many scheduler quanta AND
+    * to drown per-job scheduling jitter (at 1M rows per core the probe
+    * swung 0.08–0.22 s quiesced across JVM states, a 2.7× spread that
+    * would drown the 1.4× signal the canary looks for), small enough
+    * that three probe points cost a few seconds of a bench run. */
+  val ProbeRowsPerCore: Long = 16L * 1000 * 1000
 
   /** Timed runs per probe point (after one untimed warmup). */
   val ProbeIters: Int = 3
 
-  /** The reference machine's quiesced probe cost in seconds, calibrated
-    * on the driver box at the bench's local[32] (quiesced probes land
-    * 0.10–0.19 while the JVM is still warming; a fully-warmed run's
-    * probes settle at ≈ 0.10–0.12). Overridable with
-    * `SPARK_GRAFT_LOAD_EXPECTED` for other machines — the index is a
-    * ratio, so only the machine constant moves. The run's start probe
-    * reads slightly high (Spark still JIT-warming); the emitted index is
-    * the MEDIAN of start/middle/end, so the two steady probes carry it. */
-  val DefaultExpectedSec: Double = 0.110
-
-  def expectedSec: Double =
-    scala.util.Try(sys.env.get("SPARK_GRAFT_LOAD_EXPECTED").map(_.toDouble))
-      .toOption.flatten.filter(e => e > 0 && e.isFinite)
-      .getOrElse(DefaultExpectedSec)
+  /** The quiesced probe cost in seconds, fully warmed, calibrated on a
+    * 4-core 15 GB VM from four quiet `graft.Bench` subset runs: their
+    * seven middle and end probes read 0.169–0.196 s (median 0.182), the
+    * per-run medians 0.169–0.196 s. The run's start probe reads high
+    * (0.23–0.28 s, Spark still JIT-warming); the emitted index is the
+    * MEDIAN of start/middle/end, so the two steady probes carry it. */
+  val ExpectedSec: Double = 0.185
 
   /** One timed probe run: the fixed aggregate, evaluated to one row. */
   private def probeOnce(spark: SparkSession): Double = {
+    val cores = spark.sparkContext.defaultParallelism
     val t0 = System.nanoTime()
-    spark.range(0L, ProbeRows, 1L, 32)
+    spark.range(0L, ProbeRowsPerCore * cores, 1L, cores)
       .selectExpr("id % 997 * 31 + (id >> 3) as x")
       .agg(org.apache.spark.sql.functions.sum("x")).head()
     (System.nanoTime() - t0) / 1e9
@@ -122,18 +113,11 @@ object LoadCanary {
     * you take). */
   val IoProbeIters: Int = 2
 
-  /** The reference machine's quiesced I/O probe cost in seconds
-    * (write + read of the ~48 MB frame at local[32]), overridable with
-    * `SPARK_GRAFT_IO_EXPECTED`. Calibrated like [[DefaultExpectedSec]]:
-    * warmed quiesced probes in the Bench environment on the driver box
-    * read 0.64–0.66 s under its ~5-loadavg ambient; 0.60 centers the
-    * quiesced index at ~1.0. */
-  val DefaultIoExpectedSec: Double = 0.60
-
-  def ioExpectedSec: Double =
-    scala.util.Try(sys.env.get("SPARK_GRAFT_IO_EXPECTED").map(_.toDouble))
-      .toOption.flatten.filter(e => e > 0 && e.isFinite)
-      .getOrElse(DefaultIoExpectedSec)
+  /** The quiesced I/O probe cost in seconds (write + read of the
+    * ~48 MB frame), calibrated with [[ExpectedSec]] from the same four
+    * runs: middle and end probes 0.580–0.695 s (median 0.632), per-run
+    * medians 0.619–0.695 s; start probes 0.80–0.86 s. */
+  val IoExpectedSec: Double = 0.65
 
   /** One timed I/O run: overwrite the fixed frame, read it back through
     * a both-columns aggregate. xxhash64 produces high-entropy longs

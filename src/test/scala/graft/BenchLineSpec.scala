@@ -68,10 +68,12 @@ class BenchLineSpec extends AnyFunSuite {
         s"stamp for $k missing from detail lines")
     }
     // a SPARK_GRAFT_BENCH_TAIL_BUDGET=600 run still yields full-precision
-    // stamps somewhere judge-readable: BenchPrev reads them back
-    val recovered = BenchPrev.parse(all, results.map(_._1).toSet)
-    assert(recovered.size === results.count(_._2 >= 0))
-    assert(math.abs(recovered("suffix_prep") - 11.27) < 1e-9)
+    // stamps somewhere judge-readable: one entry per stamp, none twice
+    val stamp = """"([^"]+)":(-?\d+\.\d{3})[,}]""".r
+    val entries = lines.flatMap(l => stamp.findAllMatchIn(
+      l.substring(l.indexOf(""""queries":{""")))).map(_.group(1))
+    assert(entries === results.map(_._1))
+    assert(all.contains(""""suffix_prep":11.270"""))
   }
 
   test("load_index rides every rung, including the family floor") {
@@ -84,77 +86,40 @@ class BenchLineSpec extends AnyFunSuite {
     assert(l3.contains(""""load_index":-1.00,"""))
   }
 
-  test("BenchPrev recovers per-query stamps from a full r15 stdout: " +
-    "detail lines preferred over the degraded final line") {
-    val names = results.map(_._1).toSet
-    val detail = BenchLine.detailLines(results, "sf")
-    val fin = BenchLine.finalLine(results, "sf", 600, Some(1.0)).line
-    val stdout = (detail :+ fin).mkString("\n")
-    val m = BenchPrev.parse(stdout, names)
-    // family keys in the final line match no query name; the detail
-    // lines supply every stamp at full precision
-    assert(m.size === results.size)
-    assert(math.abs(m("q17_some_name_17") -
-      results.toMap.apply("q17_some_name_17")) < 1e-9)
-  }
-
-  test("requeued/requeue_cap_hit ride every rung (VERDICT r16 #1): the " +
-    "committed artifact can never again say nothing about the re-pass") {
-    val rq = Some((3, true))
-    val l1 = BenchLine.finalLine(results.take(5), "sf", 1900,
-      Some(1.0), Some(0.9), rq).line
-    assert(l1.contains(""""requeued":3,"requeue_cap_hit":true,"""))
-    assert(keyRe.findFirstIn(l1).isDefined, "driver schema keys intact")
-    // the family floor carries it too
-    val l2 = BenchLine.finalLine(results, "sf", 600, Some(1.0), Some(0.9),
-      Some((12, false))).line
-    assert(l2.contains(""""requeued":12,"requeue_cap_hit":false,"""))
-    // and the deciseconds rung still round-trips through BenchPrev with
-    // the new keys in place
-    val ds = BenchLine.queryLine(Seq("q5_a" -> 4.2), "sf", 1, stripQ = true,
-      deci = true, requeue = Some((1, false)))
-    assert(math.abs(BenchPrev.parse(ds, Set("q5_a"))("q5_a") - 4.2) < 1e-9)
-  }
-
-  test("requeue detail line: names + before/after for every adjudicated " +
-    "entry, skipped names bounded, explicitly-empty roster still emitted") {
-    val entries = Seq(
-      BenchLine.Requeued("q199_join_cardinality", 3.807, 1.2, 1.291),
-      BenchLine.Requeued("suffix_prep", 19.1, 8.4, 8.15))
-    val skipped = (1 to 15).map(i => s"q${i}_x")
-    val l = BenchLine.requeueLine(entries, skipped, 12, "sfX")
-    assert(l.contains(""""metric":"bench_requeues""""))
-    assert(l.contains(""""requeued":2,"cap":12,"cap_hit":true"""))
-    assert(l.contains(
-      """"q199_join_cardinality":{"stamped":3.807,"prev":1.200,"final":1.291}"""))
-    assert(l.contains(""""suffix_prep":{"stamped":19.100"""))
-    // skipped list truncated loudly at MaxSkippedNames
-    assert(l.contains(""""q12_x"""") && !l.contains(""""q13_x""""))
-    assert(l.contains(""""skipped_more":3"""))
-    val empty = BenchLine.requeueLine(Seq.empty, Seq.empty, 12, "sfX")
-    assert(empty.contains(""""requeued":0,"cap":12,"cap_hit":false"""))
-    assert(empty.contains(""""entries":{},"skipped":[]"""))
+  test("every rung carries requeued 0, cap not hit, the floor included") {
+    val rq = """"requeued":0,"requeue_cap_hit":false,"""
+    // the full-precision rung, the deciseconds rung and the family floor
+    val full = BenchLine.finalLine(results.take(5), "sf", 1900,
+      Some(1.0), Some(0.9))
+    val dsLen = BenchLine.queryLine(results.take(60), "sf", 1, stripQ = true,
+      deci = true, Some(1.0), Some(0.9)).length
+    val ds = BenchLine.finalLine(results.take(60), "sf", dsLen,
+      Some(1.0), Some(0.9))
+    val floor = BenchLine.finalLine(results, "sf", 600, Some(1.0), Some(0.9))
+    assert(ds.rung === "deciseconds, stripQ=true", ds.rung)
+    assert(floor.rung === "family subtotals + detail pointer")
+    Seq(full, ds, floor).foreach { c =>
+      assert(c.line.contains(""""io_index":0.90,""" + rq), c.line)
+      assert(keyRe.findFirstIn(c.line).isDefined, "driver schema keys intact")
+    }
+    // no canary: the keys still ride, right after the unit
+    val bare = BenchLine.queryLine(Seq("q5_a" -> 4.2), "sf", 3, stripQ = false)
+    assert(bare.contains(""""unit":"sec",""" + rq + """"queries":"""), bare)
   }
 
   test("deciseconds rung still parses with qunit anchored to its own object") {
     val r = Seq("q5_a" -> 4.2, "q6_b" -> 0.7)
     val ds = BenchLine.queryLine(r, "sf", 1, stripQ = true, deci = true,
       loadIndex = Some(1.0))
-    assert(ds.contains(""""qunit":"ds""""))
-    val m = BenchPrev.parse(ds, Set("q5_a", "q6_b"))
-    assert(math.abs(m("q5_a") - 4.2) < 1e-9)
-    assert(math.abs(m("q6_b") - 0.7) < 1e-9)
-    // a NEIGHBORING object's qunit must not rescale a 3-decimal line:
-    // q9_c lives ONLY in the 3-decimal line that FOLLOWS a ds line, so
-    // its stamp can only come from the later object — a too-wide
-    // look-behind window would pick up the ds line's qunit and read
-    // 0.42 instead of 4.2 (first-seen-wins cannot mask this: the name
-    // is absent from the first object)
+    // the ds rung declares its unit inside its own object, right before
+    // the stamps it scales: 4.2 s -> 42 ds, 0.7 s -> 7 ds
+    assert(ds.contains(""""qunit":"ds","queries":{"5":42,"6":7},"sf":"sf"}"""),
+      ds)
+    // a 3-decimal line carries no qunit, so a ds line before it cannot
+    // rescale its stamps
     val full = BenchLine.queryLine(Seq("q9_c" -> 4.2), "sf", 3, stripQ = false)
-    val m2 = BenchPrev.parse(ds + "\n" + full, Set("q5_a", "q9_c"))
-    assert(math.abs(m2("q5_a") - 4.2) < 1e-9)
-    assert(math.abs(m2("q9_c") - 4.2) < 1e-9,
-      s"the ds line's qunit leaked into the following object: $m2")
+    assert(!full.contains("qunit"), full)
+    assert(full.contains(""""queries":{"q9":4.200}"""), full)
   }
 
   test("total_norm rides next to the raw total on query and family " +

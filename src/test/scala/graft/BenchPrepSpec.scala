@@ -1,56 +1,84 @@
 package graft
 
-/** VERDICT r15 #2 — preps self-correct: a prep stamp that trips the ≥2×
-  * line re-runs as a clean evict-and-rebuild after the main loop, and the
-  * final stamp is min(original, rebuild). In the r15 run preps were the
-  * largest stamps in the file and took the worst disk-load inflation
-  * (compact_prep stamped 26.9s vs 2.26s judge-isolated) while being
-  * excluded from the re-pass by design; unlike gates they are clean
-  * rebuilds, so a cold re-run cannot understate them.
+/** The prep table and its one runner: which prep is timed, which is
+  * staged untimed for a BENCH_ONLY subset, and in what order. The real
+  * table's steps are swapped for recorders (the dependents and the
+  * has-its-own-stage choice stay the real table's), so no artifact is
+  * built; one test runs a real row against a missing fixture dir.
   */
 class BenchPrepSpec extends SparkSpec {
 
-  override val sf = "/root/testdata/sf0.001"
+  /** The real table with every step replaced by a recorder into `log`. */
+  private def recorded(log: collection.mutable.Buffer[String],
+      failing: Set[String] = Set.empty): Seq[Bench.Prep] =
+    Bench.Preps.map { p =>
+      def rec(step: String): Bench.Step = (_, _) => {
+        log += s"$step:${p.name}"
+        if (step == "build" && failing(p.name)) sys.error("boom")
+      }
+      p.copy(evict = rec("evict"), build = rec("build"),
+        rewarm = rec("rewarm"), stage = p.stage.map(_ => rec("stage")))
+    }
 
-  test("every prep entry Bench stamps has a rerun recipe") {
-    // joinstats_prep folded into planner_prep in r18 (the combined
-    // single-pass artifact build — VERDICT r17 #5)
-    val prepNames = Set("dedup_prep", "forget_prep", "compact_prep",
+  private def run(only: Option[Set[String]], failing: Set[String] = Set.empty)
+      : (Seq[(String, Double)], Seq[String]) = {
+    val log = collection.mutable.ArrayBuffer.empty[String]
+    val stamps = Bench.runPreps(recorded(log, failing), only, spark, sf)
+    (stamps, log.toSeq)
+  }
+
+  test("the prep table: six rows in order, equal to PrepNames") {
+    val names = Seq("dedup_prep", "forget_prep", "compact_prep",
       "suffix_prep", "ann_prep", "planner_prep")
-    assert(Bench.prepReruns(spark, sf).keySet === prepNames)
-    assert(Bench.PrepNames === prepNames,
-      "the parse universe must cover every rerun recipe")
+    assert(Bench.Preps.map(_.name) === names)
+    assert(Bench.PrepNames === names)
+    // a dependent that names no query would never trigger its staging
+    Bench.Preps.flatMap(_.dependents).foreach { q =>
+      assert(SparkEntry.queries.contains(q), s"$q is not a registered query")
+    }
   }
 
-  test("an artificially-inflated compact_prep re-stamps within noise of " +
-    "its quiesced rebuild cost (the r15 26.9s-vs-2.26s scenario)") {
-    // quiesced truth: a direct evict + timed rebuild under the same
-    // ambient conditions (ratio comparison, never absolute bands —
-    // LoadCanarySpec lesson)
-    graft.ops.Maintenance.evictFragmentedLake(spark, sf)
-    val t0 = System.nanoTime()
-    graft.ops.Maintenance.ensureFragmentedLake(spark, sf)
-    val quiesced = (System.nanoTime() - t0) / 1e9
-    // simulate a load-inflated original stamp (12× the r15 pathology)
-    val original = quiesced * 12
-    val stamped = Bench.rerunPrep(spark, sf, "compact_prep", original)
-    assert(stamped < original,
-      s"rerun must improve an inflated stamp: $stamped vs $original")
-    // "within noise": the rebuild measures the same work as the direct
-    // timing just taken — same session, same page-cache state; 3× is a
-    // generous same-conditions band
-    assert(stamped <= quiesced * 3 && stamped > 0,
-      s"rebuild $stamped should sit near the quiesced cost $quiesced")
+  test("a full run times all six: evict, build, rewarm, in table order") {
+    val (stamps, log) = run(None)
+    assert(stamps.map(_._1) === Bench.PrepNames)
+    assert(stamps.forall(_._2 >= 0), stamps)
+    assert(log === Bench.PrepNames.flatMap(n =>
+      Seq(s"evict:$n", s"build:$n", s"rewarm:$n")))
   }
 
-  test("a rerun can only lower a stamp, and failures keep the original") {
-    // min(original, rebuild): an already-fast stamp survives a slower rerun
-    val fast = Bench.rerunPrep(spark, sf, "compact_prep", 0.000001)
-    assert(fast === 0.000001)
-    // unknown prep name → original unchanged (no recipe, no crash)
-    assert(Bench.rerunPrep(spark, sf, "no_such_prep", 7.0) === 7.0)
-    // a rerun whose build throws (bad fixture dir) keeps the original
-    assert(Bench.rerunPrep(spark, "/nonexistent/sf", "compact_prep", 5.0)
-      === 5.0)
+  test("q153 without dedup_prep stages only the merges, untimed") {
+    val (stamps, log) = run(Some(Set("q153_bpe_encode")))
+    assert(stamps.isEmpty)
+    assert(log === Seq("stage:dedup_prep"))
+  }
+
+  test("q132, q59 and q205 each stage their own prep's build untimed") {
+    Seq("q132_global_suffix_rank" -> "suffix_prep",
+      "q59_ann_ivf" -> "ann_prep",
+      "q205_planner_audit" -> "planner_prep").foreach { case (q, prep) =>
+      val (stamps, log) = run(Some(Set(q)))
+      assert(stamps.isEmpty, q)
+      assert(log === Seq(s"build:$prep"), q)
+    }
+  }
+
+  test("q100 without forget_prep stages nothing") {
+    val (stamps, log) = run(Some(Set("q100_forget_users")))
+    assert(stamps.isEmpty && log.isEmpty, log)
+  }
+
+  test("a failed build stamps -1 and the next prep still runs") {
+    val (stamps, log) = run(Some(Set("forget_prep", "compact_prep")),
+      failing = Set("forget_prep"))
+    assert(stamps === Seq("forget_prep" -> -1.0, "compact_prep" ->
+      stamps.last._2))
+    assert(stamps.last._2 >= 0)
+    // a failed build skips its rewarm
+    assert(log === Seq("evict:forget_prep", "build:forget_prep",
+      "evict:compact_prep", "build:compact_prep", "rewarm:compact_prep"))
+    // the real row against a missing fixture dir fails the same way
+    val real = Bench.runPreps(Bench.Preps.filter(_.name == "compact_prep"),
+      None, spark, "/nonexistent/sf")
+    assert(real === Seq("compact_prep" -> -1.0))
   }
 }
