@@ -169,13 +169,11 @@ object Bench {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wbase))
       spark.range(64).selectExpr("cast(id as int) as v")
         .coalesce(1).write.parquet(s"$wbase/in")
-      val q = spark.readStream.schema("v int").parquet(s"$wbase/in")
-        .writeStream.option("checkpointLocation", s"$wbase/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.count(); ()
-        }
-        .start()
+      val q = graft.streaming.BatchSink.start(
+        spark.readStream.schema("v int").parquet(s"$wbase/in"), wbase,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (b, _) =>
+        b.count(); ()
+      }
       // a hung warmup must not keep running concurrently with the timed
       // body — that is the exact contamination the warmup exists to
       // prevent

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence tool (not part of the driver contract):
   * dumps `explain("formatted")` of named [[SparkEntry.queries]] entries to
   * `plans/<tag>/<query>_<suffix>.txt`.
@@ -12,18 +10,14 @@ import org.apache.spark.sql.SparkSession
   * e.g. `runMain graft.PlanDump r20 before q213_nine_join_order`.
   * Env: `SPARK_GRAFT_SF_DIR` (default sf0.1 — plan shape, not timing, so
   * any sf works; sf0.1 matches the bench's broadcast-size decisions).
+  * Plans are taken on the bench session itself ([[Bench.session]]).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query> ...")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // mirror the bench session: 8 shuffle partitions, AQE off
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[8]"), "8")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = Paths.get("plans", tag)
     Files.createDirectories(dir)

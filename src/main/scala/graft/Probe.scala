@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 
 /** Dev-loop micro-bench / plan probe (not part of the driver contract).
   *
   * Usage: `runMain graft.Probe [--codegen] [query ...]`
-  * with env overrides `SPARK_GRAFT_SF_DIR` (default sf0.1) and
-  * `SPARK_GRAFT_PROBE_PART` (shuffle partitions, default 8 — small
-  * inputs lose to 32-way scheduling overhead; see SCALE.md §3).
+  * with env override `SPARK_GRAFT_SF_DIR` (default sf0.1), on the bench
+  * session ([[Bench.session]] — its `SPARK_GRAFT_BENCH_PARTITIONS` and
+  * `SPARK_GRAFT_AQE` apply; see SCALE.md §3).
   *
   * Default mode times 3 noop-write iterations of each named
   * [[SparkEntry.queries]] entry isolated in one JVM — the adjudication
@@ -25,11 +24,7 @@ object Probe {
     val (flags, names) = args.partition(_.startsWith("--"))
     val codegen = flags.contains("--codegen")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PROBE_PART", "8")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[${GraftSession.cpus}]"), parts)
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val queries =
       if (names.nonEmpty) names.toSeq else Seq("q194_integrity_audit")

@@ -195,13 +195,6 @@ object Maintenance {
         .collect().map(_.getLong(0))).toSeq.sorted
   }
 
-  /** The staged commit as a readable table (spec hook). */
-  private[graft] def commitView(s: SparkSession, dir: String): DataFrame = {
-    val lake = s"${forgetRoot(dir)}/events_lake"
-    val staged = s"${forgetRoot(dir)}/staged"
-    viewFrom(s, lake, staged, affectedOf(s, lake, staged))
-  }
-
   /** Physically apply the staged rewrite — the file-system analog of the
     * manifest swap a table format commits: every affected bucket's lake
     * directory is dropped and its staged replacement (if any; none means

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
-import graft.streaming.{ManifestStream, McvStream, NdvStream, StatsStream}
+import graft.streaming.{BatchSink, ManifestStream, McvStream, NdvStream,
+  StatsStream}
 
 /** The operational close of the optimizer-statistics family (VERDICT r15
   * #5/#6): q197–q204 built and graded the statistics a planner keeps;
@@ -903,34 +904,19 @@ object Planner {
       CatalogColumn("ev_et", "ev", "b", "events", "event_type",
         codec = Some("djb2"))))
 
-  /** S29-style per-batch row-count partial: pure in the batch,
-    * overwritten into `rows/batch=<id>`; the standing count is the SUM
-    * over partials (associative, commutative — merged == one-pass, the
-    * same protocol argument as [[NdvStream]]/[[McvStream]]). This is the
-    * catalog's table-cardinality artifact: one row per micro-batch, so a
-    * planner reads |batches| rows to know n, never the table. */
-  private[graft] def countBatch(batch: DataFrame, batchId: Long,
-      root: String): Unit = {
-    batch.agg(count(lit(1)).as("n"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/rows/batch=$batchId")
-    ()
-  }
-
-  /** [[countBatch]] with the count already in hand: the combined build
-    * computes every table's batch count in ONE grouped job (the same
-    * action that materializes the persisted batch), so the per-table
-    * legs only write their 1-row partial — identical artifact, 9 fewer
-    * scans per micro-batch. */
+  /** S29-style per-batch row-count partial, overwritten into
+    * `rows/batch=<id>`; the standing count is the SUM over partials
+    * (associative, commutative — merged == one-pass, the same protocol
+    * argument as [[NdvStream]]/[[McvStream]]). This is the catalog's
+    * table-cardinality artifact: one row per micro-batch, so a planner
+    * reads |batches| rows to know n, never the table. The count arrives
+    * in hand: the combined build computes every table's batch count in
+    * ONE grouped job (the same action that materializes the persisted
+    * batch), so the per-table legs only write their 1-row partial. */
   private def writeCount(s: SparkSession, n: Long, batchId: Long,
       root: String): Unit = {
     import s.implicits._
-    Seq(n).toDF("n")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/rows/batch=$batchId")
-    ()
+    BatchSink.write(root, batchId, "rows" -> Seq(n).toDF("n").coalesce(1))
   }
 
   /** Session conf: seconds a USER catalog build is trusted before the
@@ -962,9 +948,6 @@ object Planner {
 
   private val cacheJoin =
     new java.util.concurrent.ConcurrentHashMap[String, UserCatalogSlot]
-
-  private[graft] def evictJoinSession(s: SparkSession): Unit =
-    cacheJoin.clear()
 
   /** The staleness signature: the table directory's FILE FOOTPRINT —
     * name, length, and modification time of every entry, a pure
@@ -1005,7 +988,7 @@ object Planner {
     * all maintained by ONE streaming pass over a [[ReplayCarves]]-batch
     * replay of the
     * UNION of the declared tables (each micro-batch fans to the literal
-    * [[NdvStream.processBatch]] / [[countBatch]] /
+    * [[NdvStream.processBatch]] / [[writeCount]] /
     * [[StatsStream.processBatch]] / [[McvStream.processBatch]] bodies
     * per (table, column) — concurrent metadata-sized legs). The union
     * frame is the replay VEHICLE only: each artifact's partials remain
@@ -1085,23 +1068,19 @@ object Planner {
         s"degenerate histogram bounds for ${h.table}.${h.column}")
       (h.id, h.tag, h.column, mn, mx)
     }
-    val q = s.readStream
+    val replay = s.readStream
       .schema("tbl string, a bigint, b bigint, h double, d double, " +
         "chunk int")
       .option("maxFilesPerTrigger", 1).parquet(incoming)
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    val q = BatchSink.start(replay, base, Trigger.AvailableNow()) {
+      (b, batchId) =>
         val batch = b.drop("chunk")
         batch.persist()
         val counts = batch.groupBy($"tbl").agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         Fan.out(specLegs(spec, art, histBounds, batch, batchId, counts))
         batch.unpersist()
-        ()
-      }
-      .start()
+    }
     require(q.awaitTermination(600000), "catalog artifact stream timeout")
     writeDescriptors(s, spec, art, histBounds)
     UserCatalog(art, System.nanoTime(), sig)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Behavior
@@ -58,17 +58,9 @@ object AnomalyGateStream {
     // read the staged artifact ONCE per stream start; pinned so every
     // micro-batch broadcasts the same tiny table without re-reading
     val stats = s.read.parquet(statsPath).localCheckpoint(true)
-    events.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (clean, anomalies) = splitBatch(batch, stats)
-        clean.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/clean/batch=$batchId")
-        anomalies.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/anomalies/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(events, root, trigger) { (batch, batchId) =>
+      val (clean, anomalies) = splitBatch(batch, stats)
+      BatchSink.write(root, batchId, "clean" -> clean, "anomalies" -> anomalies)
+    }
   }
 }

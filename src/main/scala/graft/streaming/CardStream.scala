@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -29,29 +29,18 @@ import graft.ops.Curation
   */
 object CardStream {
 
-  /** One micro-batch's additive card partial — pure; `batch` carries
-    * (source, text). The literal same function as the batch card. */
-  private[streaming] def batchCard(batch: DataFrame): DataFrame =
-    Curation.additiveCard(batch)
-
-  /** The per-trigger body, factored so specs can exercise a replay. */
+  /** The per-trigger body, factored so specs can exercise a replay: the
+    * batch's additive card partial — the literal same function as the
+    * batch card — with |sources| rows, one file per batch partition. */
   private[streaming] def writeBatch(batch: DataFrame, root: String,
       batchId: Long): Unit =
-    batchCard(batch)
-      .coalesce(1) // |sources| rows — one file per batch partition
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/card/batch=$batchId")
+    BatchSink.write(root, batchId,
+      "card" -> Curation.additiveCard(batch).coalesce(1))
 
   /** Streaming driver. `docs` must carry (source string, text string). */
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, root, batchId)
-      }
-      .start()
+    BatchSink.start(docs, root, trigger)(writeBatch(_, root, _))
 
   /** The standing card: per-source sums over every landed batch partial —
     * metadata-sized input (|batches| · |sources| rows). */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -35,28 +35,16 @@ import graft.ops.TextAnalysis
   */
 object ChunkStream {
 
-  /** One micro-batch's chunks — pure; `batch` carries (doc_id, text). */
-  private[streaming] def batchChunks(batch: DataFrame): DataFrame =
-    TextAnalysis.chunkDocs(batch)
-
   /** The per-trigger body, factored so a replay can be exercised directly
     * in specs: chunk the batch and overwrite its own index partition. */
   private[streaming] def writeBatch(batch: DataFrame, root: String,
       batchId: Long): Unit =
-    batchChunks(batch)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/chunks/batch=$batchId")
+    BatchSink.write(root, batchId, "chunks" -> TextAnalysis.chunkDocs(batch))
 
   /** Streaming driver. `docs` must carry (doc_id long, text string). */
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, root, batchId)
-      }
-      .start()
+    BatchSink.start(docs, root, trigger)(writeBatch(_, root, _))
 
   /** The standing chunk index across every landed batch. `batch` arrives
     * as the inferred partition column on read. */

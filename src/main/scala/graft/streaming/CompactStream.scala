@@ -247,13 +247,7 @@ object CompactStream {
     * is the staged S32 generation. */
   def run(rows: DataFrame, root: String, bounds: ManifestStream.ZBounds,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, bounds)
-      }
-      .start()
+    BatchSink.start(rows, root, trigger)(processBatch(_, _, root, bounds))
 
   /** Session conf: fire [[vacuum]] from [[runDrift]]'s own firing path
     * whenever this many complete generations stand BEYOND the retention
@@ -312,13 +306,7 @@ object CompactStream {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val s = rows.sparkSession
     ManifestStream.stageInitialBounds(s, root, initial)
-    rows.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchDrift(batch, batchId, root)
-      }
-      .start()
+    BatchSink.start(rows, root, trigger)(processBatchDrift(_, _, root))
   }
 
   /** The view-pruned read — the SHARED pruned-read body

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.multimodal.Multimodal
@@ -65,21 +65,14 @@ object ContainerGateStream {
   def run(media: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
-    media.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val classified = Multimodal.classifyContainers(batch).persist()
-        try {
-          val (ok, quarantine) = split(classified)
-          ok.write.mode(SaveMode.Overwrite)
-            .partitionBy("container")
-            .parquet(s"$root/media/batch=$batchId")
-          quarantine.write.mode(SaveMode.Overwrite)
-            .parquet(s"$root/quarantine/batch=$batchId")
-        } finally { classified.unpersist(); () }
-        ()
-      }
-      .start()
+    BatchSink.start(media, root, trigger) { (batch, batchId) =>
+      val classified = Multimodal.classifyContainers(batch).persist()
+      try {
+        val (ok, quarantine) = split(classified)
+        BatchSink.write(root, batchId,
+          BatchSink.Output("media", ok, partitionBy = Some("container")),
+          "quarantine" -> quarantine)
+      } finally { classified.unpersist(); () }
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -71,23 +71,12 @@ object DecontamStream {
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
     val ev = evalHashes(s, corpusDir).localCheckpoint(true)
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val (contam, clean) = splitBatch(spark, batch, ev)
-        // overwrite-by-batch partitions: a replayed batch re-derives the
-        // identical split (pure function of batch × fixed eval set); the
-        // two disjoint-sink writes overlap through the bounded fan (both
-        // hang off the checkpointed hit set — guide §2.6, r21)
-        graft.ops.Fan.out(Seq(
-          () => contam.write.mode(SaveMode.Overwrite)
-            .parquet(s"$root/contam/batch=$batchId"),
-          () => clean.write.mode(SaveMode.Overwrite)
-            .parquet(s"$root/clean/batch=$batchId")))
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // a replayed batch re-derives the identical split (pure function of
+      // batch × fixed eval set); both outputs hang off the checkpointed
+      // hit set
+      val (contam, clean) = splitBatch(batch.sparkSession, batch, ev)
+      BatchSink.write(root, batchId, "contam" -> contam, "clean" -> clean)
+    }
   }
 }

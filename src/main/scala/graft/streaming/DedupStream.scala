@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -130,42 +130,25 @@ object DedupStream {
   def run(docs: DataFrame, corpusDir: String, root: String,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
-    val stateDir = s"$root/state"
-    val dupsDir = s"$root/dups"
-    val cleanDir = s"$root/clean"
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val t0 = System.nanoTime()
-        val prior = standingBefore(spark, corpusDir, stateDir, batchId)
-        val (pairs, accepted) = splitBatch(spark, batch, prior)
-        val tSplit = (System.nanoTime() - t0) / 1e9
-        // clean = NOT flagged (includes docs too short to shingle — they
-        // cannot near-dup anything); state = the shingled accepts only
-        val dupIds = pairs.select(col("doc_a").as("doc_id")).distinct()
-        // The three sink writes all hang off the CHECKPOINTED pair/accept
-        // frames and land in three disjoint batch=<id> directories, each
-        // an idempotent overwrite (replay safety comes from overwrite-by-
-        // partition + standingBefore's self-exclusion, not from write
-        // order) — so they overlap through the bounded fan instead of
-        // running as three serialized jobs per trigger (guide §2.6; r21,
-        // VERDICT r20 #6). DedupStreamSpec's replay leg still proves a
-        // re-run batch re-derives the identical split.
-        graft.ops.Fan.out(Seq(
-          () => pairs.write.mode(SaveMode.Overwrite)
-            .parquet(s"$dupsDir/batch=$batchId"),
-          () => batch.join(dupIds, Seq("doc_id"), "left_anti")
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$cleanDir/batch=$batchId"),
-          () => accepted.write.mode(SaveMode.Overwrite)
-            .parquet(s"$stateDir/batch=$batchId")))
-        System.err.println(f"[dedup-stream] batch $batchId: " +
-          f"split ${tSplit}%.2fs writes " +
-          f"${(System.nanoTime() - t0) / 1e9 - tSplit}%.2fs")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val t0 = System.nanoTime()
+      val prior = standingBefore(spark, corpusDir, s"$root/state", batchId)
+      val (pairs, accepted) = splitBatch(spark, batch, prior)
+      val tSplit = (System.nanoTime() - t0) / 1e9
+      // clean = NOT flagged (includes docs too short to shingle — they
+      // cannot near-dup anything); state = the shingled accepts only.
+      // All three outputs hang off the CHECKPOINTED pair/accept frames;
+      // replay safety comes from overwrite-by-partition + standingBefore's
+      // self-exclusion, not from write order. DedupStreamSpec's replay
+      // leg proves a re-run batch re-derives the identical split.
+      val dupIds = pairs.select(col("doc_a").as("doc_id")).distinct()
+      BatchSink.write(root, batchId, "dups" -> pairs,
+        "clean" -> batch.join(dupIds, Seq("doc_id"), "left_anti"),
+        "state" -> accepted)
+      System.err.println(f"[dedup-stream] batch $batchId: " +
+        f"split ${tSplit}%.2fs writes " +
+        f"${(System.nanoTime() - t0) / 1e9 - tSplit}%.2fs")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -30,25 +30,15 @@ import graft.ops.{TextAnalysis, Versioning}
   */
 object DriftStream {
 
-  /** Per-batch per-source histogram partial — pure; `batch` carries
-    * (source, text). Shares q106/q122's bucketing verbatim. */
-  private[streaming] def batchHistogram(batch: DataFrame): DataFrame =
-    TextAnalysis.lengthHistogramBy(batch, "source")
-
-  /** Streaming driver. `docs` must carry (source string, text string). */
+  /** Streaming driver. `docs` must carry (source string, text string);
+    * each batch's partial shares q106/q122's bucketing verbatim. */
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchHistogram(batch)
-          .coalesce(1) // ≤ 256·|sources| rows — one file per batch
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/hist/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // ≤ 256·|sources| rows — one file per batch
+      BatchSink.write(root, batchId,
+        "hist" -> TextAnalysis.lengthHistogramBy(batch, "source").coalesce(1))
+    }
 
   /** The standing per-source histogram: sum of all batch partials.
     * Metadata-sized input (|batches| · ≤ 256·|sources| rows). */

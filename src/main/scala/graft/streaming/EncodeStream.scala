@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.TextAnalysis
@@ -36,9 +36,8 @@ object EncodeStream {
     * batch's own stats partition. */
   private[streaming] def encodeBatch(batch: DataFrame, batchId: Long,
       merges: Seq[(Long, String, String, Long)], root: String): Unit =
-    TextAnalysis.encodeDocs(batch, merges)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/stats/batch=$batchId")
+    BatchSink.write(root, batchId,
+      "stats" -> TextAnalysis.encodeDocs(batch, merges))
 
   /** Streaming driver. `docs` must carry (doc_id long, text string); the
     * merge artifact is staged once from `corpusDir` before the stream
@@ -47,12 +46,6 @@ object EncodeStream {
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
     val merges = TextAnalysis.cachedMerges(s, corpusDir)
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        encodeBatch(batch, batchId, merges, root)
-      }
-      .start()
+    BatchSink.start(docs, root, trigger)(encodeBatch(_, _, merges, root))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -30,24 +30,14 @@ import graft.ops.TextAnalysis
   */
 object HistogramStream {
 
-  /** Per-batch ≤ 256-row histogram — pure; `batch` carries (text). */
-  private[streaming] def batchHistogram(batch: DataFrame): DataFrame =
-    TextAnalysis.lengthHistogram(batch)
-
   /** Streaming driver. `docs` must carry (doc_id long, text string). */
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchHistogram(batch)
-          .coalesce(1) // ≤ 256 rows — one file per batch partition
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/hist/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // ≤ 256 rows — one file per batch partition
+      BatchSink.write(root, batchId,
+        "hist" -> TextAnalysis.lengthHistogram(batch).coalesce(1))
+    }
 
   /** The standing merged histogram: sum of all batch partials per bucket.
     * Metadata-sized input (|batches| · ≤ 256 rows). */

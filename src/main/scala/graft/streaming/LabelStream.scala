@@ -116,23 +116,18 @@ object LabelStream {
   def run(pairs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
-    pairs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import s.implicits._
-        val prev = latestVersionBelow(s, root, batchId)
-          .map(v => s.read.parquet(s"$root/labels/v=$v"))
-          .getOrElse(emptyLabels(s))
-        val delta = batch.select($"doc_a", $"doc_b")
-        if (effective(prev, delta)) {
-          val (labels, _) = Dedup.mergeLabels(prev, delta)
-          labels.write.mode(SaveMode.Overwrite)
-            .parquet(s"$root/labels/v=$batchId")
-          compact(s, root)
-        }
-        ()
+    BatchSink.start(pairs, root, trigger) { (batch, batchId) =>
+      import s.implicits._
+      val prev = latestVersionBelow(s, root, batchId)
+        .map(v => s.read.parquet(s"$root/labels/v=$v"))
+        .getOrElse(emptyLabels(s))
+      val delta = batch.select($"doc_a", $"doc_b")
+      if (effective(prev, delta)) {
+        val (labels, _) = Dedup.mergeLabels(prev, delta)
+        labels.write.mode(SaveMode.Overwrite)
+          .parquet(s"$root/labels/v=$batchId")
+        compact(s, root)
       }
-      .start()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -42,24 +42,14 @@ object McvStream {
     * partition — shared by [[run]] and the q205 combined maintenance
     * pass ([[graft.ops.Planner]]). */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
-      root: String): Unit = {
-    batchCounts(batch)
-      .coalesce(1) // value-domain rows — one file per batch partition
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/mcv/batch=$batchId")
-    ()
-  }
+      root: String): Unit =
+    // value-domain rows — one file per batch partition
+    BatchSink.write(root, batchId, "mcv" -> batchCounts(batch).coalesce(1))
 
   /** Streaming driver. `values` must carry (v bigint). */
   def run(values: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root)
-      }
-      .start()
+    BatchSink.start(values, root, trigger)(processBatch(_, _, root))
 
   /** The standing count table: per-value sums over all batch partials —
     * metadata-sized input, and EQUAL to the one-pass count table of the
@@ -160,24 +150,16 @@ object McvStream {
     val headMass = head.map(_._2).sum
     val rows = head.toSeq :+
       ((None: Option[Long], total - headMass, ndv - head.length, true))
-    rows.toDF("v", "n", "d", "tail")
-      .coalesce(1) // ≤ m+1 rows by construction
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/mcv/batch=$batchId")
-    ()
+    // ≤ m+1 rows by construction
+    BatchSink.write(root, batchId,
+      "mcv" -> rows.toDF("v", "n", "d", "tail").coalesce(1))
   }
 
   /** Streaming driver for the BOUNDED mode. `values` must carry
     * (v bigint). */
   def runBounded(values: DataFrame, root: String, m: Int = BoundSlots,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBounded(batch, batchId, root, m)
-      }
-      .start()
+    BatchSink.start(values, root, trigger)(processBatchBounded(_, _, root, m))
 
   /** The standing HEAD of a bounded artifact: per-value sums over the
     * head rows of every batch partial. ≤ |batches|·m input rows. */

@@ -131,13 +131,8 @@ object MergeStream {
       keyCol: String = "k", seqCol: String = "seq", nBuckets: Int = 16,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch.sparkSession, batch, targetDir, s"$root/audit",
-          keyCol, seqCol, nBuckets, batchId)
-        ()
-      }
-      .start()
+    BatchSink.start(source, root, trigger) { (batch, batchId) =>
+      mergeBatch(batch.sparkSession, batch, targetDir, s"$root/audit",
+        keyCol, seqCol, nBuckets, batchId)
+    }
 }

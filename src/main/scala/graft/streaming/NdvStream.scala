@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -52,24 +52,14 @@ object NdvStream {
     * pass ([[graft.ops.Planner]]), so the engine-driven and the
     * audit-driven artifact cannot drift. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
-      root: String): Unit = {
-    batchSketch(batch)
-      .coalesce(1) // ≤ K rows — one file per batch partition
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/ndv/batch=$batchId")
-    ()
-  }
+      root: String): Unit =
+    // ≤ K rows — one file per batch partition
+    BatchSink.write(root, batchId, "ndv" -> batchSketch(batch).coalesce(1))
 
   /** Streaming driver. `values` must carry (v bigint). */
   def run(values: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root)
-      }
-      .start()
+    BatchSink.start(values, root, trigger)(processBatch(_, _, root))
 
   /** The standing merged sketch: min-K over the distinct hashes of all
     * batch partials — metadata-sized input (|batches| · ≤ K rows),

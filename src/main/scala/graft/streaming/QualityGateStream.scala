@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -53,19 +53,11 @@ object QualityGateStream {
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (kept, dropped) = splitBatch(batch)
-        // overwrite-by-batch: a replay re-derives the identical split
-        // (pure function of the batch — no cross-batch state anywhere)
-        kept.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/kept/batch=$batchId")
-        dropped.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/dropped/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // a replay re-derives the identical split (pure function of the
+      // batch — no cross-batch state anywhere)
+      val (kept, dropped) = splitBatch(batch)
+      BatchSink.write(root, batchId, "kept" -> kept, "dropped" -> dropped)
+    }
   }
 }

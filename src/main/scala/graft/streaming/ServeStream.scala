@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -45,10 +45,8 @@ object ServeStream {
     // namespace, not the corpus's — a coincidental q_id == vec_id
     // collision must not drop that corpus vector from the candidates
     // (ADVICE r10; corpus-member self-exclusion is q59's frame, not ours)
-    Similarity.ivfProbeRank(batch, assigned, cells, mats, k, nprobe,
-        excludeSelf = false)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/results/batch=$batchId")
+    BatchSink.write(root, batchId, "results" -> Similarity.ivfProbeRank(
+      batch, assigned, cells, mats, k, nprobe, excludeSelf = false))
 
   /** Streaming driver. `queries` must carry (q_id long, q_emb
     * array<float>); the index side is staged once per session from
@@ -60,13 +58,8 @@ object ServeStream {
       implicit s: SparkSession): StreamingQuery = {
     val (cells, mats) = Similarity.cachedCentroidMeta(s, corpusDir)
     val assigned = Similarity.stagedAssigned(s, corpusDir)
-    queries.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        serveBatch(batch, batchId, assigned, cells, mats, root, k, nprobe)
-      }
-      .start()
+    BatchSink.start(queries, root, trigger)(
+      serveBatch(_, _, assigned, cells, mats, root, k, nprobe))
   }
 
   /** All served results in (q_id, rank) order — the consumer's view. */

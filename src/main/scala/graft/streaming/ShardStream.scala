@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -55,21 +55,14 @@ object ShardStream {
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // overwrite-by-batch: replay re-derives the identical routing
-        // (pure function of the batch — no cross-batch state anywhere)
-        route(batch)
-          .select(col("shard"), col("pos"), col("doc_id"), col("rand_key"),
-            col("text"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("shard")
-          .parquet(s"$root/shards/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // replay re-derives the identical routing (pure function of the
+      // batch — no cross-batch state anywhere)
+      val routed = route(batch).select(col("shard"), col("pos"),
+        col("doc_id"), col("rand_key"), col("text"))
+      BatchSink.write(root, batchId,
+        BatchSink.Output("shards", routed, partitionBy = Some("shard")))
+    }
   }
 
   /** The loader's view of ONE shard: its documents in the deterministic

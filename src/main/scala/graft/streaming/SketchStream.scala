@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -36,24 +36,14 @@ import graft.ops.TextAnalysis
   */
 object SketchStream {
 
-  /** Per-batch ≤ 3072-row CM sketch — pure; `batch` carries (text). */
-  private[streaming] def batchSketch(batch: DataFrame): DataFrame =
-    TextAnalysis.cmSketch(batch)
-
   /** Streaming driver. `docs` must carry (doc_id long, text string). */
   def run(docs: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchSketch(batch)
-          .coalesce(1) // ≤ 3072 rows — one file per batch partition
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/sketch/batch=$batchId")
-        ()
-      }
-      .start()
+    BatchSink.start(docs, root, trigger) { (batch, batchId) =>
+      // ≤ 3072 rows — one file per batch partition
+      BatchSink.write(root, batchId,
+        "sketch" -> TextAnalysis.cmSketch(batch).coalesce(1))
+    }
 
   /** The standing merged sketch: cells summed across batch partials —
     * the CM merge. Metadata-sized input (|batches| · ≤ 3072 rows). */

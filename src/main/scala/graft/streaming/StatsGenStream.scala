@@ -130,9 +130,8 @@ object StatsGenStream {
   def stageImported(s: SparkSession, root: String, mn: Double, mx: Double,
       carry: DataFrame): Unit =
     if (currentGen(s, root).isEmpty) {
-      carry.select(col("bin"), col("n"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/hist/g=0/batch=-1")
+      BatchSink.write(root, -1L,
+        "hist/g=0" -> carry.select(col("bin"), col("n")).coalesce(1))
       writeGen(s, root, Gen(0L, mn, mx))
     }
 
@@ -228,9 +227,8 @@ object StatsGenStream {
     // uniform batch=<id> partition layout (foreachBatch ids are ≥ 0);
     // manifest LAST: its existence is the commit point — a crash between
     // carry and manifest replays the whole election
-    carried.toDF("bin", "n").coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/hist/g=${gen.g}/batch=-1")
+    BatchSink.write(root, -1L,
+      s"hist/g=${gen.g}" -> carried.toDF("bin", "n").coalesce(1))
     writeGen(s, root, gen)
     gen
   }
@@ -247,28 +245,21 @@ object StatsGenStream {
       if (oobMilli(s, root, cur.g, batchId) > DriftMilli) elect(s, root, cur)
       else cur
     val rows = batch.where(col("p").isNotNull).localCheckpoint(true)
-    StatsStream.batchHistogram(rows, gen.mn, gen.mx)
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/hist/g=${gen.g}/batch=$batchId")
-    rows.agg(count(lit(1)).as("n"),
-        count(when(col("p") < gen.mn || col("p") > gen.mx, 1)).as("oob"),
-        coalesce(min(col("p")), lit(gen.mn)).as("mn"),
-        coalesce(max(col("p")), lit(gen.mx)).as("mx"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/range/g=${gen.g}/batch=$batchId")
+    BatchSink.write(root, batchId,
+      s"hist/g=${gen.g}" ->
+        StatsStream.batchHistogram(rows, gen.mn, gen.mx).coalesce(1),
+      s"range/g=${gen.g}" -> rows.agg(count(lit(1)).as("n"),
+          count(when(col("p") < gen.mn || col("p") > gen.mx, 1)).as("oob"),
+          coalesce(min(col("p")), lit(gen.mn)).as("mn"),
+          coalesce(max(col("p")), lit(gen.mx)).as("mx"))
+        .coalesce(1))
   }
 
   /** Streaming driver. `prices` must carry (p double); stage generation
     * 0 with [[stageInitial]] before starting. */
   def run(prices: DataFrame, root: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    prices.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root)
-      }
-      .start()
+    BatchSink.start(prices, root, trigger)(processBatch(_, _, root))
 
   /** The standing histogram: the CURRENT generation's carry + batch
     * partials summed per bin — metadata-sized input. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -63,25 +63,17 @@ object StatsStream {
     * overwritten into its batch partition — shared by [[run]] and the
     * q205 combined maintenance pass ([[graft.ops.Planner]]). */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
-      root: String, mn: Double, mx: Double): Unit = {
-    batchHistogram(batch, mn, mx)
-      .coalesce(1) // ≤ 4096 rows — one file per batch partition
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/hist/batch=$batchId")
-    ()
-  }
+      root: String, mn: Double, mx: Double): Unit =
+    // ≤ 4096 rows — one file per batch partition
+    BatchSink.write(root, batchId,
+      "hist" -> batchHistogram(batch, mn, mx).coalesce(1))
 
   /** Streaming driver. `prices` must carry (p double); `bounds` is the
     * staged generation from [[stageBounds]]. */
   def run(prices: DataFrame, root: String, bounds: (Double, Double),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    prices.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, bounds._1, bounds._2)
-      }
-      .start()
+    BatchSink.start(prices, root, trigger)(
+      processBatch(_, _, root, bounds._1, bounds._2))
 
   /** The standing merged histogram: sum of batch partials per bin —
     * metadata-sized input (|batches| · ≤ 4096 rows). */

@@ -76,12 +76,10 @@ object VectorIndexStream {
     * the S8 idempotency protocol, exercised directly by the spec. */
   private[streaming] def writeBatch(batch: DataFrame, batchId: Long,
       root: String, cells: Array[Long], cents: Array[Array[Double]]): Unit =
-    batch
-      .withColumn("cell", element_at(
-        graft.functions.NearestCellsUtil.column(col("embedding"), cells, cents, 1), 1))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$root/${currentGen(root)}/batch=$batchId")
+    BatchSink.write(root, batchId, BatchSink.Output(currentGen(root),
+      batch.withColumn("cell", element_at(
+        graft.functions.NearestCellsUtil.column(col("embedding"), cells, cents, 1), 1)),
+      partitionBy = Some("cell")))
 
   /** Streaming driver. `vecs` must carry (vec_id long, embedding
     * array<float>). Cells come from the active generation's quantizer
@@ -90,13 +88,7 @@ object VectorIndexStream {
       trigger: Trigger = Trigger.AvailableNow())(
       implicit s: SparkSession): StreamingQuery = {
     val (cells, cents) = genCentroids(s, root, corpusDir)
-    vecs.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, root, cells, cents)
-      }
-      .start()
+    BatchSink.start(vecs, root, trigger)(writeBatch(_, _, root, cells, cents))
   }
 
   /** Probe the streamed index: exact cosine top-k inside the query's
@@ -152,11 +144,10 @@ object VectorIndexStream {
       else s"index-g${gen.stripPrefix("index-g").toInt + 1}"
     val nextDir = s"$root/$nextName"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-    indexed
-      .withColumn("cell", element_at(
-        graft.functions.NearestCellsUtil.column($"embedding", cellIds, mats, 1), 1))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$nextDir/batch=-1")
+    BatchSink.write(root, -1L, BatchSink.Output(nextName,
+      indexed.withColumn("cell", element_at(
+        graft.functions.NearestCellsUtil.column($"embedding", cellIds, mats, 1), 1)),
+      partitionBy = Some("cell")))
     cellIds.zip(mats).toSeq.map { case (c, m) => (c, m.toSeq) }
       .toDF("cell", "centroid")
       .coalesce(1) // nlist rows of metadata — one file by design

@@ -60,7 +60,7 @@ class DriftStreamSpec extends SparkSpec {
 
     // replay purity: re-deriving batch 0's partial equals the stored one
     val b0 = Seq(("a", doc(10))).toDF("source", "text")
-    val replay = DriftStream.batchHistogram(b0).collect()
+    val replay = graft.ops.TextAnalysis.lengthHistogramBy(b0, "source").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val stored = s.read.parquet(s"$root/hist/batch=0").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap

@@ -48,7 +48,7 @@ class HistogramStreamSpec extends SparkSpec {
 
     // replay purity: re-deriving batch 0's partial equals the stored one
     val b0 = Seq((1L, doc(10)), (2L, doc(40))).toDF("doc_id", "text")
-    val replay = HistogramStream.batchHistogram(b0).collect()
+    val replay = graft.ops.TextAnalysis.lengthHistogram(b0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val stored = s.read.parquet(s"$root/hist/batch=0").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

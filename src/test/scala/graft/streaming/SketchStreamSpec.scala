@@ -55,7 +55,7 @@ class SketchStreamSpec extends SparkSpec {
     assert(!est.contains("zzz"))
 
     // replay purity: re-deriving batch 0's partial equals the stored one
-    val replay = cells(SketchStream.batchSketch(
+    val replay = cells(graft.ops.TextAnalysis.cmSketch(
       Seq((1L, "a a b"), (2L, "c")).toDF("doc_id", "text")))
     val stored = cells(s.read.parquet(s"$root/sketch/batch=0"))
     assert(replay === stored)
