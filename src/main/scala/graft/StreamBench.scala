@@ -613,7 +613,7 @@ object StreamBench {
   private def driftCount(spark: SparkSession, root: String, sfDir: String,
       n: Long, log: String => Unit): Long = {
     import spark.implicits._
-    if (!new java.io.File(s"$root/hist").exists()) {
+    if (streaming.BatchSink.ids(spark, s"$root/hist").isEmpty) {
       // ADVICE r9: a corpus yielding zero micro-batches leaves no hist
       // directory; that is a measured-empty seam, not a failure — return
       // it explicitly instead of letting the parquet read throw.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.BatchSink
 
 /** Warehouse-maintenance operators: the mutation verbs a managed lake
   * needs around the read-only analytics — MERGE (upsert) and targeted
@@ -102,12 +103,6 @@ object Maintenance {
   private[graft] def evictForgetLake(s: SparkSession, dir: String): Unit =
     lakeCache.evict(s, dir)
 
-  private def partitionDirs(path: String): Set[Long] = {
-    val fs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-    fs.filter(f => f.isDirectory && f.getName.startsWith("day_bucket="))
-      .map(_.getName.stripPrefix("day_bucket=").toLong).toSet
-  }
-
   /** Targeted deletion with partition-pruned staged rewrite (the
     * right-to-be-forgotten shape): events live in a day-bucketed lake;
     * forgetting the `user_id % 97 = 0` users must rewrite ONLY the
@@ -178,7 +173,7 @@ object Maintenance {
     import s.implicits._
     val untouched = s.read.parquet(lake)
       .filter(!$"day_bucket".cast("long").isin(affected: _*))
-    if (partitionDirs(staged).isEmpty) untouched
+    if (BatchSink.ids(s, staged, "day_bucket").isEmpty) untouched
     else untouched.unionByName(s.read.parquet(staged))
   }
 
@@ -189,10 +184,10 @@ object Maintenance {
   private def affectedOf(s: SparkSession, lake: String,
       staged: String): Seq[Long] = {
     import s.implicits._
-    (partitionDirs(staged) ++
+    (BatchSink.ids(s, staged, "day_bucket") ++
       s.read.parquet(lake).filter($"user_id" % 97 === 0)
         .select($"day_bucket".cast("long")).distinct()
-        .collect().map(_.getLong(0))).toSeq.sorted
+        .collect().map(_.getLong(0))).distinct.sorted
   }
 
   /** Physically apply the staged rewrite — the file-system analog of the

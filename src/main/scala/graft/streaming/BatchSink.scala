@@ -2,7 +2,8 @@ package graft.streaming
 
 import scala.language.implicitConversions
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Fan
@@ -19,7 +20,13 @@ import graft.ops.Fan
   * [[start]] is the only place a seam spells the stream framing
   * (checkpoint at `<root>/ckpt`, trigger, foreachBatch); [[write]] is the
   * only place it spells the overwrite. A crash harness that wants to
-  * throw after k of n sink writes injects at [[write]]. */
+  * throw after k of n sink writes injects at [[write]].
+  *
+  * The read side is [[ids]]: which `<key>=<id>` directories a reader
+  * sees, and (with `committed`) when one counts as committed — the
+  * writer's `_SUCCESS` marker landed. Every probe goes through the
+  * root's own Hadoop scheme, so an hdfs:/s3a: root reads what was
+  * written there, and an unregistered scheme throws. */
 private[graft] object BatchSink {
 
   /** One output of a batch: `frame` overwritten into
@@ -58,5 +65,36 @@ private[graft] object BatchSink {
     }
     if (outputs.size == 1) one(outputs.head)
     else Fan.out(outputs.map(o => () => one(o)))
+  }
+
+  /** The ascending ids of the `<key>=<id>` subdirectories of `dir`,
+    * listed through the Hadoop FileSystem of `dir`'s scheme. An absent
+    * `dir` has none. With `committed`, only directories holding
+    * `_SUCCESS` count, so a torn write is invisible. A `<key>=` name
+    * whose id is not a long throws. */
+  def ids(s: SparkSession, dir: String, key: String = "batch",
+      committed: Boolean = false): Seq[Long] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$key=")
+        && (!committed || fs.exists(new Path(st.getPath, "_SUCCESS"))))
+      .map(_.getPath.getName.stripPrefix(s"$key=").toLong)
+      .sorted
+  }
+
+  /** True iff `dir` holds the writer's `_SUCCESS` marker. */
+  def committed(s: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir, "_SUCCESS")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Recursively delete `path` through its scheme's FileSystem; an
+    * absent path is a no-op. */
+  def delete(s: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
   }
 }

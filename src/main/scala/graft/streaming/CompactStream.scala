@@ -66,26 +66,13 @@ object CompactStream {
   /** Merged-file target count for the executed plan (q206's knob). */
   val OutFiles = 8
 
-  private def fs(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
   /** Every COMPLETE compacted generation under `root`, ascending — a
     * generation is complete when Spark's `_SUCCESS` marker landed with
     * its manifest (the commit point; an orphan from a crashed attempt
     * has no marker and is invisible). */
   private[streaming] def completeGens(s: SparkSession, root: String)
-      : Seq[Long] = {
-    val base = new Path(s"$root/compact")
-    val f = fs(s, base)
-    if (!f.exists(base)) Seq.empty
-    else f.listStatus(base).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest_gen=") =>
-        n.stripPrefix("manifest_gen=").toLong
-      }
-      .filter(g => f.exists(new Path(s"$root/compact/manifest_gen=$g/_SUCCESS")))
-      .sorted
-  }
+      : Seq[Long] =
+    BatchSink.ids(s, s"$root/compact", "manifest_gen", committed = true)
 
   /** The highest COMPLETE compacted generation under `root`, if any. */
   private[streaming] def latestGen(s: SparkSession, root: String)
@@ -100,11 +87,7 @@ object CompactStream {
     * loudly, not silently shrink the view to generation-only rows. */
   private def rawManifest(s: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir = new Path(s"$root/manifest")
-    val f = fs(s, dir)
-    val hasBatches = f.exists(dir) && f.listStatus(dir).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (!hasBatches)
+    if (BatchSink.ids(s, s"$root/manifest").isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(ManifestStream.ManifestSchema.fields :+
           StructField("batch", LongType)))
@@ -235,10 +218,8 @@ object CompactStream {
       root: String, b: ManifestStream.ZBounds): Unit = {
     val s = batch.sparkSession
     for (d <- Seq(s"$root/compact/manifest_gen=$batchId",
-        s"$root/compact/gen=$batchId")) {
-      val p = new Path(d)
-      fs(s, p).delete(p, true)
-    }
+        s"$root/compact/gen=$batchId"))
+      BatchSink.delete(s, d)
     ManifestStream.processBatch(batch, batchId, root, b)
     maintain(s, root, batchId)
   }
@@ -281,10 +262,8 @@ object CompactStream {
       root: String): Unit = {
     val s = batch.sparkSession
     for (d <- Seq(s"$root/compact/manifest_gen=$batchId",
-        s"$root/compact/gen=$batchId")) {
-      val p = new Path(d)
-      fs(s, p).delete(p, true)
-    }
+        s"$root/compact/gen=$batchId"))
+      BatchSink.delete(s, d)
     ManifestStream.processBatchDrift(batch, batchId, root)
     maintain(s, root, batchId)
     val every = scala.util.Try(
@@ -383,15 +362,8 @@ object CompactStream {
         .select("path").collect().map(_.getString(0))
     }.toSet
     var dataDeleted = 0L
-    var manifestDeleted = 0L
-    def eachSubdir(dir: String)(f: (String, Path) => Unit): Unit = {
-      val p = new Path(dir)
-      val sys = fs(s, p)
-      if (sys.exists(p))
-        sys.listStatus(p).foreach(st => f(st.getPath.getName, st.getPath))
-    }
     def deleteUnreferencedUnder(dir: Path): Unit = {
-      val sys = fs(s, dir)
+      val sys = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
       def walk(p: Path): Unit =
         sys.listStatus(p).foreach { st =>
           if (st.isDirectory) walk(st.getPath)
@@ -412,30 +384,19 @@ object CompactStream {
     }
     // raw batches at or below the oldest retained generation: only
     // paths carried forward by a retained manifest survive
-    eachSubdir(s"$root/data") { (name, p) =>
-      if (name.startsWith("batch=") &&
-        name.stripPrefix("batch=").toLong <= minR)
-        deleteUnreferencedUnder(p)
-    }
+    BatchSink.ids(s, s"$root/data").filter(_ <= minR)
+      .foreach(b => deleteUnreferencedUnder(new Path(s"$root/data/batch=$b")))
     // superseded merged files (any generation dir — carried larges keep
     // old gen dirs partially alive, so this is per-file)
-    eachSubdir(s"$root/compact") { (name, p) =>
-      if (name.startsWith("gen=")) deleteUnreferencedUnder(p)
-    }
-    // raw manifest partitions describing only absorbed batches
-    eachSubdir(s"$root/manifest") { (name, p) =>
-      if (name.startsWith("batch=") &&
-        name.stripPrefix("batch=").toLong <= minR) {
-        fs(s, p).delete(p, true)
-        manifestDeleted += 1
-      }
-    }
+    BatchSink.ids(s, s"$root/compact", "gen")
+      .foreach(g => deleteUnreferencedUnder(new Path(s"$root/compact/gen=$g")))
+    // raw manifest partitions describing only absorbed batches, then
     // expired generations' manifests (complete ones only)
-    gens.filterNot(retained.contains).foreach { g =>
-      val p = new Path(s"$root/compact/manifest_gen=$g")
-      fs(s, p).delete(p, true)
-      manifestDeleted += 1
-    }
+    val dropped =
+      BatchSink.ids(s, s"$root/manifest").filter(_ <= minR)
+        .map(b => s"$root/manifest/batch=$b") ++
+      gens.filterNot(retained.contains)
+        .map(g => s"$root/compact/manifest_gen=$g")
     // drift-lifecycle debris on runDrift roots: frac telemetry behind
     // the decision window (the election looks back DriftWindow−1
     // batches, never further) and bounds generations superseded by the
@@ -444,36 +405,19 @@ object CompactStream {
     // no reader). Without this the per-batch telemetry would be the one
     // partition set the vacuum verb lets grow without bound.
     val bDir = ManifestStream.boundsDir(root)
-    val fracIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-    eachSubdir(s"$bDir/frac") { (name, _) =>
-      if (name.startsWith("batch=")) fracIds += name.stripPrefix("batch=").toLong
+    val fracIds = BatchSink.ids(s, s"$bDir/frac")
+    val staleFrac = fracIds.lastOption.toSeq.flatMap { last =>
+      val keepFrom = last - (ManifestStream.DriftWindow - 1)
+      fracIds.filter(_ < keepFrom).map(b => s"$bDir/frac/batch=$b")
     }
-    if (fracIds.nonEmpty) {
-      val keepFrom = fracIds.max - (ManifestStream.DriftWindow - 1)
-      eachSubdir(s"$bDir/frac") { (name, p) =>
-        if (name.startsWith("batch=") &&
-          name.stripPrefix("batch=").toLong < keepFrom) {
-          fs(s, p).delete(p, true)
-          manifestDeleted += 1
+    val staleBounds =
+      BatchSink.ids(s, bDir, "gen", committed = true).lastOption.toSeq
+        .flatMap { latest =>
+          BatchSink.ids(s, bDir, "gen").filter(_ < latest)
+            .map(g => s"$bDir/gen=$g")
         }
-      }
-    }
-    val boundGens = scala.collection.mutable.ArrayBuffer.empty[Long]
-    eachSubdir(bDir) { (name, p) =>
-      if (name.startsWith("gen=") &&
-        fs(s, p).exists(new Path(p, "_SUCCESS")))
-        boundGens += name.stripPrefix("gen=").toLong
-    }
-    if (boundGens.nonEmpty) {
-      val latest = boundGens.max
-      eachSubdir(bDir) { (name, p) =>
-        if (name.startsWith("gen=") &&
-          name.stripPrefix("gen=").toLong < latest) {
-          fs(s, p).delete(p, true)
-          manifestDeleted += 1
-        }
-      }
-    }
-    VacuumStats(dataDeleted, manifestDeleted, retained)
+    (dropped ++ staleFrac ++ staleBounds).foreach(BatchSink.delete(s, _))
+    VacuumStats(dataDeleted,
+      (dropped.size + staleFrac.size + staleBounds.size).toLong, retained)
   }
 }

@@ -109,10 +109,7 @@ object DedupStream {
       stateDir: String, batchId: Long): StandingIndex = {
     import s.implicits._
     val corpus = warmStandingIndex(s, corpusDir)
-    val statePath = new java.io.File(stateDir)
-    if (!statePath.exists() || statePath.listFiles() == null ||
-      !statePath.listFiles().exists(_.getName.startsWith("batch=")))
-      corpus
+    if (BatchSink.ids(s, stateDir).isEmpty) corpus
     else {
       // dir layout state/batch=<id> ⇒ `batch` is an inferred partition
       // column; partition pruning keeps the exclusion metadata-only

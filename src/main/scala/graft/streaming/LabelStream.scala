@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -57,35 +56,23 @@ object LabelStream {
     Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
   }
 
-  /** Committed label versions, via Hadoop's FileSystem API so `root`
-    * resolves under whatever scheme it carries (file:, hdfs:, s3a:, …).
-    * The previous `java.io.File` listing returned None for ANY non-local
-    * root, so every batch would silently merge into an EMPTY base and
-    * overwrite the standing table — a silent label reset (ADVICE r13 /
-    * VERDICT r13 #3). An unregistered or unreachable scheme now throws
-    * and fails the batch instead. */
-  private[streaming] def versions(s: SparkSession, root: String): Seq[Long] = {
-    val dir = new Path(s"$root/labels")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-  }
+  /** Committed label versions (ascending): `v=<id>` directories holding
+    * `_SUCCESS`, listed through `root`'s own scheme ([[BatchSink.ids]]).
+    * A torn version is invisible, and an unregistered or unreachable
+    * scheme throws and fails the batch rather than merging into an empty
+    * base and overwriting the standing table — a silent label reset. */
+  private[streaming] def versions(s: SparkSession, root: String): Seq[Long] =
+    BatchSink.ids(s, s"$root/labels", "v", committed = true)
 
   /** Highest committed label version strictly below `batchId`. */
   private[streaming] def latestVersionBelow(s: SparkSession, root: String,
       batchId: Long): Option[Long] =
-    versions(s, root).filter(_ < batchId)
-      .sorted(Ordering[Long].reverse).headOption
+    versions(s, root).filter(_ < batchId).lastOption
 
   /** Drop all but the newest [[KeepVersions]] committed versions. */
-  private[streaming] def compact(s: SparkSession, root: String): Unit = {
-    val dir = new Path(s"$root/labels")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    versions(s, root).sorted(Ordering[Long].reverse).drop(KeepVersions)
-      .foreach(v => fs.delete(new Path(s"$root/labels/v=$v"), true))
-  }
+  private[streaming] def compact(s: SparkSession, root: String): Unit =
+    versions(s, root).dropRight(KeepVersions)
+      .foreach(v => BatchSink.delete(s, s"$root/labels/v=$v"))
 
   /** Current labels — what a consumer reads between batches. */
   def currentLabels(s: SparkSession, root: String): DataFrame =

@@ -141,9 +141,6 @@ object ManifestStream {
     StructField("mn_d", DoubleType, nullable = false),
     StructField("mx_d", DoubleType, nullable = false)))
 
-  private def fs(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
   /** REAL footer stats of every parquet file under `dir` (recursive —
     * the z-laid batch writes one `fid=<cell>` directory per non-empty
     * cell): (path, rows, min/max p, min/max d) — the writer-commit
@@ -151,7 +148,7 @@ object ManifestStream {
   private[streaming] def harvest(s: SparkSession, dir: String): Seq[Row] = {
     val conf = s.sparkContext.hadoopConfiguration
     val d0 = new Path(dir)
-    val f = fs(s, d0)
+    val f = d0.getFileSystem(conf)
     def walk(p: Path): Seq[Path] =
       f.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath)
@@ -276,16 +273,7 @@ object ManifestStream {
     * staged as gen=-1 (before any batch id) by [[runDrift]]. */
   private[streaming] def latestBoundsGen(s: SparkSession, root: String)
       : Option[(Long, ZBounds)] = {
-    val base = new Path(boundsDir(root))
-    val f = fs(s, base)
-    if (!f.exists(base)) None
-    else f.listStatus(base).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("gen=") =>
-        n.stripPrefix("gen=").toLong
-      }
-      .filter(g => f.exists(new Path(s"${boundsDir(root)}/gen=$g/_SUCCESS")))
-      .sorted.lastOption
+    BatchSink.ids(s, boundsDir(root), "gen", committed = true).lastOption
       .map { g =>
         val r = s.read.parquet(s"${boundsDir(root)}/gen=$g").head()
         (g, ZBounds(r.getAs[Double]("p_mn"), r.getAs[Double]("p_mx"),
@@ -304,10 +292,8 @@ object ManifestStream {
     // self-heal: a previous ATTEMPT of this batch may have elected a
     // generation or written telemetry the replay is about to recompute
     for (d <- Seq(s"${boundsDir(root)}/gen=$batchId",
-        s"${boundsDir(root)}/frac/batch=$batchId")) {
-      val p = new Path(d)
-      fs(s, p).delete(p, true)
-    }
+        s"${boundsDir(root)}/frac/batch=$batchId"))
+      BatchSink.delete(s, d)
     val (curGen, cur) = latestBoundsGen(s, root).getOrElse(
       throw new IllegalStateException(
         s"no staged bounds generation under $root — use runDrift, which " +

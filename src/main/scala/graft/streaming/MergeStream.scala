@@ -45,14 +45,6 @@ object MergeStream {
   private def bucketOf(keyCol: String, nBuckets: Int) =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong))
 
-  private def hasData(dir: String): Boolean = {
-    val fs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-    fs.exists { f =>
-      val n = f.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
   /** One micro-batch MERGE of `batchRaw` into `targetDir`. Pure function
     * of (pre-batch table, batch) by the decide/apply protocol above.
     * `seqCol` orders in-batch versions of the same key (last wins). */
@@ -74,10 +66,10 @@ object MergeStream {
     val newVals = struct(valueCols.map(col): _*)
     val valsType = fresh.select(newVals.as("vv")).schema.head.dataType
     val batchAuditDir = s"$auditDir/batch=$batchId"
-    val targetHasData = hasData(targetDir)
+    val targetHasData = BatchSink.ids(s, targetDir, BucketCol).nonEmpty
 
     // ---- DECIDE (once): skip when this batch's audit is already pinned
-    if (!new java.io.File(batchAuditDir, "_SUCCESS").exists()) {
+    if (!BatchSink.committed(s, batchAuditDir)) {
       val audited =
         if (!targetHasData)
           fresh.select(col(keyCol), lit("insert").as("action"),
@@ -120,7 +112,7 @@ object MergeStream {
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BucketCol).parquet(targetDir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
+      BatchSink.delete(s, staged)
     }
   }
 

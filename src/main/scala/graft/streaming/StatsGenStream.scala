@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -34,8 +33,7 @@ import graft.ops.Layout
   *    the old total EXACTLY regardless of rounding);
   *  - readers take the highest generation (manifest + carry + its batch
   *    partials) — the q164/S27 versioned-artifact contract, listed
-  *    through Hadoop's FileSystem API (the LabelStream r14 lesson: a
-  *    java.io.File listing silently resets state on non-local roots).
+  *    through [[BatchSink.ids]].
   *
   * Idempotence — scoped to foreachBatch's actual replay contract (the
   * engine re-runs at most the LATEST uncommitted batch; committed
@@ -73,29 +71,19 @@ object StatsGenStream {
 
   final case class Gen(g: Long, mn: Double, mx: Double)
 
-  private def fs(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Committed generations under `root/gens` (ascending), via Hadoop's
-    * FS API. Committed = the writer's `_SUCCESS` marker is present: a
+  /** Committed generations under `root/gens` (ascending). Committed =
+    * the writer's `_SUCCESS` marker is present ([[BatchSink.ids]]): a
     * crash mid-way through the manifest write leaves a directory with no
     * (or partial) data files, and listing it as a generation would wedge
     * every subsequent [[currentGen]] read — a half-written manifest is
     * instead invisible, so the next batch re-elects over it (the
     * deterministic overwrite heals the directory). */
-  def generations(s: SparkSession, root: String): Seq[Long] = {
-    val dir = new Path(s"$root/gens")
-    val f = fs(s, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("g=")
-        && f.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("g=").toLong).sorted
-  }
+  def generations(s: SparkSession, root: String): Seq[Long] =
+    BatchSink.ids(s, s"$root/gens", "g", committed = true)
 
   /** The current (highest) generation's manifest. */
   def currentGen(s: SparkSession, root: String): Option[Gen] =
-    generations(s, root).sorted.lastOption.map { g =>
+    generations(s, root).lastOption.map { g =>
       // by NAME, not ordinal (ADVICE r14): a column added or reordered
       // in writeGen must fail the read, not silently swap mn and mx
       val r = s.read.parquet(s"$root/gens/g=$g").select("mn", "mx").head()
@@ -188,10 +176,10 @@ object StatsGenStream {
     * the first run did not, and double-count b's mass through the carry. */
   private[streaming] def oobMilli(s: SparkSession, root: String, g: Long,
       belowBatch: Long): Long = {
-    val dir = new Path(s"$root/range/g=$g")
-    if (!fs(s, dir).exists(dir)) 0L
+    val dir = s"$root/range/g=$g"
+    if (BatchSink.ids(s, dir).isEmpty) 0L
     else {
-      val r = s.read.parquet(dir.toString)
+      val r = s.read.parquet(dir)
         .where(col("batch") >= belowBatch - DriftWindow &&
           col("batch") < belowBatch)
         .agg(sum("n"), sum("oob")).head()

@@ -61,10 +61,10 @@ object VectorIndexStream {
   private def genCentroids(s: SparkSession, root: String,
       corpusDir: String): (Array[Long], Array[Array[Double]]) = {
     import s.implicits._
-    val cdir = new java.io.File(s"$root/${currentGen(root)}/_centroids")
-    if (!cdir.exists()) Similarity.ivfCentroidMeta(s, corpusDir)
+    val cdir = s"$root/${currentGen(root)}/_centroids"
+    if (!BatchSink.committed(s, cdir)) Similarity.ivfCentroidMeta(s, corpusDir)
     else {
-      val rows = s.read.parquet(cdir.toString)
+      val rows = s.read.parquet(cdir)
         .select($"cell", $"centroid").orderBy($"cell").collect()
       (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
     }
@@ -123,9 +123,7 @@ object VectorIndexStream {
     import s.implicits._
     val gen = currentGen(root)
     val cur = s"$root/$gen"
-    val hasData = Option(new java.io.File(cur).listFiles())
-      .exists(_.exists(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-    if (!hasData) return None
+    if (BatchSink.ids(s, cur).isEmpty) return None
     val indexed = s.read.parquet(cur).select($"vec_id", $"embedding")
       .localCheckpoint(true) // mean + reassign both consume it
     val centRows = s.read.parquet(cur)

@@ -9,8 +9,25 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The overwrite-by-batch protocol lives in ONE module: no main source
   * other than BatchSink may frame its own foreachBatch. Per-seam copies
   * drifted before (some fanned their disjoint outputs, some wrote them one
-  * after another), and a fault-injection harness needs one sink to hook. */
+  * after another), and a fault-injection harness needs one sink to hook.
+  * Its read side likewise: no main source lists a directory through
+  * `java.io.File`, which reads every non-local root as empty. */
 class BatchSinkGuardSpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+
+  private def mainSources: List[java.nio.file.Path] = {
+    assert(Files.isDirectory(mainRoot), s"$mainRoot not found")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** `file:line: text` of every line of `f` that `pattern` matches. */
+  private def matches(f: java.nio.file.Path, pattern: scala.util.matching.Regex) =
+    Files.readAllLines(f).asScala.zipWithIndex
+      .filter { case (line, _) => pattern.findFirstIn(line).isDefined }
+      .map { case (line, i) => s"${mainRoot.relativize(f)}:${i + 1}: ${line.trim}" }
 
   /** The streams that keep their own foreachBatch, each with its reason. */
   private val Exempt = Map(
@@ -25,16 +42,8 @@ class BatchSinkGuardSpec extends AnyFunSuite {
       "Update-mode state output, rewritten per shard by dynamic overwrite")
 
   test("only BatchSink calls foreachBatch, apart from the exempt append and state sinks") {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    assert(Files.isDirectory(root), s"$root not found")
-    val walk = Files.walk(root)
-    val sources =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val call = raw"\.foreachBatch\b".r
-    def calls(f: java.nio.file.Path) =
-      Files.readAllLines(f).asScala.zipWithIndex
-        .filter { case (line, _) => call.findFirstIn(line).isDefined }
+    val sources = mainSources
+    def calls(f: java.nio.file.Path) = matches(f, raw"\.foreachBatch\b".r)
     val byName = sources.map(f => f.getFileName.toString -> f).toMap
     assert(calls(byName("BatchSink.scala")).nonEmpty)
     // every exemption still names a stream that needs it
@@ -44,8 +53,13 @@ class BatchSinkGuardSpec extends AnyFunSuite {
       f <- sources
       name = f.getFileName.toString
       if name != "BatchSink.scala" && !Exempt.contains(name)
-      (line, i) <- calls(f)
-    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+      hit <- calls(f)
+    } yield hit
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("no main source lists a directory through java.io.File's listFiles") {
+    val offenders = mainSources.flatMap(matches(_, raw"\blistFiles\(".r))
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

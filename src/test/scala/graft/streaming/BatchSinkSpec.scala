@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 
 /** The streaming seams' sink protocol: overwrite-by-batch layout, replay
-  * idempotence, the fan's await-every-leg failure rule, and checkpointed
-  * restart — each pinned once here instead of once per seam. */
+  * idempotence, the fan's await-every-leg failure rule, checkpointed
+  * restart and the partition-directory read side — each pinned once here
+  * instead of once per seam. */
 class BatchSinkSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
@@ -47,6 +48,27 @@ class BatchSinkSpec extends SparkSpec {
     val rows = s.read.parquet(s"$root/a")
       .select($"batch".cast("long"), $"v").as[(Long, Long)].collect().toSet
     assert(rows === Set((0L, 7L), (1L, 9L)))
+  }
+
+  test("ids lists <key>=<id> dirs ascending; committed hides a torn write; bad names and schemes throw") {
+    val s = spark
+    import s.implicits._
+    val root = tmp("ids")
+    assert(BatchSink.ids(s, s"$root/a") === Seq.empty, "absent dir")
+    for (b <- Seq(10L, 2L, -1L)) BatchSink.write(root, b, "a" -> Seq(b).toDF("v"))
+    new File(s"$root/a/other=5").mkdirs()
+    new File(s"$root/a/batch=7").mkdirs() // torn: no _SUCCESS
+    assert(BatchSink.ids(s, s"$root/a") === Seq(-1L, 2L, 7L, 10L))
+    assert(BatchSink.ids(s, s"$root/a", committed = true) === Seq(-1L, 2L, 10L))
+    assert(BatchSink.ids(s, s"$root/a", "other") === Seq(5L))
+    assert(BatchSink.committed(s, s"$root/a/batch=2"))
+    assert(!BatchSink.committed(s, s"$root/a/batch=7"))
+    BatchSink.delete(s, s"$root/a/batch=7")
+    BatchSink.delete(s, s"$root/a/batch=7") // absent: a no-op
+    assert(BatchSink.ids(s, s"$root/a") === Seq(-1L, 2L, 10L))
+    new File(s"$root/a/batch=x").mkdirs()
+    intercept[NumberFormatException](BatchSink.ids(s, s"$root/a"))
+    intercept[Exception](BatchSink.ids(s, "graft-no-such-scheme://bucket/a"))
   }
 
   test("a failed leg surfaces only after its sibling committed; a retry equals an uninterrupted write") {

@@ -91,6 +91,22 @@ class LabelStreamSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("a torn label version (no _SUCCESS) is not committed: readers " +
+      "keep the last committed version") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-ls-torn-").toString
+    Seq((1L, 1L)).toDF("doc_id", "cluster")
+      .write.parquet(s"$root/labels/v=0")
+    Seq((9L, 9L)).toDF("doc_id", "cluster")
+      .write.parquet(s"$root/labels/v=5")
+    assert(new java.io.File(s"$root/labels/v=5/_SUCCESS").delete())
+    assert(LabelStream.versions(s, root) === Seq(0L))
+    assert(LabelStream.latestVersionBelow(s, root, 6L) === Some(0L))
+    assert(LabelStream.currentLabels(s, root).select($"doc_id")
+      .as[Long].collect().toSeq === Seq(1L))
+  }
+
   test("merge core is deterministic: replaying the same merge rewrites " +
       "identical labels") {
     val s = spark

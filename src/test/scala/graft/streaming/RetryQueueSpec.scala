@@ -73,16 +73,19 @@ class RetryQueueSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val root = Files.createTempDirectory("graft-dlq-").toString
     val input = MemoryStream[Attempt]
+    // data goes in BEFORE each start: an AvailableNow query fixes its end
+    // offset when its stream thread starts, so data added after start()
+    // returns may be left for a later run
+    input.addData(Attempt("a", "pa", ok = true),
+      Attempt("b", "pb", ok = false))
     val q = RetryQueue.writeRouted(
       RetryQueue.route(input.toDS(), maxReceives = 2).toDF(),
       s"$root/out", s"$root/ckpt", Trigger.AvailableNow())
-    input.addData(Attempt("a", "pa", ok = true),
-      Attempt("b", "pb", ok = false))
     q.awaitTermination(60000)
+    input.addData(Attempt("b", "pb", ok = false)) // second failure → dlq
     val q2 = RetryQueue.writeRouted(
       RetryQueue.route(input.toDS(), maxReceives = 2).toDF(),
       s"$root/out", s"$root/ckpt", Trigger.AvailableNow())
-    input.addData(Attempt("b", "pb", ok = false)) // second failure → dlq
     q2.awaitTermination(60000)
 
     assert(s.read.parquet(s"$root/out/ok").count() === 1)
