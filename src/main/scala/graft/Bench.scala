@@ -224,7 +224,16 @@ object Bench {
       if (unknown.nonEmpty) System.err.println(
         s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY names match no query: ${unknown.mkString(",")}")
     }
-    val preps = runPreps(Preps, only, spark, sfDir)
+    // Classes compiled per entry, the CodegenMetrics delta over a prep's
+    // evict, build and rewarm or over a query's timed iterations; they
+    // ride target/bench.json only.
+    val compiles = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val preps = Preps.flatMap { p =>
+      val c0 = GraftSession.compiles
+      val stamped = runPreps(Seq(p), only, spark, sfDir)
+      compiles ++= stamped.map(_._1 -> (GraftSession.compiles - c0))
+      stamped
+    }
     // Side-effecting queries (real file writes in the timed body) run LAST
     // and behind an untimed settle, so their page-cache/GC churn cannot
     // bleed into alphabetical neighbors (VERDICT r8 #1: the stamped r8 run
@@ -237,14 +246,18 @@ object Bench {
     // stamps swung up to 3× above their isolated medians (q114: 17.5s
     // stamped vs 5.6s isolated, judge-adjudicated). They run after every
     // pure query, each behind its own untimed settle, so accumulated GC /
-    // codegen-cache / page-cache pressure from the preceding ~160 queries
-    // is drained before their timers start. Dirty (file-writing) queries
-    // still run last of all — their churn must not reach the gates either.
+    // page-cache pressure from the preceding ~160 queries is drained
+    // before their timers start. Generated classes are not part of what a
+    // settle drains: Spark's codegen cache evicts by entry count, never by
+    // GC (at its default of 100 entries a query's classes were gone by its
+    // next run; GraftSession sizes it above the whole suite's classes).
+    // Dirty (file-writing) queries still run last of all — their churn
+    // must not reach the gates either.
     val gateCluster = Set("q110_dedup_recall", "q114_retrieval_quality",
       "q115_release_manifest", "q138_retrieval_trend")
     // Two GC passes: the first clears the young generation, the second
-    // collects the weak/soft refs (broadcast blocks, codegen cache
-    // entries) the first pass queued for cleanup.
+    // collects the weak/soft refs (broadcast blocks) the first pass
+    // queued for cleanup.
     def settle(): Unit = {
       System.gc(); Thread.sleep(250); System.gc(); Thread.sleep(250)
     }
@@ -262,6 +275,7 @@ object Bench {
       if (idx == midIdx && ordered.size >= 2) canary("middle")
       if (sideEffecting(name) || gateCluster(name))
         settle() // untimed fence before gate/dirty entries
+      val c0 = GraftSession.compiles
       val times = (1 to iters).flatMap { _ =>
         val t0 = System.nanoTime()
         // noop sink evaluates every column of every row (count() would let
@@ -272,6 +286,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
         }
       }
+      compiles += name -> (GraftSession.compiles - c0)
       // -1 marks a failed query in the JSON — a query that starts erroring
       // must not masquerade as a fast one
       name -> (if (times.size == iters) times.sorted.apply(iters / 2) else -1.0)
@@ -361,16 +376,15 @@ object Bench {
     println(line)
     System.err.println(line)
     // target/bench.json stays self-sufficient for the judge: the full
-    // 3-decimal query line (with load_index), with streambench inlined
-    // when it was measured.
+    // 3-decimal query line (with load_index), each entry's compile count
+    // under its full name, and streambench inlined when it was measured.
     val fullLine = BenchLine.queryLine(results, sfDir, 3, stripQ = false,
       deci = false, loadIndex = li, ioIndex = ii)
-    writeFile("bench.json", streamJson match {
-      case Some(sj) =>
-        fullLine.stripSuffix(s""","sf":"$sfDir"}""") +
-          s""","streambench":$sj,"sf":"$sfDir"}"""
-      case None => fullLine
-    })
+    writeFile("bench.json", fullLine.stripSuffix(s""","sf":"$sfDir"}""") +
+      compiles.map { case (k, n) => s""""$k":$n""" }
+        .mkString(""","codegen_compiles":{""", ",", "}") +
+      streamJson.fold("")(sj => s""","streambench":$sj""") +
+      s""","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -26,19 +26,23 @@ import graft.streaming.{DecontamStream, DedupStream, IngestStream, SigningStream
 object StreamBench {
   /** One seam's measurement: rate, input records, the seam's observable
     * count (reported under `countKey`: `signed` for the signing chain,
-    * `clean` for the rest) and wall seconds. A timed-out run carries rate
-    * and count −1. A degenerate run (zero or non-finite seconds →
-    * Infinity/NaN rate) emits -1 markers: bare `Infinity`/`NaN` tokens are
-    * not valid JSON and would break the driver's parse of the whole bench
-    * line (ADVICE r6). */
+    * `clean` for the rest), wall seconds and, when the runner measured
+    * it, the classes Spark compiled inside the timed window
+    * (`codegen_compiles`). A timed-out run carries rate and count −1. A
+    * degenerate run (zero or non-finite seconds → Infinity/NaN rate)
+    * emits -1 markers: bare `Infinity`/`NaN` tokens are not valid JSON
+    * and would break the driver's parse of the whole bench line (ADVICE
+    * r6). */
   final case class SeamResult(recordsPerSec: Double, records: Long,
-      clean: Long, seconds: Double, countKey: String = "clean") {
+      clean: Long, seconds: Double, countKey: String = "clean",
+      compiles: Option[Long] = None) {
     def rate: Double = if (seconds.isFinite && seconds > 0 && recordsPerSec.isFinite)
       recordsPerSec else -1.0
     /** The embeddable JSON object (no metric wrapper). */
     def json: String = {
       val secs = if (seconds.isFinite) seconds else -1.0
-      f"""{"records_per_sec":$rate%.1f,"records":$records,"$countKey":$clean,"seconds":$secs%.3f}"""
+      f"""{"records_per_sec":$rate%.1f,"records":$records,"$countKey":$clean,"seconds":$secs%.3f""" +
+        compiles.fold("")(n => s""","codegen_compiles":$n""") + "}"
     }
   }
 
@@ -122,13 +126,16 @@ object StreamBench {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(c.root))
     val staged = seam.stage(c)
     val n = c.records
+    val c0 = GraftSession.compiles
     val t0 = System.nanoTime()
     val finished = seam.body(c, staged)
     val secs = (System.nanoTime() - t0) / 1e9
-    if (finished) SeamResult(n / secs, n, seam.observe(c, staged), secs, seam.countKey)
+    val compiled = Some(GraftSession.compiles - c0)
+    if (finished)
+      SeamResult(n / secs, n, seam.observe(c, staged), secs, seam.countKey, compiled)
     else {
       c.log(s"timed out after $secs s")
-      SeamResult(-1.0, n, -1L, secs, seam.countKey)
+      SeamResult(-1.0, n, -1L, secs, seam.countKey, compiled)
     }
   }
 

@@ -87,6 +87,11 @@ object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
+  /** Classes Spark's code generator has compiled in this JVM so far. The
+    * bench artifacts report its delta per entry (`codegen_compiles`). */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -116,4 +121,25 @@ object GraftSession {
       // by default; each task deserializes a whole Hadoop Configuration,
       // which costs far more than listing one directory. One task per core.
       .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
+      // Spark's generated-class cache is an LRU of 100 entries by default,
+      // while the engine's working set is far larger: the 15 corpus_mix
+      // queries generate about 290 distinct classes and all 215 queries
+      // 4,102 (measured with CodegenMetrics on sf0.01). At 100 most classes
+      // were evicted before their reuse, so a warm corpus_mix pass
+      // recompiled ~250 and a second pass of the suite 6,423. 8192 is ~2x
+      // the whole suite. The cache stays bounded because a streaming
+      // dedup embeds its watermark as a literal in the eviction predicate:
+      // a long-running stream compiles one new class per trigger, and an
+      // unbounded cache would hold their metaspace (and the source text
+      // each entry keys on) forever. A static conf: CodeGenerator reads it
+      // once per JVM, from the session that first generates code, so every
+      // entry point must build its session here before running any query.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // Generated classes are cached per classloader. With artifact
+      // isolation (Spark 4's default) each streaming query's cloned
+      // session gets its own executor classloader, so its first trigger
+      // recompiled every class its plan had already compiled. The engine
+      // adds no session artifacts (no addArtifact in src/), so nothing is
+      // isolated by turning it off.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -30,30 +31,31 @@ import graft.ops.Similarity
   * [[retrain]] — deliberately out of the hot path, as in any production
   * IVF serving stack.
   *
-  * Generations: the live index is the directory named by the
-  * `index_current` pointer file (absent = `index`, the initial layout).
+  * Generations: the live index is `index-g<n>` for the newest commit
+  * marker `index_current/g=<n>` (no marker = `index`, the initial layout).
   * [[retrain]] builds the NEXT generation fully — one Lloyd step over the
   * indexed vectors (per-cell exact decimal means → new centroids),
   * map-side reassignment, compacted cell partitions, and the new
   * centroids stored WITH the generation under a discovery-ignored
-  * `_centroids` subdir — then commits by atomically replacing the pointer
-  * file. A probe in flight reads whichever generation the pointer named
-  * when it started; nothing is ever mutated in place, so probes see a
-  * consistent index through the swap (spec-verified). Retraining runs in
-  * the quiesced window between stream runs (the nightly-rebuild
-  * discipline): a batch replayed ACROSS a retrain boundary would re-add
-  * rows the compaction already holds — the same reason Delta's OPTIMIZE
-  * locks the files it rewrites.
+  * `_centroids` subdir — then commits by creating its marker. A probe in
+  * flight reads whichever generation was newest when it started; nothing
+  * is ever mutated in place, so probes see a consistent index through the
+  * swap (spec-verified). Markers and generations are read and written
+  * through the root's own Hadoop scheme, so this holds on hdfs:/s3a:
+  * roots too. Retraining runs in the quiesced window between stream runs
+  * (the nightly-rebuild discipline): a batch replayed ACROSS a retrain
+  * boundary would re-add rows the compaction already holds — the same
+  * reason Delta's OPTIMIZE locks the files it rewrites.
   */
 object VectorIndexStream {
 
-  /** Pointer-file read: the active generation's directory name. */
-  private[streaming] def currentGen(root: String): String = {
-    val f = new java.io.File(root, "index_current")
-    if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim
-    else "index"
-  }
+  /** Where the generation commit markers live: one `g=<n>` directory per
+    * committed generation `index-g<n>`. */
+  private def commits(root: String): String = s"$root/index_current"
+
+  /** The active generation's directory name: the newest committed one. */
+  private[streaming] def currentGen(s: SparkSession, root: String): String =
+    BatchSink.ids(s, commits(root), "g").lastOption.fold("index")(n => s"index-g$n")
 
   /** The active generation's quantizer: retrained centroids stored with
     * the generation when present, the corpus-trained coarse quantizer
@@ -61,7 +63,7 @@ object VectorIndexStream {
   private def genCentroids(s: SparkSession, root: String,
       corpusDir: String): (Array[Long], Array[Array[Double]]) = {
     import s.implicits._
-    val cdir = s"$root/${currentGen(root)}/_centroids"
+    val cdir = s"$root/${currentGen(s, root)}/_centroids"
     if (!BatchSink.committed(s, cdir)) Similarity.ivfCentroidMeta(s, corpusDir)
     else {
       val rows = s.read.parquet(cdir)
@@ -76,7 +78,7 @@ object VectorIndexStream {
     * the S8 idempotency protocol, exercised directly by the spec. */
   private[streaming] def writeBatch(batch: DataFrame, batchId: Long,
       root: String, cells: Array[Long], cents: Array[Array[Double]]): Unit =
-    BatchSink.write(root, batchId, BatchSink.Output(currentGen(root),
+    BatchSink.write(root, batchId, BatchSink.Output(currentGen(batch.sparkSession, root),
       batch.withColumn("cell", element_at(
         graft.functions.NearestCellsUtil.column(col("embedding"), cells, cents, 1), 1)),
       partitionBy = Some("cell")))
@@ -100,7 +102,7 @@ object VectorIndexStream {
     val (cells, cents) = genCentroids(s, root, corpusDir)
     val probeCells = nearestCells(queryVec, cells, cents, nprobe)
     val q = typedLit(queryVec)
-    s.read.parquet(s"$root/${currentGen(root)}")
+    s.read.parquet(s"$root/${currentGen(s, root)}")
       .filter($"cell".isin(probeCells: _*))
       .withColumn("cos", graft.functions.VecFns.cosine(q, $"embedding"))
       .orderBy($"cos".desc, $"vec_id")
@@ -121,8 +123,7 @@ object VectorIndexStream {
       corpusDir: String): Option[String] = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     import s.implicits._
-    val gen = currentGen(root)
-    val cur = s"$root/$gen"
+    val cur = s"$root/${currentGen(s, root)}"
     if (BatchSink.ids(s, cur).isEmpty) return None
     val indexed = s.read.parquet(cur).select($"vec_id", $"embedding")
       .localCheckpoint(true) // mean + reassign both consume it
@@ -138,10 +139,9 @@ object VectorIndexStream {
     val cellIds = centRows.map(_.getLong(0))
     val mats = centRows.map(_.getSeq[Double](1).toArray)
     val nextName =
-      if (gen == "index") "index-g1"
-      else s"index-g${gen.stripPrefix("index-g").toInt + 1}"
+      s"index-g${BatchSink.ids(s, commits(root), "g").lastOption.getOrElse(0L) + 1}"
     val nextDir = s"$root/$nextName"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
+    BatchSink.delete(s, nextDir)
     BatchSink.write(root, -1L, BatchSink.Output(nextName,
       indexed.withColumn("cell", element_at(
         graft.functions.NearestCellsUtil.column($"embedding", cellIds, mats, 1), 1)),
@@ -153,27 +153,26 @@ object VectorIndexStream {
     Some(nextName)
   }
 
-  /** Atomically flip the generation pointer: write-to-temp + rename with
-    * REPLACE_EXISTING — a probe resolves either the old name or the new,
-    * never a torn read. */
-  private[streaming] def commitGen(root: String, gen: String): Unit = {
-    val tmp = java.nio.file.Paths.get(root, "index_current.tmp")
-    java.nio.file.Files.write(tmp, gen.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(root, "index_current"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** Commit a built generation by creating its marker directory: one
+    * create, never an overwrite or a rename, so it is atomic on every
+    * Hadoop scheme — a probe resolves the old generation or the new, and
+    * a crash before the create leaves the old one live. Superseded
+    * markers stay (empty directories, one per retrain). */
+  private[streaming] def commitGen(s: SparkSession, root: String, gen: String): Unit = {
+    val p = new Path(s"${commits(root)}/g=${gen.stripPrefix("index-g")}")
+    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(p))
+      throw new java.io.IOException(s"cannot commit $gen: mkdirs $p failed")
   }
 
   /** The periodic centroid-retraining job the S10 scaladoc promises:
-    * build the next generation, commit the pointer, drop the old
+    * build the next generation, commit its marker, drop the old
     * generation (production keeps N−1 for in-flight readers; the spec's
-    * probes re-resolve the pointer per call). No-op on an empty index. */
+    * probes re-resolve the generation per call). No-op on an empty index. */
   def retrain(s: SparkSession, root: String, corpusDir: String): Unit =
     buildNextGen(s, root, corpusDir).foreach { next =>
-      val old = currentGen(root)
-      commitGen(root, next)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/$old"))
+      val old = currentGen(s, root)
+      commitGen(s, root, next)
+      BatchSink.delete(s, s"$root/$old")
     }
 
   /** Driver-side nearest-cell pick for the (single) probe vector — the

@@ -95,4 +95,27 @@ class NonLocalRootSpec extends SparkSpec {
     assert(pairs.select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
       === Set((4L, 2L)), "a near-dup of batch 0's accepted doc")
   }
+
+  test("vector-index retrain on a non-local root commits the next " +
+      "generation and drops the old one") {
+    val s = spark
+    import s.implicits._
+    def vec(xs: Double*): Seq[Float] = xs.map(_.toFloat)
+    val corpus = Files.createTempDirectory("graft-nl-vxc-").toString
+    Seq((100L, vec(1, 0), 0), (101L, vec(0.9, 0.1), 0),
+      (102L, vec(0, 1), 1), (103L, vec(0.1, 0.9), 1))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$corpus/embeddings.parquet")
+    val root = mockRoot(s, "graft-nl-vx-")
+    val (cells, cents) = graft.ops.Similarity.ivfCentroidMeta(s, corpus)
+    VectorIndexStream.writeBatch(Seq((1L, vec(0.95, 0.05)), (2L, vec(0.05, 0.95)),
+      (3L, vec(0.8, 0.2))).toDF("vec_id", "embedding"), 0L, root, cells, cents)
+
+    VectorIndexStream.retrain(s, root, corpus)
+    assert(VectorIndexStream.currentGen(s, root) === "index-g1")
+    assert(s.read.parquet(s"$root/index-g1").count() === 3L)
+    assert(!exists(s, s"$root/index"), "the superseded generation must be dropped")
+    assert(VectorIndexStream.probe(s, root, corpus, vec(1, 0), k = 2, nprobe = 1)
+      .collect().map(_.getLong(0)).toSet === Set(1L, 3L))
+  }
 }

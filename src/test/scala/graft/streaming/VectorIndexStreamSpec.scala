@@ -115,13 +115,13 @@ class VectorIndexStreamSpec extends SparkSpec {
     // resolve the old generation — the mid-swap consistency window
     val next = VectorIndexStream.buildNextGen(s, root, corpusDir)
     assert(next === Some("index-g1"))
-    assert(VectorIndexStream.currentGen(root) === "index",
+    assert(VectorIndexStream.currentGen(s, root) === "index",
       "uncommitted rebuild must not change the live generation")
     assert(probeIds() === before,
       "probe during the swap must still serve the old generation")
 
-    VectorIndexStream.commitGen(root, next.get)
-    assert(VectorIndexStream.currentGen(root) === "index-g1")
+    VectorIndexStream.commitGen(s, root, next.get)
+    assert(VectorIndexStream.currentGen(s, root) === "index-g1")
     // same four vectors searchable, compacted into batch=-1, with the
     // generation's own (retrained) centroids driving the probe
     val gen1 = s.read.parquet(s"$root/index-g1")
@@ -132,7 +132,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     // a second full retrain cycle (the public wrapper): generation
     // advances, the old directory is dropped, data survives
     VectorIndexStream.retrain(s, root, corpusDir)
-    assert(VectorIndexStream.currentGen(root) === "index-g2")
+    assert(VectorIndexStream.currentGen(s, root) === "index-g2")
     assert(!new java.io.File(s"$root/index-g1").exists(),
       "retrain must drop the superseded generation")
     assert(s.read.parquet(s"$root/index-g2").count() === 4L)
