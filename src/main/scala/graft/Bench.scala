@@ -59,8 +59,8 @@ object Bench {
         "q104_hard_negatives", "q114_retrieval_quality", "q120_ann_sq",
         "q124_hybrid_sq", "q128_ivf_balance", "q149_embedding_drift",
         "q151_ivf_sweep")),
-    // The maintained-statistics artifact suite — ONE combined streaming
-    // pass (VERDICT r17 #5) building the q205/q206 planner suite, the
+    // The maintained-statistics artifact suite — ONE combined replay
+    // (VERDICT r17 #5) building the q205/q206 planner suite, the
     // q207 TPC-H join catalog, AND the registered pipeline catalog from
     // a single staged union; the audits then consult it warm, the way a
     // planner consults a catalog.
@@ -161,9 +161,10 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
     // Untimed STREAMING warmup, same discipline: the first AvailableNow
     // stream in a JVM pays streaming-machinery classloading + checkpoint
-    // IO setup (~2s), which must not be booked against whichever
-    // streaming-built prep runs first (planner_prep
-    // both replay micro-batches through foreachBatch).
+    // IO setup (~2s), which must not be booked against whichever timed
+    // body starts the JVM's first stream. No prep replays through a
+    // stream any more; which timed body, if any, still starts one has
+    // not been measured, so the warmup stays.
     try {
       val wbase = graft.Scratch.dir("bench-stream-warm")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wbase))

@@ -209,29 +209,31 @@ object Layout {
   /** The q197 histogram geometry, shared VERBATIM with the S28 streaming
     * maintenance ([[graft.streaming.StatsStream]]) so the staged and the
     * batch-built histogram cannot disagree on a bin: 4096 equi-width bins
-    * over [mn, mx], value→bin by the floor expression below (columns `mn`
-    * and `mx` must be in scope). */
+    * over [mn, mx], value→bin by the floor expression below (the bound
+    * columns, `mn` and `mx` unless named, must be in scope). The one
+    * copy of the formula: every histogram and threshold bin of the
+    * statistics audits and their oracles is this text (valid Spark SQL
+    * and DuckDB alike). */
   private[graft] val HistBins = 4096
-  private[graft] def histBinOf(e: String): String =
-    s"least(cast(floor((($e) - mn) * $HistBins / (mx - mn)) as bigint), " +
+  private[graft] def histBinOf(e: String, mn: String = "mn",
+      mx: String = "mx"): String =
+    s"least(cast(floor((($e) - $mn) * $HistBins / ($mx - $mn)) as bigint), " +
       s"${HistBins - 1L})"
 
   def q197Selectivity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val B = HistBins
     val K = 20
     val li = Tables(s, dir, "lineitem").select($"l_extendedprice".as("p"))
     val mm = li.agg(min($"p").as("mn"), max($"p").as("mx"))
       .localCheckpoint(true)
-    def binOf(e: String): String = histBinOf(e)
     def thr(k: Int): String = s"(mn + (cast($k as double) * (mx - mn)) / $K.0)"
     val hist = li.crossJoin(broadcast(mm))
-      .select(expr(binOf("p")).as("bin"))
+      .select(expr(histBinOf("p")).as("bin"))
       .groupBy($"bin").agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
     val preds = (1 to K).toDF("k").crossJoin(broadcast(mm))
       .withColumn("t", expr(s"mn + (cast(k as double) * (mx - mn)) / $K.0"))
-      .withColumn("tbin", expr(binOf("t")))
+      .withColumn("tbin", expr(histBinOf("t")))
     val est = preds.join(broadcast(hist), $"bin" <= $"tbin")
       .groupBy($"k", $"t")
       .agg(sum(when($"bin" < $"tbin", $"n").otherwise(expr("n div 2")))
@@ -256,17 +258,14 @@ object Layout {
        |  SELECT MIN(l_extendedprice) AS mn, MAX(l_extendedprice) AS mx
        |  FROM lineitem),
        |hist AS (
-       |  SELECT LEAST(CAST(FLOOR((l_extendedprice - mn) * 4096 / (mx - mn))
-       |      AS BIGINT), 4095) AS bin,
+       |  SELECT ${histBinOf("l_extendedprice")} AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS n
        |  FROM lineitem, mm GROUP BY 1),
        |preds AS (
        |  SELECT k, mn + (CAST(k AS DOUBLE) * (mx - mn)) / 20.0 AS t, mn, mx
        |  FROM (SELECT unnest(range(1, 21)) AS k), mm),
        |pt AS (
-       |  SELECT k, t,
-       |    LEAST(CAST(FLOOR((t - mn) * 4096 / (mx - mn)) AS BIGINT), 4095)
-       |      AS tbin
+       |  SELECT k, t, ${histBinOf("t")} AS tbin
        |  FROM preds),
        |est AS (
        |  SELECT k, t,
@@ -307,7 +306,6 @@ object Layout {
     * ~3·10⁹ rows per audited shard; divide-first beyond (documented). */
   def q198CorrelatedSelectivity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val B = 4096
     val K = 4
     val d = Tables(s, dir, "documents").filter($"text".isNotNull)
       .select($"n_chars".cast("double").as("x"),
@@ -315,21 +313,19 @@ object Layout {
     val mm = d.agg(min($"x").as("mnx"), max($"x").as("mxx"),
       min($"y").as("mny"), max($"y").as("mxy"),
       count(lit(1)).as("n")).localCheckpoint(true)
-    def binOf(e: String, mn: String, mx: String): String =
-      s"least(cast(floor((($e) - $mn) * $B / ($mx - $mn)) as bigint), ${B - 1L})"
     def thrX(i: Int): String = s"(mnx + (cast($i as double) * (mxx - mnx)) / $K.0)"
     def thrY(j: Int): String = s"(mny + (cast($j as double) * (mxy - mny)) / $K.0)"
     val histX = d.crossJoin(broadcast(mm))
-      .select(expr(binOf("x", "mnx", "mxx")).as("bin"))
+      .select(expr(histBinOf("x", "mnx", "mxx")).as("bin"))
       .groupBy($"bin").agg(count(lit(1)).as("nb")).localCheckpoint(true)
     val histY = d.crossJoin(broadcast(mm))
-      .select(expr(binOf("y", "mny", "mxy")).as("bin"))
+      .select(expr(histBinOf("y", "mny", "mxy")).as("bin"))
       .groupBy($"bin").agg(count(lit(1)).as("nb")).localCheckpoint(true)
     def marginal(hist: DataFrame, thr: Int => String,
         mn: String, mx: String, idc: String): DataFrame = {
       val preds = (1 to K).toDF(idc).crossJoin(broadcast(mm))
         .withColumn("t", expr(s"$mn + (cast($idc as double) * ($mx - $mn)) / $K.0"))
-        .withColumn("tbin", expr(binOf("t", mn, mx)))
+        .withColumn("tbin", expr(histBinOf("t", mn, mx)))
       preds.join(broadcast(hist), $"bin" <= $"tbin")
         .groupBy(col(idc), $"t")
         .agg(sum(when($"bin" < $"tbin", $"nb").otherwise(expr("nb div 2")))
@@ -365,8 +361,6 @@ object Layout {
   }
 
   val q198Oracle: String = {
-    def binOf(e: String, mn: String, mx: String): String =
-      s"LEAST(CAST(FLOOR((($e) - $mn) * 4096 / ($mx - $mn)) AS BIGINT), 4095)"
     val acts = (for { i <- 1 to 4; j <- 1 to 4 } yield
       s"CAST(COUNT(CASE WHEN x <= mnx + ($i * (mxx - mnx)) / 4.0" +
         s" AND y <= mny + ($j * (mxy - mny)) / 4.0 THEN 1 END) AS BIGINT)" +
@@ -383,11 +377,11 @@ object Layout {
        |    CAST(COUNT(*) AS BIGINT) AS n
        |  FROM d),
        |hx AS (
-       |  SELECT ${binOf("x", "mnx", "mxx")} AS bin,
+       |  SELECT ${histBinOf("x", "mnx", "mxx")} AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS nb
        |  FROM d, mm GROUP BY 1),
        |hy AS (
-       |  SELECT ${binOf("y", "mny", "mxy")} AS bin,
+       |  SELECT ${histBinOf("y", "mny", "mxy")} AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS nb
        |  FROM d, mm GROUP BY 1),
        |px AS (
@@ -397,14 +391,14 @@ object Layout {
        |  SELECT qi, mny + (CAST(qi AS DOUBLE) * (mxy - mny)) / 4.0 AS ty,
        |    mny, mxy FROM (SELECT unnest(range(1, 5)) AS qi), mm),
        |ex AS (
-       |  SELECT pi, tx, CAST(SUM(CASE WHEN h.bin < ${binOf("tx", "mnx", "mxx")}
+       |  SELECT pi, tx, CAST(SUM(CASE WHEN h.bin < ${histBinOf("tx", "mnx", "mxx")}
        |      THEN h.nb ELSE h.nb // 2 END) AS BIGINT) AS est_x
-       |  FROM px p JOIN hx h ON h.bin <= ${binOf("tx", "mnx", "mxx")}
+       |  FROM px p JOIN hx h ON h.bin <= ${histBinOf("tx", "mnx", "mxx")}
        |  GROUP BY 1, 2),
        |ey AS (
-       |  SELECT qi, ty, CAST(SUM(CASE WHEN h.bin < ${binOf("ty", "mny", "mxy")}
+       |  SELECT qi, ty, CAST(SUM(CASE WHEN h.bin < ${histBinOf("ty", "mny", "mxy")}
        |      THEN h.nb ELSE h.nb // 2 END) AS BIGINT) AS est_y
-       |  FROM py p JOIN hy h ON h.bin <= ${binOf("ty", "mny", "mxy")}
+       |  FROM py p JOIN hy h ON h.bin <= ${histBinOf("ty", "mny", "mxy")}
        |  GROUP BY 1, 2),
        |act AS (
        |  SELECT
@@ -803,48 +797,13 @@ object Layout {
         countDistinct($"o_orderkey").as("d_ol_o")))
       .crossJoin(t("lineitem").agg(count(lit(1)).as("n_l"),
         countDistinct($"l_orderkey").as("d_ol_l")))
-    // exact intermediate sizes: the 5 connected sub-chains, one
-    // count-agg join each
-    def cnt(df: DataFrame, as: String) = df.agg(count(lit(1)).as(as))
-    val nc = t("nation").join(t("customer"), $"n_nationkey" === $"c_nationkey")
-    val co = t("customer").join(t("orders"), $"c_custkey" === $"o_custkey")
-    val ol = t("orders").join(t("lineitem"), $"o_orderkey" === $"l_orderkey")
-    val wide = st
-      .crossJoin(cnt(nc, "x_nc"))
-      .crossJoin(cnt(nc.join(t("orders"), $"c_custkey" === $"o_custkey"),
-        "x_nco"))
-      .crossJoin(cnt(co, "x_co"))
-      .crossJoin(cnt(co.join(t("lineitem"), $"o_orderkey" === $"l_orderkey"),
-        "x_col"))
-      .crossJoin(cnt(ol, "x_ol"))
-    val profiles = q201Profiles("div")
-    val rows = wide.selectExpr(s"stack(${profiles.size}, " +
-      profiles.map { case (n, est, exact) =>
-        s"'$n', cast(($est) as bigint), cast(($exact) as bigint)"
-      }.mkString(", ") + ") as (join_order, est_cost, exact_cost)")
-    val byEst = org.apache.spark.sql.expressions.Window
-      .orderBy($"est_cost", $"join_order")
-    val byExact = org.apache.spark.sql.expressions.Window
-      .orderBy($"exact_cost", $"join_order")
-    rows
-      .withColumn("err_milli",
-        expr("(1000 * (est_cost - exact_cost)) div greatest(exact_cost, 1)"))
-      .withColumn("est_rank", row_number().over(byEst).cast("long"))
-      .withColumn("exact_rank", row_number().over(byExact).cast("long"))
-      .withColumn("rank_match",
-        when($"est_rank" === $"exact_rank", 1L).otherwise(0L))
-      .orderBy($"join_order")
+    // exact intermediate sizes: the 5 connected sub-chains
+    val wide = st.crossJoin(JoinAudit.exactChainCounts(s, dir, t("orders")))
+    JoinAudit.rankedOrders(wide, q201Profiles("div"))
   }
 
-  val q201Oracle: String = {
-    val profiles = q201Profiles("//")
-    val legs = profiles.map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH st AS (
+  val q201Oracle: String = JoinAudit.oracle(Seq(
+    s"""st AS (
        |  SELECT
        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation) AS n_n,
        |    (SELECT CAST(COUNT(DISTINCT n_nationkey) AS BIGINT) FROM nation)
@@ -861,36 +820,8 @@ object Layout {
        |      AS d_ol_o,
        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_l,
        |    (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) FROM lineitem)
-       |      AS d_ol_l),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN orders ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN orders ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN orders ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+       |      AS d_ol_l)""".stripMargin,
+    JoinAudit.exChainCte("orders")), q201Profiles("//"))
 
   // ---------------------------------------------------------------- q202
   /** Zone-map pruning audit — what the q98 layout argument and the

@@ -20,14 +20,15 @@ import graft.streaming.{BatchSink, ManifestStream, McvStream, NdvStream,
   * from the manifest's zones and pricing read amplification
   * before/after. q207 (VERDICT r16 #4) is the third: the full System-R
   * left-deep join-ORDER enumeration over the N–C–O–L chain, reading
-  * ONLY a per-table catalog ([[ensureJoinArtifacts]]) the same one-pass
-  * stream pattern maintains.
+  * ONLY a per-table catalog ([[ensureJoinArtifacts]]) built by the same
+  * per-batch maintainer bodies.
   *
-  * The artifact suite ([[ensureArtifacts]]) is maintained by ONE
-  * streaming pass — since r18 the SAME pass that builds both join
-  * catalogs ([[buildAll]]): a single staged union replays all declared
-  * tables as [[ReplayCarves]] deterministic micro-batches, and each batch fans
-  * concurrently to every maintainer's own per-batch body (the literal
+  * The artifact suite ([[ensureArtifacts]]) is built by ONE replay —
+  * the same one that builds both join catalogs ([[buildAll]]): a single
+  * persisted staged union of all declared tables is carved into
+  * [[ReplayCarves]] deterministic micro-batches, replayed directly (no
+  * stream since r21), and every batch's legs run in one [[Fan.out]],
+  * each leg a maintainer's own per-batch body (the literal
   * S28/S29/S31/S32 `processBatch` code, so the audit-driven and the
   * engine-driven artifacts cannot drift). The planner suite's share:
   *
@@ -128,9 +129,9 @@ object Planner {
   }
 
   /** The maintained-statistics suite root (q205/q206): built by the
-    * SINGLE combined pass ([[buildAll]] — VERDICT r17 #5 folded the
+    * SINGLE combined replay ([[buildAll]] — VERDICT r17 #5 folded the
     * planner suite, the TPC-H join catalog, and the registered pipeline
-    * catalog into one staged union and one stream). */
+    * catalog into one staged union). */
   private[graft] def ensureArtifacts(s: SparkSession, dir: String): String =
     ensureAll(s, dir)._1
 
@@ -457,9 +458,7 @@ object Planner {
     // verbatim, not a Scala mirror of it.
     val boundsDf = s.read.parquet(s"$art/bounds")
       .selectExpr("p_mn as pmn", "p_mx as pmx")
-    def tbinSql(k: Int): String =
-      s"least(cast(floor((${tSql(k)} - pmn) * ${Layout.HistBins} " +
-        s"/ (pmx - pmn)) as bigint), ${Layout.HistBins - 1})"
+    def tbinSql(k: Int): String = Layout.histBinOf(tSql(k), "pmn", "pmx")
     val histAggs = Ks.flatMap { k =>
       Seq(coalesce(sum(when(expr(s"bin < ${tbinSql(k)}"), $"n")), lit(0L))
           .as(s"full_$k"),
@@ -549,8 +548,7 @@ object Planner {
     val kList = Ks.mkString(", ")
     s"""WITH $artifactCtes,
        |hist AS (
-       |  SELECT LEAST(CAST(FLOOR((p - pmn) * ${Layout.HistBins}
-       |      / (pmx - pmn)) AS BIGINT), ${Layout.HistBins - 1}) AS bin,
+       |  SELECT ${Layout.histBinOf("p", "pmn", "pmx")} AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS n
        |  FROM src, b GROUP BY 1),
        |sk AS (
@@ -573,8 +571,7 @@ object Planner {
        |              FROM src GROUP BY 1))),
        |pt AS (
        |  SELECT k, ${tSql("k")} AS t,
-       |    LEAST(CAST(FLOOR((${tSql("k")} - pmn) * ${Layout.HistBins}
-       |      / (pmx - pmn)) AS BIGINT), ${Layout.HistBins - 1}) AS tbin
+       |    ${Layout.histBinOf(tSql("k"), "pmn", "pmx")} AS tbin
        |  FROM (SELECT UNNEST([$kList]) AS k), b),
        |estsel AS (
        |  SELECT pt.k,
@@ -869,7 +866,7 @@ object Planner {
     * LLM-pipeline tables joined on user/doc keys —
     * embeddings ⋈(vec_id = doc_id) documents ⋈(doc_id = user_id)
     * events ⋈(user_id = c_custkey) customer — cataloged by the SAME
-    * one-pass stream and priced by the same rule (JoinReorderSpec's
+    * combined replay and priced by the same rule (JoinReorderSpec's
     * registered-set leg). The c_custkey and label histograms feed the
     * q210 rescaled-selectivity audit; the event-type key is djb2-coded
     * into the bigint domain the staged slots carry (the engine's own
@@ -982,12 +979,13 @@ object Planner {
     ensureCatalog(s, dir, TpchChainSpec)
 
   /** The REGISTRATION API (VERDICT r17 #1): build (once per session ×
-    * sf dir × spec name) the stream-maintained catalog for ANY declared
+    * sf dir × spec name) the maintained catalog for ANY declared
     * [[CatalogSpec]] — per-table row counts, S29 KMV sketches, S28
     * histograms under staged bounds, and S31 MCV value-count tables,
-    * all maintained by ONE streaming pass over a [[ReplayCarves]]-batch
-    * replay of the
-    * UNION of the declared tables (each micro-batch fans to the literal
+    * all built by ONE [[ReplayCarves]]-batch replay of the UNION of the
+    * declared tables (the two engine specs ride [[buildAll]]'s direct
+    * replay, a user spec an AvailableNow stream over its staged carves —
+    * [[buildUserCatalog]]; each micro-batch fans to the literal
     * [[NdvStream.processBatch]] / [[writeCount]] /
     * [[StatsStream.processBatch]] / [[McvStream.processBatch]] bodies
     * per (table, column) — concurrent metadata-sized legs). The union
@@ -1039,9 +1037,10 @@ object Planner {
       }
     }
 
-  /** One standalone user-catalog build: stage, bound, replay, describe —
-    * the same one-pass stream as the engine catalogs, under the spec's
-    * own scratch root. */
+  /** One standalone user-catalog build: stage, bound, replay, describe,
+    * under the spec's own scratch root. The replay is an AvailableNow
+    * stream over the staged carves, one carve per trigger; the engine
+    * catalogs replay the same carves directly ([[buildAll]]). */
   private def buildUserCatalog(s: SparkSession, dir: String,
       spec: CatalogSpec): UserCatalog = {
     import s.implicits._
@@ -1210,6 +1209,10 @@ object Planner {
       ("O.L.C.N", viaOL, "x_ol + x_col"))
   }
 
+  /** The chain catalog's consult ([[JoinAudit.wideStats]]). */
+  private def catalogWide(s: SparkSession, art: String): DataFrame =
+    JoinAudit.wideStats(s, art, JoinSketchCols.map(_.id), JoinTables.map(_.tag))
+
   /** q207 — OPERATIONAL join-order planning (VERDICT r16 #4): q201
     * enumerated the N–C–O–L chain from exact, audit-computed statistics;
     * here the same System-R left-deep enumeration — widened to all 8
@@ -1234,203 +1237,56 @@ object Planner {
     * ranking windows order 8 rows. At SF1000 the est products want
     * DECIMAL headroom (the q199/q201 caveat — machine-checked loud by
     * PlannerSpec's int64-headroom leg over these literal generators). */
-  /** Catalog consults: sketch + row-count artifacts composed IN-PLAN
-    * into one wide 1-row frame, so the estimate arithmetic is the
-    * oracle's SQL text verbatim. r20 optimization (guide §2.3/§2.4 —
-    * fewer jobs, one listing): formerly 16 crossJoined branches, each a
-    * separate parquet read (its own driver-side file listing + schema
-    * inference + broadcast job — measured 1.5s/iteration, the single
-    * largest shared cost of the q207–q216 family); now ONE multi-path
-    * scan per artifact kind with explicit schemas, tagged by
-    * input_file_name, ONE grouped aggregate (each sketch's K smallest
-    * distinct hashes as a sorted array, each table's row sum), and one
-    * conditional-aggregation pivot to the same wide row. Values are
-    * identical: per id, size(slice(sorted distinct h, 1, K)) ==
-    * count(limit K) and its last element == max(limit K); h is never
-    * NULL (NdvStream filters NULL v before hashing); absent groups
-    * coalesce to 0 exactly as the empty-branch aggregates did.
-    * Measured 1.5s → 0.19s per consult. */
-  private def catalogWide(s: SparkSession, art: String): DataFrame =
-    wideStats(s, art, JoinSketchCols.map(_.id), JoinTables.map(_.tag))
-
-  private[graft] def wideStats(s: SparkSession, art: String,
-      skIds: Seq[String], tags: Seq[String]): DataFrame = {
-    import s.implicits._
-    val sk = s.read.schema("h BIGINT")
-      .option("recursiveFileLookup", "true")
-      .parquet(skIds.map(id => s"$art/d_$id/ndv"): _*)
-      .select(concat(lit("d:"), regexp_extract(input_file_name(),
-        "/d_([a-z0-9_]+)/ndv/", 1)).as("k"), $"h",
-        lit(null).cast("bigint").as("n"))
-    val nn = s.read.schema("n BIGINT")
-      .option("recursiveFileLookup", "true")
-      .parquet(tags.map(t => s"$art/n_$t/rows"): _*)
-      .select(concat(lit("n:"), regexp_extract(input_file_name(),
-        "/n_([a-z0-9_]+)/rows/", 1)).as("k"),
-        lit(null).cast("bigint").as("h"), $"n")
-    // fail LOUDLY on a key the path regex failed to attribute (ADVICE
-    // r20): a future artifact id outside [a-z0-9_] or a path quirk
-    // would otherwise group under a bare "d:"/"n:" key and every
-    // affected stat would silently coalesce to 0 — wrong estimates with
-    // no error. The check rides the same job (a case-when over the ≤
-    // |ids|+|tags| group keys feeding the pivot), no extra action.
-    val known = (skIds.map("d:" + _) ++ tags.map("n:" + _)).toSet
-    val g = sk.unionByName(nn)
-      .groupBy($"k").agg(
-        slice(sort_array(collect_set($"h")), 1, Layout.KmvK).as("hs"),
-        sum($"n").as("nn"))
-      .withColumn("k", when($"k".isInCollection(known), $"k")
-        .otherwise(raise_error(concat(
-          lit("wideStats: unattributed artifact key '"), $"k",
-          lit(s"' (expected one of ${known.toSeq.sorted.mkString(", ")})")))))
-    val piv: Seq[Column] = skIds.flatMap { id => Seq(
-      coalesce(max(when($"k" === s"d:$id", size($"hs").cast("long"))),
-        lit(0L)).as(s"sk_$id"),
-      coalesce(max(when($"k" === s"d:$id",
-        try_element_at($"hs", greatest(size($"hs"), lit(1))))),
-        lit(0L)).as(s"kth_$id"))
-    } ++ tags.map { t =>
-      coalesce(max(when($"k" === s"n:$t", $"nn")), lit(0L)).as(s"n_$t")
-    }
-    g.agg(piv.head, piv.tail: _*)
-  }
-
-  /** Exact truth: the 5 connected sub-chains, one count-agg join each
-    * (the q201 exact legs verbatim), over a caller-supplied orders
-    * frame — the full table for q207, σ(orders) for q208. r20
-    * optimization (guide §2.4): the five 1-row aggregates union into ONE
-    * tagged frame and pivot back by conditional aggregation — one Spark
-    * job instead of five crossJoined branches each materializing its own
-    * broadcast; counts unchanged (a count aggregate always emits exactly
-    * one row, so the pivot's max-per-tag is that count verbatim). */
-  private def exactChainCounts(s: SparkSession, dir: String,
-      ordersDf: DataFrame): DataFrame = {
-    import s.implicits._
-    def t(n: String): DataFrame = Tables(s, dir, n)
-    val nc = t("nation").join(t("customer"), $"n_nationkey" === $"c_nationkey")
-    val co = t("customer").join(ordersDf, $"c_custkey" === $"o_custkey")
-    val ol = ordersDf.join(t("lineitem"), $"o_orderkey" === $"l_orderkey")
-    unionPivotCounts(Seq(
-      "x_nc" -> nc,
-      "x_nco" -> nc.join(ordersDf, $"c_custkey" === $"o_custkey"),
-      "x_co" -> co,
-      "x_col" -> co.join(t("lineitem"), $"o_orderkey" === $"l_orderkey"),
-      "x_ol" -> ol))
-  }
-
-  /** Stack named count-aggregates as (k, cnt) rows in one union — a
-    * single job whose branches schedule together and share reused
-    * exchanges — then pivot to the familiar wide 1-row frame. Each
-    * branch's count lands verbatim (one row per count aggregate). */
-  private def unionPivotCounts(branches: Seq[(String, DataFrame)]): DataFrame =
-    unionPivot1(branches.map { case (k, df) =>
-      k -> df.agg(count(lit(1)).as("cnt"))
-    })
-
-  /** Pivot named 1-row frames (single BIGINT column `cnt`) into one wide
-    * row via ONE union + conditional aggregation. */
-  private def unionPivot1(branches: Seq[(String, DataFrame)]): DataFrame = {
-    val uni = branches.map { case (k, df) =>
-      df.select(lit(k).as("k"), col("cnt"))
-    }.reduce(_.unionByName(_))
-    val piv = branches.map { case (k, _) =>
-      coalesce(max(when(col("k") === k, col("cnt"))), lit(0L)).as(k)
-    }
-    uni.agg(piv.head, piv.tail: _*)
-  }
-
-  /** Shared q207/q208 assembly: stack the 8 order legs over the wide
-    * frame, grade, rank (an 8-row window). */
-  private def rankedOrders(wide: DataFrame,
-      legs: Seq[(String, String, String)]): DataFrame = {
-    val rows = wide.selectExpr(s"stack(${legs.size}, " +
-      legs.map { case (n, est, exact) =>
-        s"'$n', cast(($est) as bigint), cast(($exact) as bigint)"
-      }.mkString(", ") + ") as (join_order, est_cost, exact_cost)")
-    val byEst = Window.orderBy(col("est_cost"), col("join_order"))
-    val byExact = Window.orderBy(col("exact_cost"), col("join_order"))
-    rows
-      .withColumn("err_milli",
-        expr("(1000 * (est_cost - exact_cost)) div greatest(exact_cost, 1)"))
-      .withColumn("est_rank", row_number().over(byEst).cast("long"))
-      .withColumn("exact_rank", row_number().over(byExact).cast("long"))
-      .withColumn("rank_match",
-        when(col("est_rank") === col("exact_rank"), 1L).otherwise(0L))
-      .orderBy(col("join_order"))
-  }
-
   def q207JoinOrderPlan(s: SparkSession, dir: String): DataFrame = {
     val art = ensureJoinArtifacts(s, dir)
     val wide = catalogWide(s, art)
-      .crossJoin(exactChainCounts(s, dir, Tables(s, dir, "orders")))
-    rankedOrders(wide, q207Orders("div"))
+      .crossJoin(JoinAudit.exactChainCounts(s, dir, Tables(s, dir, "orders")))
+    JoinAudit.rankedOrders(wide, q207Orders("div"))
   }
 
-  val q207Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}")).mkString(", ")
-    val legs = q207Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN orders ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN orders ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN orders ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  /** The N–C–O–L chain audits' DuckDB text (q207–q209, q214–q216): the
+    * chain catalog, the query's own `ctes` (its 1-row estimate CTEs
+    * `ests` among them), and the exact counts over `orders`. */
+  private def chainOracle(legs: Seq[(String, String, String)],
+      ctes: Seq[String] = Nil, ests: Seq[String] = Nil,
+      orders: String = "so"): String =
+    JoinAudit.oracle(JoinAudit.catalogCtes(JoinSketchCols, JoinTables) ++
+      ctes ++ Seq(JoinAudit.stCte(JoinSketchCols, JoinTables, ests),
+        JoinAudit.exChainCte(orders)), legs)
+
+  val q207Oracle: String = chainOracle(q207Orders("//"), orders = "orders")
 
   // ----------------------------------------------------------------- q208
 
-  /** Threshold and straddle-bin over a row carrying the staged histogram
-    * bounds (hmn, hmx) — identical text in Spark SQL and DuckDB. The
-    * narrow t = hmn + range/64 is q205's flip-inducing width. */
-  private val tSelSql = "(hmn + (hmx - hmn) / 64.0)"
-  private val tbinSql =
-    s"least(cast(floor(($tSelSql - hmn) * ${Layout.HistBins} " +
-      s"/ (hmx - hmn)) as bigint), ${Layout.HistBins - 1})"
+  /** An o_totalprice filter priced off the chain catalog's histogram:
+    * `est` yields est_o, `cond` is the filter over the staged bounds
+    * (hmn, hmx) — one text in Spark SQL and DuckDB. */
+  private final case class OrdersFilter(est: JoinAudit.HistEst,
+      cond: String) {
+    /** (the 1-row est_o frame, σ(orders)) */
+    def frames(s: SparkSession, dir: String,
+        art: String): (DataFrame, DataFrame) = {
+      val bounds = JoinAudit.histBounds(s, art, "o_totalprice")
+      (JoinAudit.histEstimate(s, s"$art/h_ho", bounds, est),
+        Tables(s, dir, "orders")
+          .crossJoin(broadcast(bounds))
+          .where(expr(cond))
+          .drop("hmn", "hmx"))
+    }
+    /** The DuckDB twin: eo (est_o) and so (σ(orders)). */
+    def ctes: Seq[String] =
+      JoinAudit.histEstCtes("o", "orders", "o_totalprice", est) :+
+        s"so AS (\n  SELECT o_orderkey, o_custkey FROM orders, bo\n" +
+          s"  WHERE $cond)"
+  }
+
+  /** q208's narrow σ(o_totalprice ≤ hmn + range/64) — q205's
+    * flip-inducing width. */
+  private val NarrowOrders = {
+    val t = "(hmn + (hmx - hmn) / 64.0)"
+    OrdersFilter(JoinAudit.HistEst(Seq("o" -> t), "est_o",
+      JoinAudit.estLe("o", _)), s"o_totalprice <= $t")
+  }
 
   /** q208 — SELECTIVITY-aware join-order planning, the graded twin of
     * [[graft.plans.CatalogJoinReorder]]'s selectivity leg: the q207
@@ -1445,103 +1301,81 @@ object Planner {
     * 8 orders against the filtered sub-chain truth. Same scale shape as
     * q207; the estimate side adds one ≤4096-row histogram read. */
   def q208SelectiveJoinOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val art = ensureJoinArtifacts(s, dir)
-    val boundsDf = s.read.parquet(s"$art/hists")
-      .where($"col" === "o_totalprice")
-      .selectExpr("mn as hmn", "mx as hmx")
-    val estW = StatsStream.mergedHistogram(s, s"$art/h_ho")
-      .crossJoin(broadcast(boundsDf))
-      .agg(
-        coalesce(sum(when(expr(s"bin < $tbinSql"), $"n")), lit(0L))
-          .as("full_o"),
-        coalesce(sum(when(expr(s"bin = $tbinSql"), $"n")), lit(0L))
-          .as("strad_o"))
-      .selectExpr("full_o + (strad_o div 2) as est_o")
-    val sOrders = Tables(s, dir, "orders")
-      .crossJoin(broadcast(boundsDf))
-      .where(expr(s"o_totalprice <= $tSelSql"))
-      .drop("hmn", "hmx")
+    val (estW, sOrders) = NarrowOrders.frames(s, dir, art)
     val wide = catalogWide(s, art)
       .crossJoin(estW)
-      .crossJoin(exactChainCounts(s, dir, sOrders))
-    rankedOrders(wide, q208Orders("div"))
+      .crossJoin(JoinAudit.exactChainCounts(s, dir, sOrders))
+    JoinAudit.rankedOrders(wide, q208Orders("div"))
   }
 
-  val q208Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}") :+ "e8").mkString(", ")
-    val legs = q208Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |b8 AS (
-       |  SELECT MIN(o_totalprice) AS hmn, MAX(o_totalprice) AS hmx
-       |  FROM orders),
-       |hist8 AS (
-       |  SELECT LEAST(CAST(FLOOR((o_totalprice - hmn) * ${Layout.HistBins}
-       |      / (hmx - hmn)) AS BIGINT), ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM orders, b8 GROUP BY 1),
-       |pt8 AS (SELECT $tSelSql AS t, $tbinSql AS tbin FROM b8),
-       |e8 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN h.bin < p.tbin THEN h.n END), 0)
-       |    + COALESCE(SUM(CASE WHEN h.bin = p.tbin THEN h.n END), 0) // 2
-       |    AS BIGINT) AS est_o
-       |  FROM hist8 h, pt8 p),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders, pt8
-       |  WHERE o_totalprice <= t),
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN so ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM so
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  val q208Oracle: String =
+    chainOracle(q208Orders("//"), NarrowOrders.ctes, Seq("eo"))
 
   // ----------------------------------------------------------------- q209
+
+  /** The chain catalog's BOUNDED MCV head of o_custkey, most common
+    * first (r = 1). */
+  private def rankedHead(s: SparkSession, art: String): DataFrame =
+    McvStream.mergedBoundedHead(s, s"$art/m_co_o")
+      .withColumn("r", row_number().over(
+        Window.orderBy(col("n").desc, col("v"))))
+
+  /** The pg_stats tail rule for `keys` values just past the MCV head:
+    * each prices as `(n − Σhead) div greatest(ndv_est − k, 1)`. */
+  private def tailEstSql(keys: Int, div: String): String = {
+    val one =
+      s"(n_o - mcv_n) $div greatest(${dSql("co_o", div)} - $McvSlots, 1)"
+    if (keys == 1) one else s"$keys * ($one)"
+  }
+
+  /** q209/q215/q216: the chain audit over `sOrders` (orders filtered to
+    * `keys` values of the `ranked` head, past its [[McvSlots]]), est_o
+    * by the tail rule. */
+  private def tailJoinOrder(s: SparkSession, dir: String, art: String,
+      ranked: DataFrame, sOrders: DataFrame, keys: Int): DataFrame = {
+    val headW = ranked.agg(
+      coalesce(sum(when(col("r") <= McvSlots, col("n"))), lit(0L)).as("mcv_n"))
+    val wide = catalogWide(s, art)
+      .crossJoin(headW)
+      .crossJoin(JoinAudit.exactChainCounts(s, dir, sOrders))
+      .selectExpr("*", s"cast(${tailEstSql(keys, "div")} as bigint) as est_o")
+    JoinAudit.rankedOrders(wide, q208Orders("div"))
+  }
+
+  /** DuckDB twin of the BOUNDED MCV artifact of `value`: per replay
+    * carve of `carveKey` the top [[McvStream.BoundSlots]] counts, summed
+    * per value (cnts), and rkd ranking it most common first. */
+  private def boundedHeadCtes(table: String, value: String,
+      carveKey: String): Seq[String] = Seq(
+    s"""bch AS (
+       |  SELECT $value AS v,
+       |    (${Layout.kmvHashSql(carveKey)}) % $ReplayCarves AS chunk
+       |  FROM $table)""",
+    """bcnt AS (
+       |  SELECT chunk, v, CAST(COUNT(*) AS BIGINT) AS n,
+       |    ROW_NUMBER() OVER (PARTITION BY chunk
+       |      ORDER BY COUNT(*) DESC, v) AS br
+       |  FROM bch GROUP BY 1, 2)""",
+    s"""cnts AS (
+       |  SELECT v, CAST(SUM(n) AS BIGINT) AS n FROM bcnt
+       |  WHERE br <= ${McvStream.BoundSlots} GROUP BY 1)""",
+    """rkd AS (
+       |  SELECT v, n, ROW_NUMBER() OVER (ORDER BY n DESC, v) AS r
+       |  FROM cnts)""").map(_.stripMargin)
+
+  /** DuckDB twin of [[tailJoinOrder]], σ(orders) by `cond` over rkd. */
+  private def tailOracle(keys: Int, cond: String): String =
+    chainOracle(q208Orders("//"),
+      boundedHeadCtes("orders", "o_custkey", "o_orderkey") ++ Seq(
+        s"""hd AS (
+           |  SELECT CAST(COALESCE(SUM(CASE WHEN r <= $McvSlots THEN n END), 0)
+           |    AS BIGINT) AS mcv_n
+           |  FROM rkd)""".stripMargin,
+        s"et AS (\n  SELECT CAST(${tailEstSql(keys, "//")} AS BIGINT) AS est_o" +
+          "\n  FROM nn_o, hd, a_co_o)",
+        s"so AS (\n  SELECT o_orderkey, o_custkey FROM orders\n  WHERE $cond)"),
+      Seq("et"))
 
   /** q209 — EQUALITY-predicate join ordering off the maintained MCV:
     * the third Selinger leg (q207 = cardinality × order, q208 = range
@@ -1572,107 +1406,17 @@ object Planner {
     // corpus-scaled full value-count table; head counts are exact for
     // any value inside every batch's top-M, and the oracle recomputes
     // the SAME bounded table from the deterministic batch carve
-    val ranked = McvStream.mergedBoundedHead(s, s"$art/m_co_o")
-      .withColumn("r", row_number().over(Window.orderBy($"n".desc, $"v")))
+    val ranked = rankedHead(s, art)
     val key = ranked.where($"r" === McvSlots + 1).select($"v".as("k_eq"))
-    val headW = ranked.agg(
-      coalesce(sum(when($"r" <= McvSlots, $"n")), lit(0L)).as("mcv_n"))
     val sOrders = Tables(s, dir, "orders")
       .crossJoin(broadcast(key))
       .where($"o_custkey" === $"k_eq")
       .drop("k_eq")
-    val wide = catalogWide(s, art)
-      .crossJoin(headW)
-      .crossJoin(exactChainCounts(s, dir, sOrders))
-      .selectExpr("*", s"cast((n_o - mcv_n) div " +
-        s"greatest(${dSql("co_o", "div")} - $McvSlots, 1) as bigint) " +
-        "as est_o")
-    rankedOrders(wide, q208Orders("div"))
+    tailJoinOrder(s, dir, art, ranked, sOrders, 1)
   }
 
-  val q209Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}") :+ "e9").mkString(", ")
-    val legs = q208Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |bch AS (
-       |  SELECT o_custkey AS v,
-       |    (${Layout.kmvHashSql("o_orderkey")}) % $ReplayCarves AS chunk
-       |  FROM orders),
-       |bcnt AS (
-       |  SELECT chunk, v, CAST(COUNT(*) AS BIGINT) AS n,
-       |    ROW_NUMBER() OVER (PARTITION BY chunk
-       |      ORDER BY COUNT(*) DESC, v) AS br
-       |  FROM bch GROUP BY 1, 2),
-       |cnts AS (
-       |  SELECT v, CAST(SUM(n) AS BIGINT) AS n FROM bcnt
-       |  WHERE br <= ${McvStream.BoundSlots} GROUP BY 1),
-       |rkd AS (
-       |  SELECT v, n, ROW_NUMBER() OVER (ORDER BY n DESC, v) AS r
-       |  FROM cnts),
-       |k9 AS (SELECT v AS k_eq FROM rkd WHERE r = ${McvSlots + 1}),
-       |h9 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN r <= $McvSlots THEN n END), 0)
-       |    AS BIGINT) AS mcv_n
-       |  FROM rkd),
-       |e9 AS (
-       |  SELECT CAST((n.n_o - h.mcv_n)
-       |    // GREATEST(${dSql("co_o", "//")} - $McvSlots, 1) AS BIGINT)
-       |    AS est_o
-       |  FROM nn_o n, h9 h, a_co_o),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders, k9
-       |  WHERE o_custkey = k_eq),
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN so ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM so
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  val q209Oracle: String =
+    tailOracle(1, s"o_custkey = (SELECT v FROM rkd WHERE r = ${McvSlots + 1})")
 
   // ----------------------------------------------------------------- q210
 
@@ -1682,9 +1426,8 @@ object Planner {
     * events ⋈ customer semi-join at all. Identical text in Spark SQL
     * and DuckDB. */
   private val t210Sql = "(hmn + (hmx - hmn) * 8.0 / 64.0)"
-  private val tbin210Sql =
-    s"least(cast(floor(($t210Sql - hmn) * ${Layout.HistBins} " +
-      s"/ (hmx - hmn)) as bigint), ${Layout.HistBins - 1})"
+  private val Est210 = JoinAudit.HistEst(Seq("c" -> t210Sql), "est_c",
+    JoinAudit.estLe("c", _))
 
   /** Per-order cost expressions over the REGISTERED pipeline catalog's
     * wide row — the q207 generator pattern on the
@@ -1742,21 +1485,10 @@ object Planner {
     import s.implicits._
     val art = ensureCatalog(s, dir, PipelineCatalogSpec)
     val spec = PipelineCatalogSpec
-    // one-job catalog consult (see catalogWide) — values identical to
-    // the former per-branch crossJoin
-    val statsW = wideStats(s, art,
+    val statsW = JoinAudit.wideStats(s, art,
       spec.sketches.map(_.id), spec.tables.map(_.tag))
-    val boundsDf = s.read.parquet(s"$art/hists")
-      .where($"col" === "c_custkey")
-      .selectExpr("mn as hmn", "mx as hmx")
-    val estW = StatsStream.mergedHistogram(s, s"$art/h_hcu")
-      .crossJoin(broadcast(boundsDf))
-      .agg(
-        coalesce(sum(when(expr(s"bin < $tbin210Sql"), $"n")), lit(0L))
-          .as("full_c"),
-        coalesce(sum(when(expr(s"bin = $tbin210Sql"), $"n")), lit(0L))
-          .as("strad_c"))
-      .selectExpr("full_c + (strad_c div 2) as est_c")
+    val boundsDf = JoinAudit.histBounds(s, art, "c_custkey")
+    val estW = JoinAudit.histEstimate(s, s"$art/h_hcu", boundsDf, Est210)
     val sCust = Tables(s, dir, "customer")
       .crossJoin(broadcast(boundsDf))
       .where(expr(s"cast(c_custkey as double) <= $t210Sql"))
@@ -1766,113 +1498,38 @@ object Planner {
     val ev = Tables(s, dir, "events").select($"user_id")
     val ed = em.join(dc, $"vec_id" === $"doc_id")
     val dv = dc.join(ev, $"doc_id" === $"user_id")
-    val exactW = unionPivotCounts(Seq(
+    val exactW = JoinAudit.unionPivotCounts(Seq(
       "x_ed" -> ed,
       "x_dv" -> dv,
       "x_vc" -> ev.join(sCust, $"user_id" === $"c_custkey"),
       "x_edv" -> ed.join(ev, $"doc_id" === $"user_id"),
       "x_dvc" -> dv.join(sCust, $"user_id" === $"c_custkey")))
     val wide = statsW.crossJoin(estW).crossJoin(exactW)
-    val legs = q210Orders("div", rescaled = true)
-      .zip(q210Orders("div", rescaled = false)).map {
-        case ((name, est, exact), (_, noscale, _)) =>
-          (name, est, noscale, exact)
-      }
-    val rows = wide.selectExpr(s"stack(${legs.size}, " +
-      legs.map { case (n, est, noscale, exact) =>
-        s"'$n', cast(($est) as bigint), cast(($noscale) as bigint), " +
-          s"cast(($exact) as bigint)"
-      }.mkString(", ") +
-      ") as (join_order, est_cost, noscale_cost, exact_cost)")
-    rows
-      .withColumn("est_rank", row_number().over(
-        Window.orderBy(col("est_cost"), col("join_order"))).cast("long"))
-      .withColumn("noscale_rank", row_number().over(
-        Window.orderBy(col("noscale_cost"), col("join_order"))).cast("long"))
-      .withColumn("exact_rank", row_number().over(
-        Window.orderBy(col("exact_cost"), col("join_order"))).cast("long"))
-      .withColumn("rank_match",
-        when(col("est_rank") === col("exact_rank"), 1L).otherwise(0L))
-      .orderBy(col("join_order"))
+    JoinAudit.rankedOrders(wide, q210Orders("div", rescaled = true),
+      extra = Seq("noscale" -> q210Orders("div", rescaled = false).map(_._2)),
+      errMilli = false)
   }
 
   val q210Oracle: String = {
     val spec = PipelineCatalogSpec
-    val skCtes = spec.sketches.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = spec.tables.map { t =>
-      s"nn_${t.tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_${t.tag} " +
-        s"FROM ${t.table})"
-    }.mkString(",\n")
-    val stFrom = (spec.sketches.map(c => s"a_${c.id}") ++
-      spec.tables.map(t => s"nn_${t.tag}") :+ "e10").mkString(", ")
-    val legs = q210Orders("//", rescaled = true)
-      .zip(q210Orders("//", rescaled = false)).map {
-        case ((n, est, exact), (_, noscale, _)) =>
-          s"""  SELECT '$n' AS join_order,
-             |    CAST(($est) AS BIGINT) AS est_cost,
-             |    CAST(($noscale) AS BIGINT) AS noscale_cost,
-             |    CAST(($exact) AS BIGINT) AS exact_cost
-             |  FROM st, ex""".stripMargin
-      }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |b10 AS (
-       |  SELECT MIN(CAST(c_custkey AS DOUBLE)) AS hmn,
-       |    MAX(CAST(c_custkey AS DOUBLE)) AS hmx
-       |  FROM customer),
-       |hist10 AS (
-       |  SELECT LEAST(CAST(FLOOR((CAST(c_custkey AS DOUBLE) - hmn)
-       |      * ${Layout.HistBins} / (hmx - hmn)) AS BIGINT),
-       |      ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM customer, b10 GROUP BY 1),
-       |pt10 AS (SELECT $t210Sql AS t, $tbin210Sql AS tbin FROM b10),
-       |e10 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN h.bin < p.tbin THEN h.n END), 0)
-       |    + COALESCE(SUM(CASE WHEN h.bin = p.tbin THEN h.n END), 0) // 2
-       |    AS BIGINT) AS est_c
-       |  FROM hist10 h, pt10 p),
-       |scu AS (
-       |  SELECT c_custkey FROM customer, pt10
-       |  WHERE CAST(c_custkey AS DOUBLE) <= t),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings
-       |     JOIN documents ON vec_id = doc_id) AS x_ed,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM documents
-       |     JOIN events ON doc_id = user_id) AS x_dv,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM events
-       |     JOIN scu ON user_id = c_custkey) AS x_vc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings
-       |     JOIN documents ON vec_id = doc_id
-       |     JOIN events ON doc_id = user_id) AS x_edv,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM documents
-       |     JOIN events ON doc_id = user_id
-       |     JOIN scu ON user_id = c_custkey) AS x_dvc),
-       |st AS (SELECT * FROM $stFrom),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, noscale_cost, exact_cost,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY noscale_cost, join_order)
-       |    AS BIGINT) AS noscale_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
+    val ed = "embeddings\n     JOIN documents ON vec_id = doc_id"
+    val dv = "documents\n     JOIN events ON doc_id = user_id"
+    JoinAudit.oracle(
+      JoinAudit.catalogCtes(spec.sketches, spec.tables) ++
+        JoinAudit.histEstCtes("c", "customer", "CAST(c_custkey AS DOUBLE)",
+          Est210) ++ Seq(
+        s"scu AS (\n  SELECT c_custkey FROM customer, bc\n" +
+          s"  WHERE CAST(c_custkey AS DOUBLE) <= $t210Sql)",
+        JoinAudit.countsCte("ex", Seq(
+          "x_ed" -> ed,
+          "x_dv" -> dv,
+          "x_vc" -> "events\n     JOIN scu ON user_id = c_custkey",
+          "x_edv" -> s"$ed\n     JOIN events ON doc_id = user_id",
+          "x_dvc" -> s"$dv\n     JOIN scu ON user_id = c_custkey")),
+        JoinAudit.stCte(spec.sketches, spec.tables, Seq("ec"))),
+      q210Orders("//", rescaled = true),
+      extra = Seq("noscale" -> q210Orders("//", rescaled = false).map(_._2)),
+      errMilli = false)
   }
 
   // ----------------------------------------------------------------- q211
@@ -1925,20 +1582,10 @@ object Planner {
   }
 
   val q211Oracle: String =
-    s"""WITH bch AS (
-       |  SELECT user_id AS v,
-       |    (${Layout.kmvHashSql("event_id")}) % $ReplayCarves AS chunk
-       |  FROM events),
-       |bcnt AS (
-       |  SELECT chunk, v, CAST(COUNT(*) AS BIGINT) AS n,
-       |    ROW_NUMBER() OVER (PARTITION BY chunk
-       |      ORDER BY COUNT(*) DESC, v) AS br
-       |  FROM bch GROUP BY 1, 2),
-       |ucnt AS (
-       |  SELECT v, CAST(SUM(n) AS BIGINT) AS n FROM bcnt
-       |  WHERE br <= ${McvStream.BoundSlots} GROUP BY 1),
+    s"""WITH ${boundedHeadCtes("events", "user_id", "event_id")
+         .mkString(",\n")},
        |umax AS (
-       |  SELECT CAST(COALESCE(MAX(n), 0) AS BIGINT) AS max_uid FROM ucnt),
+       |  SELECT CAST(COALESCE(MAX(n), 0) AS BIGINT) AS max_uid FROM cnts),
        |ecnt AS (
        |  SELECT ${graft.ops.Sql.djb2("event_type")} AS v,
        |    CAST(COUNT(*) AS BIGINT) AS n
@@ -1960,12 +1607,12 @@ object Planner {
 
   // ----------------------------------------------------------------- q212
 
-  /** q212's threshold/straddle-bin text over the pipeline catalog's
-    * staged bounds rows — (lmn, lmx) for embeddings.label, (cmn, cmx)
-    * for c_custkey. Identical text in Spark SQL and DuckDB. */
-  private def tbin212Sql(t: String, mn: String, mx: String): String =
-    s"least(cast(floor(($t - $mn) * ${Layout.HistBins} " +
-      s"/ ($mx - $mn)) as bigint), ${Layout.HistBins - 1})"
+  /** q212's histogram estimates over the pipeline catalog: σ(label ≤ 1)
+    * on embeddings and σ(c_custkey ≤ 2) on customer. */
+  private val Est212Label = JoinAudit.HistEst(Seq("l" -> "1.0"), "est_em",
+    JoinAudit.estLe("l", _))
+  private val Est212Cust = JoinAudit.HistEst(Seq("c" -> "2.0"), "est_c",
+    JoinAudit.estLe("c", _))
 
   /** Per-plan (name, est-cost expr, exact-cost expr) for the q212
     * shapes: the bushy two-arm tree vs the two contending left-deep
@@ -2010,32 +1657,12 @@ object Planner {
     import s.implicits._
     val art = ensureCatalog(s, dir, PipelineCatalogSpec)
     val spec = PipelineCatalogSpec
-    // one-job catalog consult (see catalogWide) — values identical to
-    // the former per-branch crossJoin
-    val statsW = wideStats(s, art,
+    val statsW = JoinAudit.wideStats(s, art,
       spec.sketches.map(_.id), spec.tables.map(_.tag))
-    val lb = s.read.parquet(s"$art/hists").where($"col" === "label")
-      .selectExpr("mn as lmn", "mx as lmx")
-    val cb = s.read.parquet(s"$art/hists").where($"col" === "c_custkey")
-      .selectExpr("mn as cmn", "mx as cmx")
-    val estEmW = StatsStream.mergedHistogram(s, s"$art/h_hem")
-      .crossJoin(broadcast(lb))
-      .agg(coalesce(sum(when(
-          expr(s"bin < ${tbin212Sql("1.0", "lmn", "lmx")}"), $"n")), lit(0L))
-          .as("full_l"),
-        coalesce(sum(when(
-          expr(s"bin = ${tbin212Sql("1.0", "lmn", "lmx")}"), $"n")), lit(0L))
-          .as("strad_l"))
-      .selectExpr("full_l + (strad_l div 2) as est_em")
-    val estCW = StatsStream.mergedHistogram(s, s"$art/h_hcu")
-      .crossJoin(broadcast(cb))
-      .agg(coalesce(sum(when(
-          expr(s"bin < ${tbin212Sql("2.0", "cmn", "cmx")}"), $"n")), lit(0L))
-          .as("full_c"),
-        coalesce(sum(when(
-          expr(s"bin = ${tbin212Sql("2.0", "cmn", "cmx")}"), $"n")), lit(0L))
-          .as("strad_c"))
-      .selectExpr("full_c + (strad_c div 2) as est_c")
+    val estEmW = JoinAudit.histEstimate(s, s"$art/h_hem",
+      JoinAudit.histBounds(s, art, "label", "lmn", "lmx"), Est212Label)
+    val estCW = JoinAudit.histEstimate(s, s"$art/h_hcu",
+      JoinAudit.histBounds(s, art, "c_custkey", "cmn", "cmx"), Est212Cust)
     val sem = Tables(s, dir, "embeddings")
       .where(expr("cast(label as double) <= 1.0")).select($"vec_id")
     val scu = Tables(s, dir, "customer")
@@ -2043,7 +1670,7 @@ object Planner {
     val dc = Tables(s, dir, "documents").select($"doc_id")
     val ev = Tables(s, dir, "events").select($"user_id")
     val ed = sem.join(dc, $"vec_id" === $"doc_id")
-    val exactW = unionPivotCounts(Seq(
+    val exactW = JoinAudit.unionPivotCounts(Seq(
       "x_ed" -> ed,
       "x_vc" -> ev.join(broadcast(scu), $"user_id" === $"c_custkey"),
       "x_edv" -> ed.join(ev, $"doc_id" === $"user_id"),
@@ -2051,127 +1678,47 @@ object Planner {
         .join(broadcast(scu), $"user_id" === $"c_custkey")))
     val wide = statsW.crossJoin(estEmW)
       .crossJoin(estCW).crossJoin(exactW)
-    val legs = q212Plans("div")
-    val rows = wide.selectExpr(s"stack(${legs.size}, " +
-      legs.map { case (n, est, exact) =>
-        s"'$n', cast(($est) as bigint), cast(($exact) as bigint)"
-      }.mkString(", ") + ") as (plan, est_cost, exact_cost)")
-    rows
-      .withColumn("est_rank", row_number().over(
-        Window.orderBy(col("est_cost"), col("plan"))).cast("long"))
-      .withColumn("exact_rank", row_number().over(
-        Window.orderBy(col("exact_cost"), col("plan"))).cast("long"))
-      .withColumn("rank_match",
-        when(col("est_rank") === col("exact_rank"), 1L).otherwise(0L))
-      .orderBy(col("plan"))
+    JoinAudit.rankedOrders(wide, q212Plans("div"), name = "plan",
+      errMilli = false)
   }
 
   val q212Oracle: String = {
     val spec = PipelineCatalogSpec
-    val skCtes = spec.sketches.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = spec.tables.map { t =>
-      s"nn_${t.tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_${t.tag} " +
-        s"FROM ${t.table})"
-    }.mkString(",\n")
-    val stFrom = (spec.sketches.map(c => s"a_${c.id}") ++
-      spec.tables.map(t => s"nn_${t.tag}") ++
-      Seq("e12l", "e12c")).mkString(", ")
-    val legs = q212Plans("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS plan,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |bl AS (
-       |  SELECT MIN(CAST(label AS DOUBLE)) AS lmn,
-       |    MAX(CAST(label AS DOUBLE)) AS lmx
-       |  FROM embeddings),
-       |bc AS (
-       |  SELECT MIN(CAST(c_custkey AS DOUBLE)) AS cmn,
-       |    MAX(CAST(c_custkey AS DOUBLE)) AS cmx
-       |  FROM customer),
-       |histl AS (
-       |  SELECT LEAST(CAST(FLOOR((CAST(label AS DOUBLE) - lmn)
-       |      * ${Layout.HistBins} / (lmx - lmn)) AS BIGINT),
-       |      ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM embeddings, bl GROUP BY 1),
-       |histc AS (
-       |  SELECT LEAST(CAST(FLOOR((CAST(c_custkey AS DOUBLE) - cmn)
-       |      * ${Layout.HistBins} / (cmx - cmn)) AS BIGINT),
-       |      ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM customer, bc GROUP BY 1),
-       |e12l AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN h.bin <
-       |      ${tbin212Sql("1.0", "lmn", "lmx")} THEN h.n END), 0)
-       |    + COALESCE(SUM(CASE WHEN h.bin =
-       |      ${tbin212Sql("1.0", "lmn", "lmx")} THEN h.n END), 0) // 2
-       |    AS BIGINT) AS est_em
-       |  FROM histl h, bl),
-       |e12c AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN h.bin <
-       |      ${tbin212Sql("2.0", "cmn", "cmx")} THEN h.n END), 0)
-       |    + COALESCE(SUM(CASE WHEN h.bin =
-       |      ${tbin212Sql("2.0", "cmn", "cmx")} THEN h.n END), 0) // 2
-       |    AS BIGINT) AS est_c
-       |  FROM histc h, bc),
-       |sem AS (
-       |  SELECT vec_id FROM embeddings WHERE CAST(label AS DOUBLE) <= 1.0),
-       |scu AS (
-       |  SELECT c_custkey FROM customer
-       |  WHERE CAST(c_custkey AS DOUBLE) <= 2.0),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM sem
-       |     JOIN documents ON vec_id = doc_id) AS x_ed,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM events
-       |     JOIN scu ON user_id = c_custkey) AS x_vc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM sem
-       |     JOIN documents ON vec_id = doc_id
-       |     JOIN events ON doc_id = user_id) AS x_edv,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM documents
-       |     JOIN events ON doc_id = user_id
-       |     JOIN scu ON user_id = c_custkey) AS x_dvc),
-       |st AS (SELECT * FROM $stFrom),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT plan, est_cost, exact_cost,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, plan) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, plan) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, plan)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, plan)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY plan""".stripMargin
+    val ed = "sem\n     JOIN documents ON vec_id = doc_id"
+    JoinAudit.oracle(JoinAudit.catalogCtes(spec.sketches, spec.tables) ++
+      JoinAudit.histEstCtes("l", "embeddings", "CAST(label AS DOUBLE)",
+        Est212Label) ++
+      JoinAudit.histEstCtes("c", "customer", "CAST(c_custkey AS DOUBLE)",
+        Est212Cust) ++ Seq(
+      "sem AS (\n  SELECT vec_id FROM embeddings" +
+        " WHERE CAST(label AS DOUBLE) <= 1.0)",
+      "scu AS (\n  SELECT c_custkey FROM customer\n" +
+        "  WHERE CAST(c_custkey AS DOUBLE) <= 2.0)",
+      JoinAudit.countsCte("ex", Seq(
+        "x_ed" -> ed,
+        "x_vc" -> "events\n     JOIN scu ON user_id = c_custkey",
+        "x_edv" -> s"$ed\n     JOIN events ON doc_id = user_id",
+        "x_dvc" -> ("documents\n     JOIN events ON doc_id = user_id\n" +
+          "     JOIN scu ON user_id = c_custkey"))),
+      JoinAudit.stCte(spec.sketches, spec.tables, Seq("el", "ec"))),
+      q212Plans("//"), name = "plan", errMilli = false)
   }
 
   // ----------------------------------------------------------- q214/q215
 
-  /** q214's window thresholds over the staged (hmn, hmx) bounds: a
-    * 2/64-wide slice CENTRED in the domain — identical text in Spark
-    * SQL and DuckDB. Mid-domain is the point: composing the two
-    * one-sided estimates under independence keeps ~24% of the mass
-    * (0.5 × 0.47) and misses the flip; estLE(hi) − estLE(lo) prices
-    * the ~n/32 window right. */
-  private val tLo214Sql = "(hmn + (hmx - hmn) * 30.0 / 64.0)"
-  private val tHi214Sql = "(hmn + (hmx - hmn) * 32.0 / 64.0)"
-  private def tbin214(t: String): String =
-    s"least(cast(floor(($t - hmn) * ${Layout.HistBins} " +
-      s"/ (hmx - hmn)) as bigint), ${Layout.HistBins - 1})"
+  /** q214's window: a 2/64-wide slice CENTRED in the o_totalprice
+    * domain. Mid-domain is the point: composing the two one-sided
+    * estimates under independence keeps ~24% of the mass (0.5 × 0.47)
+    * and misses the flip; estLE(hi) − estLE(lo) prices the ~n/32 window
+    * right. */
+  private val WindowOrders = {
+    val (lo, hi) =
+      ("(hmn + (hmx - hmn) * 30.0 / 64.0)", "(hmn + (hmx - hmn) * 32.0 / 64.0)")
+    OrdersFilter(JoinAudit.HistEst(Seq("lo" -> lo, "hi" -> hi), "est_o",
+      d => s"greatest(${JoinAudit.estLe("hi", d)} - " +
+        s"${JoinAudit.estLe("lo", d)}, 0)"),
+      s"o_totalprice >= $lo and o_totalprice <= $hi")
+  }
 
   /** q214 — BETWEEN selectivity join ordering (VERDICT r18 #7): the
     * q208 enumeration with orders filtered to the mid-domain window
@@ -2187,115 +1734,16 @@ object Planner {
     * estimate adds one more threshold over the same ≤4096-row
     * histogram read. */
   def q214BetweenJoinOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val art = ensureJoinArtifacts(s, dir)
-    val boundsDf = s.read.parquet(s"$art/hists")
-      .where($"col" === "o_totalprice")
-      .selectExpr("mn as hmn", "mx as hmx")
-    val estW = StatsStream.mergedHistogram(s, s"$art/h_ho")
-      .crossJoin(broadcast(boundsDf))
-      .agg(
-        coalesce(sum(when(expr(s"bin < ${tbin214(tLo214Sql)}"), $"n")),
-          lit(0L)).as("full_lo"),
-        coalesce(sum(when(expr(s"bin = ${tbin214(tLo214Sql)}"), $"n")),
-          lit(0L)).as("strad_lo"),
-        coalesce(sum(when(expr(s"bin < ${tbin214(tHi214Sql)}"), $"n")),
-          lit(0L)).as("full_hi"),
-        coalesce(sum(when(expr(s"bin = ${tbin214(tHi214Sql)}"), $"n")),
-          lit(0L)).as("strad_hi"))
-      .selectExpr("greatest((full_hi + (strad_hi div 2)) - " +
-        "(full_lo + (strad_lo div 2)), 0) as est_o")
-    val sOrders = Tables(s, dir, "orders")
-      .crossJoin(broadcast(boundsDf))
-      .where(expr(s"o_totalprice >= $tLo214Sql and " +
-        s"o_totalprice <= $tHi214Sql"))
-      .drop("hmn", "hmx")
+    val (estW, sOrders) = WindowOrders.frames(s, dir, art)
     val wide = catalogWide(s, art)
       .crossJoin(estW)
-      .crossJoin(exactChainCounts(s, dir, sOrders))
-    rankedOrders(wide, q208Orders("div"))
+      .crossJoin(JoinAudit.exactChainCounts(s, dir, sOrders))
+    JoinAudit.rankedOrders(wide, q208Orders("div"))
   }
 
-  val q214Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}") :+ "e14").mkString(", ")
-    val legs = q208Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |b14 AS (
-       |  SELECT MIN(o_totalprice) AS hmn, MAX(o_totalprice) AS hmx
-       |  FROM orders),
-       |hist14 AS (
-       |  SELECT LEAST(CAST(FLOOR((o_totalprice - hmn) * ${Layout.HistBins}
-       |      / (hmx - hmn)) AS BIGINT), ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM orders, b14 GROUP BY 1),
-       |pt14 AS (
-       |  SELECT $tLo214Sql AS t_lo, $tHi214Sql AS t_hi,
-       |    ${tbin214(tLo214Sql)} AS tbin_lo,
-       |    ${tbin214(tHi214Sql)} AS tbin_hi
-       |  FROM b14),
-       |e14 AS (
-       |  SELECT CAST(GREATEST(
-       |    (COALESCE(SUM(CASE WHEN h.bin < p.tbin_hi THEN h.n END), 0)
-       |      + COALESCE(SUM(CASE WHEN h.bin = p.tbin_hi THEN h.n END), 0)
-       |        // 2)
-       |    - (COALESCE(SUM(CASE WHEN h.bin < p.tbin_lo THEN h.n END), 0)
-       |      + COALESCE(SUM(CASE WHEN h.bin = p.tbin_lo THEN h.n END), 0)
-       |        // 2), 0) AS BIGINT) AS est_o
-       |  FROM hist14 h, pt14 p),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders, pt14
-       |  WHERE o_totalprice >= t_lo AND o_totalprice <= t_hi),
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN so ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM so
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  val q214Oracle: String =
+    chainOracle(q208Orders("//"), WindowOrders.ctes, Seq("eo"))
 
   /** q215 — IN-LIST selectivity join ordering (VERDICT r18 #7): the
     * q209 enumeration with orders filtered to
@@ -2312,109 +1760,18 @@ object Planner {
   def q215InlistJoinOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val art = ensureJoinArtifacts(s, dir)
-    val ranked = McvStream.mergedBoundedHead(s, s"$art/m_co_o")
-      .withColumn("r", row_number().over(Window.orderBy($"n".desc, $"v")))
+    val ranked = rankedHead(s, art)
     val keys = ranked
       .where($"r" > McvSlots && $"r" <= McvSlots + 3)
       .select($"v".as("k_in"))
-    val headW = ranked.agg(
-      coalesce(sum(when($"r" <= McvSlots, $"n")), lit(0L)).as("mcv_n"))
     val sOrders = Tables(s, dir, "orders")
       .join(broadcast(keys), $"o_custkey" === $"k_in")
       .drop("k_in")
-    val wide = catalogWide(s, art)
-      .crossJoin(headW)
-      .crossJoin(exactChainCounts(s, dir, sOrders))
-      .selectExpr("*", s"cast(3 * ((n_o - mcv_n) div " +
-        s"greatest(${dSql("co_o", "div")} - $McvSlots, 1)) as bigint) " +
-        "as est_o")
-    rankedOrders(wide, q208Orders("div"))
+    tailJoinOrder(s, dir, art, ranked, sOrders, 3)
   }
 
-  val q215Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}") :+ "e15").mkString(", ")
-    val legs = q208Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |bch AS (
-       |  SELECT o_custkey AS v,
-       |    (${Layout.kmvHashSql("o_orderkey")}) % $ReplayCarves AS chunk
-       |  FROM orders),
-       |bcnt AS (
-       |  SELECT chunk, v, CAST(COUNT(*) AS BIGINT) AS n,
-       |    ROW_NUMBER() OVER (PARTITION BY chunk
-       |      ORDER BY COUNT(*) DESC, v) AS br
-       |  FROM bch GROUP BY 1, 2),
-       |cnts AS (
-       |  SELECT v, CAST(SUM(n) AS BIGINT) AS n FROM bcnt
-       |  WHERE br <= ${McvStream.BoundSlots} GROUP BY 1),
-       |rkd AS (
-       |  SELECT v, n, ROW_NUMBER() OVER (ORDER BY n DESC, v) AS r
-       |  FROM cnts),
-       |k15 AS (SELECT v AS k_in FROM rkd
-       |  WHERE r > $McvSlots AND r <= ${McvSlots + 3}),
-       |h15 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN r <= $McvSlots THEN n END), 0)
-       |    AS BIGINT) AS mcv_n
-       |  FROM rkd),
-       |e15 AS (
-       |  SELECT CAST(3 * ((n.n_o - h.mcv_n)
-       |    // GREATEST(${dSql("co_o", "//")} - $McvSlots, 1)) AS BIGINT)
-       |    AS est_o
-       |  FROM nn_o n, h15 h, a_co_o),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders
-       |  JOIN k15 ON o_custkey = k_in),
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN so ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM so
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  val q215Oracle: String = tailOracle(3, "o_custkey IN (SELECT v FROM rkd " +
+    s"WHERE r > $McvSlots AND r <= ${McvSlots + 3})")
 
   // ----------------------------------------------------------------- q213
 
@@ -2436,6 +1793,13 @@ object Planner {
     'E' -> ("n_ev", "events"),
     'D' -> ("n_dc", "documents"),
     'M' -> ("n_em", "embeddings"))
+
+  /** The registered pipeline catalog's share of the graph (E, D, M). */
+  private def NinePipeSketches: Seq[CatalogColumn] =
+    PipelineCatalogSpec.sketches
+      .filter(c => Set("em_vec", "dc_doc", "ev_uid")(c.id))
+  private def NinePipeTables: Seq[CatalogTable] =
+    PipelineCatalogSpec.tables.filter(t => Set("em", "dc", "ev")(t.tag))
 
   /** The tree's 8 edges: (tagA, tagB, denominator symbol, SQL join
     * condition). Denominator symbols resolve in the `den` frame/CTE —
@@ -2554,7 +1918,7 @@ object Planner {
     * count-aggregated join over the σ(orders) sub-region (dimension
     * sides broadcast; prefixes shared between orders compute once).
     * No fourth catalog build: both consulted catalogs ride the one
-    * combined planner_prep stream — supplier and l_suppkey joined the
+    * combined planner_prep replay — supplier and l_suppkey joined the
     * chain spec as two staged legs, exactly the "two legs away"
     * VERDICT r19 called out. Scale shape: estimates read ≤4096
     * histogram rows + |batches|·≤K sketch rows per column; a
@@ -2563,30 +1927,10 @@ object Planner {
     import s.implicits._
     val artJ = ensureJoinArtifacts(s, dir)
     val artP = ensureCatalog(s, dir, PipelineCatalogSpec)
-    val boundsDf = s.read.parquet(s"$artJ/hists")
-      .where($"col" === "o_totalprice")
-      .selectExpr("mn as hmn", "mx as hmx")
-    val estW = StatsStream.mergedHistogram(s, s"$artJ/h_ho")
-      .crossJoin(broadcast(boundsDf))
-      .agg(
-        coalesce(sum(when(expr(s"bin < $tbinSql"), $"n")), lit(0L))
-          .as("full_o"),
-        coalesce(sum(when(expr(s"bin = $tbinSql"), $"n")), lit(0L))
-          .as("strad_o"))
-      .selectExpr("full_o + (strad_o div 2) as est_o")
-    val sOrders = Tables(s, dir, "orders")
-      .crossJoin(broadcast(boundsDf))
-      .where(expr(s"o_totalprice <= $tSelSql"))
-      .drop("hmn", "hmx")
-    // the pipeline catalog's three sketches + three counts, read with
-    // the same in-plan branches as catalogWide
-    // one-job catalog consult (see catalogWide) — values identical to
-    // the former per-branch crossJoin
-    val pipeWide = wideStats(s, artP,
-      PipelineCatalogSpec.sketches
-        .filter(c => Set("em_vec", "dc_doc", "ev_uid")(c.id)).map(_.id),
-      PipelineCatalogSpec.tables
-        .filter(t => Set("em", "dc", "ev")(t.tag)).map(_.tag))
+    val (estW, sOrders) = NarrowOrders.frames(s, dir, artJ)
+    // the pipeline catalog's three sketches + three counts, one job
+    val pipeWide = JoinAudit.wideStats(s, artP,
+      NinePipeSketches.map(_.id), NinePipeTables.map(_.tag))
     // the 26 distinct exact prefix counts, σ(orders) in the o slot.
     // r20 optimization (guide §2.3 "shuffle fewer bytes" / §8 "decide
     // with small rows"): formerly 26 INDEPENDENT multi-way joins over
@@ -2639,7 +1983,7 @@ object Planner {
     // join would produce; a non-matching side contributes coalesce(0),
     // exactly the rows the raw join would drop.
     val (lPre, smallPre) = ninePrefixes.partition(_._2.contains('L'))
-    val smallW = unionPivotCounts(smallPre.map { case (key, addOrder) =>
+    val smallW = JoinAudit.unionPivotCounts(smallPre.map { case (key, addOrder) =>
       key -> chainFor(addOrder)
     })
     val aOrders = lPre.map { case (_, addOrder) =>
@@ -2676,87 +2020,26 @@ object Planner {
       .selectExpr(("*" +: nineDenoms("div").map { case (sym, d) =>
         s"($d) as $sym"
       }): _*)
-    rankedOrders(wide, nineOrderLegs("div"))
+    JoinAudit.rankedOrders(wide, nineOrderLegs("div"))
   }
 
   val q213Oracle: String = {
-    val allSketch = JoinSketchCols ++ PipelineCatalogSpec.sketches
-      .filter(c => Set("em_vec", "dc_doc", "ev_uid")(c.id))
-    val skCtes = allSketch.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val allTabs = JoinTables.map(t => (t.tag, t.table)) ++
-      Seq(("ev", "events"), ("dc", "documents"), ("em", "embeddings"))
-    val nCtes = allTabs.map { case (tag, table) =>
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val exSubqs = ninePrefixes.map { case (key, addOrder) =>
-      val from = addOrder.drop(1).zipWithIndex
+    val sketches = JoinSketchCols ++ NinePipeSketches
+    val tables = JoinTables ++ NinePipeTables
+    val exact = ninePrefixes.map { case (key, addOrder) =>
+      key -> addOrder.drop(1).zipWithIndex
         .foldLeft(NineRels(addOrder.head)._2) { case (f, (t, i)) =>
           val edge = nineEdgeInto(t, addOrder.take(i + 1).toSet)
           s"$f JOIN ${NineRels(t)._2} ON ${edge._4}"
         }
-      s"    (SELECT CAST(COUNT(*) AS BIGINT) FROM $from) AS $key"
-    }.mkString(",\n")
-    val denoms = nineDenoms("//").map { case (sym, d) =>
+    }
+    val den = nineDenoms("//").map { case (sym, d) =>
       s"    CAST(($d) AS BIGINT) AS $sym"
-    }.mkString(",\n")
-    val stFrom = (allSketch.map(c => s"a_${c.id}") ++
-      allTabs.map { case (tag, _) => s"nn_$tag" } :+ "e13").mkString(", ")
-    val legs = nineOrderLegs("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM den, ex9""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |b13 AS (
-       |  SELECT MIN(o_totalprice) AS hmn, MAX(o_totalprice) AS hmx
-       |  FROM orders),
-       |hist13 AS (
-       |  SELECT LEAST(CAST(FLOOR((o_totalprice - hmn) * ${Layout.HistBins}
-       |      / (hmx - hmn)) AS BIGINT), ${Layout.HistBins - 1}) AS bin,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM orders, b13 GROUP BY 1),
-       |pt13 AS (SELECT $tSelSql AS t, $tbinSql AS tbin FROM b13),
-       |e13 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN h.bin < p.tbin THEN h.n END), 0)
-       |    + COALESCE(SUM(CASE WHEN h.bin = p.tbin THEN h.n END), 0) // 2
-       |    AS BIGINT) AS est_o
-       |  FROM hist13 h, pt13 p),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders, pt13
-       |  WHERE o_totalprice <= t),
-       |st AS (SELECT * FROM $stFrom),
-       |den AS (
-       |  SELECT *,
-       |$denoms
-       |  FROM st),
-       |ex9 AS (
-       |  SELECT
-       |$exSubqs),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
+    }.mkString("den AS (\n  SELECT *,\n", ",\n", "\n  FROM st)")
+    JoinAudit.oracle(JoinAudit.catalogCtes(sketches, tables) ++
+      NarrowOrders.ctes ++ Seq(JoinAudit.stCte(sketches, tables, Seq("eo")),
+        den, JoinAudit.countsCte("ex9", exact)),
+      nineOrderLegs("//"), from = "den, ex9")
   }
 
   // ----------------------------------------------------------------- q216
@@ -2777,112 +2060,22 @@ object Planner {
   def q216OrJoinOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val art = ensureJoinArtifacts(s, dir)
-    val ranked = McvStream.mergedBoundedHead(s, s"$art/m_co_o")
-      .withColumn("r", row_number().over(Window.orderBy($"n".desc, $"v")))
+    val ranked = rankedHead(s, art)
     // the three tail keys as DRIVER-SIDE literals — the consumer shape
     // the rule's Or branch prices (a 3-row metadata read, exactly how a
     // user authors an OR filter)
     val ks = ranked
       .where($"r" > McvSlots && $"r" <= McvSlots + 3)
       .orderBy($"r").select($"v").collect().map(_.getLong(0))
-    val headW = ranked.agg(
-      coalesce(sum(when($"r" <= McvSlots, $"n")), lit(0L)).as("mcv_n"))
     val sOrders = Tables(s, dir, "orders")
       .where($"o_custkey" === ks(0) || $"o_custkey" === ks(1) ||
         $"o_custkey" === ks(2))
-    val wide = catalogWide(s, art)
-      .crossJoin(headW)
-      .crossJoin(exactChainCounts(s, dir, sOrders))
-      .selectExpr("*", s"cast(3 * ((n_o - mcv_n) div " +
-        s"greatest(${dSql("co_o", "div")} - $McvSlots, 1)) as bigint) " +
-        "as est_o")
-    rankedOrders(wide, q208Orders("div"))
+    tailJoinOrder(s, dir, art, ranked, sOrders, 3)
   }
 
-  val q216Oracle: String = {
-    val skCtes = JoinSketchCols.map { c =>
-      val (id, table, column) = (c.id, c.table, c.column)
-      s"""sk_$id AS (
-         |  SELECT DISTINCT ${Layout.kmvHashSql(column)} AS h FROM $table
-         |  WHERE $column IS NOT NULL ORDER BY h LIMIT ${Layout.KmvK}),
-         |a_$id AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS sk_$id,
-         |    CAST(COALESCE(MAX(h), 0) AS BIGINT) AS kth_$id
-         |  FROM sk_$id)""".stripMargin
-    }.mkString(",\n")
-    val nCtes = JoinTables.map { t =>
-      val (tag, table) = (t.tag, t.table)
-      s"nn_$tag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_$tag FROM $table)"
-    }.mkString(",\n")
-    val stFrom = (JoinSketchCols.map(c => s"a_${c.id}") ++
-      JoinTables.map(t => s"nn_${t.tag}") :+ "e16").mkString(", ")
-    val legs = q208Orders("//").map { case (n, est, exact) =>
-      s"""  SELECT '$n' AS join_order,
-         |    CAST(($est) AS BIGINT) AS est_cost,
-         |    CAST(($exact) AS BIGINT) AS exact_cost
-         |  FROM st, ex""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $skCtes,
-       |$nCtes,
-       |bch AS (
-       |  SELECT o_custkey AS v,
-       |    (${Layout.kmvHashSql("o_orderkey")}) % $ReplayCarves AS chunk
-       |  FROM orders),
-       |bcnt AS (
-       |  SELECT chunk, v, CAST(COUNT(*) AS BIGINT) AS n,
-       |    ROW_NUMBER() OVER (PARTITION BY chunk
-       |      ORDER BY COUNT(*) DESC, v) AS br
-       |  FROM bch GROUP BY 1, 2),
-       |cnts AS (
-       |  SELECT v, CAST(SUM(n) AS BIGINT) AS n FROM bcnt
-       |  WHERE br <= ${McvStream.BoundSlots} GROUP BY 1),
-       |rkd AS (
-       |  SELECT v, n, ROW_NUMBER() OVER (ORDER BY n DESC, v) AS r
-       |  FROM cnts),
-       |h16 AS (
-       |  SELECT CAST(COALESCE(SUM(CASE WHEN r <= $McvSlots THEN n END), 0)
-       |    AS BIGINT) AS mcv_n
-       |  FROM rkd),
-       |e16 AS (
-       |  SELECT CAST(3 * ((n.n_o - h.mcv_n)
-       |    // GREATEST(${dSql("co_o", "//")} - $McvSlots, 1)) AS BIGINT)
-       |    AS est_o
-       |  FROM nn_o n, h16 h, a_co_o),
-       |so AS (
-       |  SELECT o_orderkey, o_custkey FROM orders
-       |  WHERE o_custkey = (SELECT v FROM rkd WHERE r = ${McvSlots + 1})
-       |     OR o_custkey = (SELECT v FROM rkd WHERE r = ${McvSlots + 2})
-       |     OR o_custkey = (SELECT v FROM rkd WHERE r = ${McvSlots + 3})),
-       |st AS (SELECT * FROM $stFrom),
-       |ex AS (
-       |  SELECT
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey) AS x_nc,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-       |     JOIN customer ON n_nationkey = c_nationkey
-       |     JOIN so ON c_custkey = o_custkey) AS x_nco,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey) AS x_co,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-       |     JOIN so ON c_custkey = o_custkey
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_col,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM so
-       |     JOIN lineitem ON o_orderkey = l_orderkey) AS x_ol),
-       |costed AS (
-       |$legs
-       |)
-       |SELECT join_order, est_cost, exact_cost,
-       |  CAST((1000 * (est_cost - exact_cost))
-       |    // GREATEST(exact_cost, 1) AS BIGINT) AS err_milli,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY est_cost, join_order) AS BIGINT)
-       |    AS est_rank,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY exact_cost, join_order) AS BIGINT)
-       |    AS exact_rank,
-       |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY est_cost, join_order)
-       |         = ROW_NUMBER() OVER (ORDER BY exact_cost, join_order)
-       |       THEN 1 ELSE 0 END AS BIGINT) AS rank_match
-       |FROM costed ORDER BY join_order""".stripMargin
-  }
+  val q216Oracle: String = tailOracle(3, (1 to 3).map(i =>
+    s"o_custkey = (SELECT v FROM rkd WHERE r = ${McvSlots + i})")
+    .mkString("\n     OR "))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q205_planner_audit" -> q205PlannerAudit _,

@@ -25,11 +25,8 @@ object Similarity {
   private val planeValSql =
     "(CAST((1103515245 * (PL_I * 64 + PL_D) + 12345) % 2147483648 AS DOUBLE) / 2147483648.0 - 0.5)"
 
-  /** Signed projection of v onto pseudo-plane i (sequential fold over dims). */
-  private def lshDot(v: Column, i: Column): Column =
-    aggregate(sequence(lit(0), lit(63)), lit(0.0),
-      (acc, d) => acc + element_at(v, d + 1).cast("double") * planeVal(i, d))
-
+  /** DuckDB text of the signed projection of v onto pseudo-plane i (a
+    * sequential fold over the 64 dims). */
   private[ops] def lshDotSql(v: String, i: String): String =
     s"list_reduce(list_prepend(0.0, list_transform(range(0, 64), pd -> " +
       s"CAST(($v)[pd + 1] AS DOUBLE) * ${planeValSql.replace("PL_I", i).replace("PL_D", "pd")})), " +
@@ -37,10 +34,10 @@ object Similarity {
 
   /** 8-bit LSH bucket: sign bits of planes 0–7, plane 0 the MSB — a single
     * band of the codegen'd [[graft.functions.PlaneBands]] sketch (band 0's
-    * key carries no band-index offset, so it IS the 8-bit bucket). The
-    * interpreted higher-order fold this replaces ([[lshDot]], kept for the
-    * oracle-SQL mirror and specs) computes the identical doubles — the
-    * expression just runs them as a tight generated loop on the scan. */
+    * key carries no band-index offset, so it IS the 8-bit bucket). It
+    * computes the same doubles as the oracle's higher-order fold
+    * ([[lshDotSql]]; PlaneBandsSpec diffs it against a Spark copy of that
+    * fold), as a tight generated loop on the scan. */
   private def bucket(v: Column): Column =
     element_at(VecFns.planeBands(v, 8, 8), 1)
 

@@ -594,7 +594,6 @@ object SuffixIndex {
   }
 
   def q134EvalLcs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     lcsScan(s, dir, d => d % 97 === 0)
       .withColumnRenamed("lcs_tokens", "eval_lcs_tokens")
       .withColumnRenamed("flagged", "contaminated")
@@ -612,7 +611,6 @@ object SuffixIndex {
     * ([[lcsScan]] with the set side inverted, so the implementations
     * cannot drift). */
   def q135EvalExposure(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     lcsScan(s, dir, d => d % 97 =!= 0)
       .withColumnRenamed("lcs_tokens", "corpus_lcs_tokens")
       .withColumnRenamed("flagged", "burned")

@@ -1384,7 +1384,6 @@ object TextAnalysis {
       .groupBy($"bucket").agg(count(lit(1)).as("vocab_in"))
     val w = Window.orderBy($"bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wl = Window.orderBy($"bucket")
     massB.join(vocabB, Seq("bucket"), "full_outer")
       .select($"bucket", coalesce($"docs_in", lit(0L)).as("docs_in"),
         coalesce($"occ_in", lit(0L)).as("occ_in"),

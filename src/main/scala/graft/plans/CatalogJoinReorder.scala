@@ -924,7 +924,7 @@ case class CatalogJoinReorder(session: SparkSession)
     * relation. */
   private def greedyChainRaw(start: Int, n: Int, rowsOf: Seq[BigInt],
       edges: Seq[(Int, Int, BigInt)],
-      salts: Seq[SaltEdge] = Nil): Option[(Shape, BigInt)] = {
+      salts: Seq[SaltEdge]): Option[(Shape, BigInt)] = {
     var mask = 1L << start
     var tree: Shape = SLeaf(start)
     var cost = BigInt(0)
