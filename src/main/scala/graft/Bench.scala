@@ -161,10 +161,11 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
     // Untimed STREAMING warmup, same discipline: the first AvailableNow
     // stream in a JVM pays streaming-machinery classloading + checkpoint
-    // IO setup (~2s), which must not be booked against whichever timed
-    // body starts the JVM's first stream. No prep replays through a
-    // stream any more; which timed body, if any, still starts one has
-    // not been measured, so the warmup stays.
+    // IO setup, which must not be booked against whichever timed body
+    // starts the JVM's first stream. That body is streambench's signing
+    // seam: at sf0.01 on 4 cores it timed 2.31-2.66 s with this warmup
+    // and 3.22-3.38 s without it (4 runs each). The warmup is stateless,
+    // so the seam still loads the state store's RocksDB library.
     try {
       val wbase = graft.Scratch.dir("bench-stream-warm")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wbase))

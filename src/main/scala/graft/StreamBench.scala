@@ -121,7 +121,8 @@ object StreamBench {
       timeoutMs: Long): SeamResult = {
     val c = new Ctx(spark, sfDir, seam, timeoutMs)
     // stale checkpoints and sinks would turn the timed run into a no-op
-    // (the signing anti-join suppresses every already-signed record) —
+    // (a signing stream seeds its pk index from the stored table and
+    // suppresses every already-signed record) —
     // always measure from a clean slate
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(c.root))
     val staged = seam.stage(c)

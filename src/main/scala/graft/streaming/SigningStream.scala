@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.Djb2
 
@@ -12,10 +14,10 @@ import graft.functions.Djb2
   * ObjectCreated notification chain (A4 subsumes A5).
   *
   * Flow: new lake files → PK = sha2(payload) (signer/index.js:133–137) →
-  * streaming dedup within the watermark (S4 "signed only once",
+  * streaming dedup against a state-store pk index (S4 "signed only once",
   * README.md:120–122) → broadcast keyring join (C1/C2; 100 keys) →
-  * deterministic surrogate signature (F8) → idempotent anti-join upsert
-  * into the signatures table (C3/A6, the DynamoDB `PutItem` analog).
+  * deterministic surrogate signature (F8) → idempotent append into the
+  * signatures table (C3/A6, the DynamoDB `PutItem` analog).
   */
 object SigningStream {
 
@@ -54,33 +56,77 @@ object SigningStream {
         col("s3_path"))
   }
 
-  /** Streaming driver: dedup within the watermark, then per micro-batch an
-    * anti-join against the existing signatures table before appending —
-    * the upsert is idempotent even across restarts (at-least-once file
-    * source × anti-join = effectively exactly-once rows).
+  /** A lake row keyed for the stream's dedup: `pk = sha2(payload)`. */
+  private[streaming] final case class Keyed(pk: String, payload: String, s3_path: String)
+
+  /** Streaming driver. Rows are keyed by `pk` and deduplicated against a
+    * pk index held in the state store (one `Boolean` per pk, no timeout):
+    * a pk the index holds emits nothing, a new pk emits its first row by
+    * `s3_path` and enters the index. The survivors are signed and appended
+    * to the signatures table partitioned by [[BucketCol]], with no listing
+    * and no read of the table. Per trigger that is O(batch) state lookups
+    * and O(batch) writes, whatever the table's size.
+    *
+    * The table stays the truth, and the index is a cache of it:
+    *  - on a checkpoint with no committed batch (a new stream, or one whose
+    *    checkpoint was lost) the index is seeded from the table's pks, read
+    *    once; Spark applies an initial state to batch 0 only;
+    *  - on a checkpoint with commits, the run's first batch may replay one
+    *    whose rows already landed before its commit did, so it goes through
+    *    the anti-join [[upsert]] instead of a plain append.
+    * Either way no pk is written twice (C3/A6, the DynamoDB `PutItem`
+    * analog keyed by pk, reference signer/index.js:210–216).
     */
   def run(lake: DataFrame, keyring: DataFrame, sigDir: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
       keyField: String = "id")(
       implicit spark: SparkSession): StreamingQuery = {
-    signedStream(lake, keyring, keyField)
+    import spark.implicits._
+    val keyed = lake.select(sha2(col("payload"), 256).as("pk"), col("payload"),
+      col("s3_path")).groupBy("pk").as[String, Keyed]
+    val firstNew = (_: String, rows: Iterator[Keyed], seen: GroupState[Boolean]) =>
+      // a seeded pk is also called once in batch 0, with no rows
+      if (seen.exists || !rows.hasNext) Iterator.empty
+      else { seen.update(true); Iterator.single(rows.minBy(_.s3_path)) }
+    val schema = signRecords(lake, keyring, keyField).schema
+      .add(BucketCol, StringType)
+    migrateLegacyLayout(sigDir, schema)(spark)
+    val resumed = hasCommits(checkpoint)(spark)
+    val deduped =
+      if (resumed || storedBuckets(sigDir)(spark).isEmpty)
+        keyed.flatMapGroupsWithState(OutputMode.Append,
+          GroupStateTimeout.NoTimeout)(firstNew)
+      else {
+        // an initial state with a repeated key fails the query, and the
+        // table's pks are unique only while one stream at a time writes it
+        val seed = spark.read.schema(schema).parquet(sigDir).select("pk")
+          .distinct().groupBy("pk").as[String, String].mapValues(_ => true)
+        keyed.flatMapGroupsWithState(OutputMode.Append,
+          GroupStateTimeout.NoTimeout, seed)(firstNew)
+      }
+    val antiJoinNext = new java.util.concurrent.atomic.AtomicBoolean(resumed)
+    signRecords(deduped.toDF(), keyring, keyField)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsert(batch, sigDir)(batch.sparkSession)
+        if (antiJoinNext.getAndSet(false)) upsert(batch, sigDir)(batch.sparkSession)
+        else batch.withColumn(BucketCol, substring(col("pk"), 1, 2))
+          .write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(sigDir)
       }
       .start()
   }
 
-  def signedStream(lake: DataFrame, keyring: DataFrame,
-      keyField: String = "id"): DataFrame =
-    // dropDuplicatesWithinWatermark (not dropDuplicates on a non-event-time
-    // subset) so the state store evicts entries as the watermark advances —
-    // otherwise dedup state grows without bound on a long-running stream.
-    signRecords(
-      lake.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("payload"),
-      keyring, keyField)
+  /** Whether the stream checkpointed at `checkpoint` has committed a batch:
+    * its `commits` directory holds a file named by a batch id. */
+  private def hasCommits(checkpoint: String)(spark: SparkSession): Boolean = {
+    val commits = new org.apache.hadoop.fs.Path(checkpoint, "commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(commits) && fs.listStatus(commits).exists { st =>
+      val n = st.getPath.getName
+      st.isFile && n.nonEmpty && n.forall(_.isDigit)
+    }
+  }
 
   /** Hive partition column of the signatures table: the first two hex chars
     * of the sha-256 PK — 256 uniformly-populated buckets (the PK is a
@@ -89,18 +135,16 @@ object SigningStream {
   val BucketCol = "pk_bucket"
 
   /** C3: left-anti against existing PKs, then append — "if the same
-    * transaction is seen again, the signature is not duplicated".
+    * transaction is seen again, the signature is not duplicated". The
+    * stream sends only the first batch of a resumed run here (see [[run]]).
     *
-    * Scale shape: the signatures table grows monotonically for the lifetime
-    * of the stream, so an anti-join against the WHOLE table is
-    * O(total-history) per micro-batch — quadratic over the stream's life.
-    * Instead the table is written Hive-partitioned by [[BucketCol]] and each
-    * batch anti-joins only the bucket directories that already exist and
-    * whose prefixes occur in the batch: only those directories are listed
-    * and read, and a batch touching no stored bucket skips the anti-join.
-    * Per-batch cost is then O(batch + touched buckets), independent of the
-    * rest of the table — the Spark-native analog of DynamoDB's hash-key
-    * routing on `pk` (reference signer/index.js:210–216, table keyed by PK).
+    * The table is written Hive-partitioned by [[BucketCol]], and the
+    * anti-join lists and reads only the stored bucket directories whose
+    * prefixes occur in the batch; a batch touching no stored bucket skips
+    * it. That bounds the read by the touched buckets, not by the batch: a
+    * batch of n uniform pks touches about 256·(1 − e^(−n/256)) of the 256
+    * buckets, so from about 1,200 rows on it reads back nearly the whole
+    * table, O(table history).
     */
   def upsert(batch: DataFrame, sigDir: String)(spark: SparkSession): Unit = {
     // deterministic survivor per pk (batch q22 uses first-by-event_id; the

@@ -10,7 +10,7 @@ class BenchPrepSpec extends SparkSpec {
 
   /** The real table with every step replaced by a recorder into `log`. */
   private def recorded(log: collection.mutable.Buffer[String],
-      failing: Set[String] = Set.empty): Seq[Bench.Prep] =
+      failing: Set[String]): Seq[Bench.Prep] =
     Bench.Preps.map { p =>
       def rec(step: String): Bench.Step = (_, _) => {
         log += s"$step:${p.name}"

@@ -63,8 +63,9 @@ class CodegenCacheSpec extends SparkSpec {
     }
     val first = stream()
     val second = stream()
-    // a watermark that moves embeds a new literal, so a class or two may
-    // be new; a fresh classloader would recompile the whole plan
-    assert(second <= 3L, s"the second query compiled $second classes (first: $first)")
+    info(s"classes compiled: first query $first, second $second")
+    // the plan embeds no per-query literal, so every class is a cache hit;
+    // a fresh classloader would recompile the whole plan
+    assert(second === 0L, s"the second query compiled $second classes (first: $first)")
   }
 }

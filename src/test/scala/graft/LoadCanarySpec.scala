@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench load canary (VERDICT r14 #1): index math pinned pure, and
   * the one property that makes the canary worth emitting — CPU
   * contention moves it — demonstrated with deliberate oversubscription.

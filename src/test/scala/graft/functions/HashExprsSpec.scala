@@ -16,7 +16,6 @@ class HashExprsSpec extends AnyFunSuite {
   test("simhash of identical token multisets is identical; near multisets are near") {
     val spark = graft.SparkSpec.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val df = Seq(
       (1L, Seq("a", "b", "c", "d", "e", "f")),
       (2L, Seq("a", "b", "c", "d", "e", "f")),
@@ -62,7 +61,6 @@ class HashExprsSpec extends AnyFunSuite {
   test("shingleHashes == djb2 of the materialized shingle strings") {
     val spark = graft.SparkSpec.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val texts = Seq("the quick brown fox jumps", "a b", "", "one two three")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val fast = df.select($"id", HashFns.shingleHashes(TextFns.tokens($"text"), 3).as("hs"))
@@ -79,7 +77,6 @@ class HashExprsSpec extends AnyFunSuite {
   test("minhashFromHashes(shingleHashes) == minhash(shingle strings)") {
     val spark = graft.SparkSpec.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val df = Seq((1L, "w1 w2 w3 w4 w5 w6 w7 w8")).toDF("id", "text")
     val a = df.select(HashFns.minhash(TextFns.shingles($"text", 3), 16))
       .head.getSeq[Long](0)

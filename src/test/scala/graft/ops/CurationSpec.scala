@@ -143,7 +143,6 @@ class CurationSpec extends SparkSpec {
 
   test("q75 packing is gapless, capacity-aligned, and deterministic") {
     val s = spark
-    import s.implicits._
     val out = Curation.q75TokenPacking(s, sf).collect()
     out.groupBy(_.getString(0)).foreach { case (src, rows) =>
       // running sum is gapless: cum == previous cum + n_tokens in order
@@ -172,7 +171,6 @@ class CurationSpec extends SparkSpec {
 
   test("q70 sample is identical across partitionings and respects the cap") {
     val s = spark
-    import s.implicits._
     val out1 = Curation.q70StratifiedSample(s, sf).collect().toSeq
     // Same data, radically different physical layout → same sample.
     val reshuffled = graft.Tables(s, sf, "documents").repartition(13)
@@ -226,7 +224,6 @@ class CurationSpec extends SparkSpec {
 
   test("q107 bigram LM table: hand-counted pairs, contexts, MLE probabilities") {
     val s = spark
-    import s.implicits._
     // doc1 bigrams: (a,b),(b,a),(a,b),(b,c); doc2: (a,b),(b,x)
     // → (a,b)=3 with ctx(a)=3; (b,·) three singletons with ctx(b)=3
     val dir = writeDocs(Seq((1L, "a b a b c", "en"), (2L, "a b x", "en")))
@@ -450,7 +447,6 @@ class CurationSpec extends SparkSpec {
 
   test("q140 temperature budget: exact apportionment, α=1/4 flattening direction") {
     val s = spark
-    import s.implicits._
     val rows = Curation.q140LanguageBudget(s, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getBoolean(6)))
@@ -499,7 +495,6 @@ class CurationSpec extends SparkSpec {
 
   test("q145 soft filter: decision law recomputable, rate tracks mean quality") {
     val s = spark
-    import s.implicits._
     val rows = Curation.q145SoftFilter(s, sf).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getLong(3),
         r.getBoolean(4)))
@@ -650,7 +645,6 @@ class CurationSpec extends SparkSpec {
 
   test("q142 shards: complete permutation, contiguous positions, recomputable key") {
     val s = spark
-    import s.implicits._
     val rows = Curation.q142TrainingShards(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val nDocs = graft.Tables(s, sf, "documents").count()
@@ -752,7 +746,6 @@ class CurationSpec extends SparkSpec {
 
   test("q161 dup weights: families carry one copy's influence, corpus partitioned") {
     val s = spark
-    import s.implicits._
     val rows = Curation.q161DupWeights(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
@@ -969,7 +962,6 @@ class CurationSpec extends SparkSpec {
 
   test("q172 surprisal spans: a planted garbled stretch is localized; local recompute") {
     val s = spark
-    import s.implicits._
     // 9 fluent docs repeat the same bigrams; doc 9 starts fluent then
     // switches to a garbled stretch of RARE CONTINUATIONS OF THE COMMON
     // CONTEXT 'a' (the q141 metric scores cc/pc — "a z7" is surprising
@@ -1062,7 +1054,6 @@ class CurationSpec extends SparkSpec {
 
   test("q175 calibration bands match a local recompute and band-range invariants") {
     val s = spark
-    import s.implicits._
     val got = Curation.q175Calibration(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     // local recompute from the two registered projections

@@ -221,7 +221,6 @@ class DedupSpec extends SparkSpec {
 
   test("q72 delta dedup == q51 pairs restricted to delta×corpus (no recall loss)") {
     val s = spark
-    import s.implicits._
     // The incremental path must find exactly the full-rebuild pairs that
     // cross the batch boundary — same prefix index, same df cap, same
     // verification — with the delta doc surfaced on the left regardless of
@@ -278,7 +277,6 @@ class DedupSpec extends SparkSpec {
 
   test("q77 semdedup: drops point to a verified lower-id same-cell partner") {
     val s = spark
-    import s.implicits._
     val res = Dedup.q77Semdedup(s, sf).collect()
     val cellOf = res.map(r =>
       r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
@@ -465,7 +463,6 @@ class DedupSpec extends SparkSpec {
 
   test("q152 banding sweep: nested geometries monotone, 4x4 row equals q110's") {
     val s = spark
-    import s.implicits._
     val rows = Dedup.q152LshSweep(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
@@ -550,7 +547,6 @@ class DedupSpec extends SparkSpec {
   test("q191 incremental CC == q60 rescan; touched marks exactly the " +
       "merged components") {
     val s = spark
-    import s.implicits._
     val full = Dedup.q60DupClusters(s, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val inc = Dedup.q191IncrementalCc(s, sf).collect()
@@ -603,7 +599,6 @@ class DedupSpec extends SparkSpec {
   test("q187 incremental pagerank == q185 rescan; flags mark exactly the " +
       "components holding a delta doc") {
     val s = spark
-    import s.implicits._
     val full = Dedup.q185Pagerank(s, sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val inc = Dedup.q187IncrementalPagerank(s, sf).collect()

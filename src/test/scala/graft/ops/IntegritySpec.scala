@@ -3,8 +3,6 @@ package graft.ops
 import java.nio.file.Files
 import java.sql.Date
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** q194: the audit must count injected violations exactly — and report

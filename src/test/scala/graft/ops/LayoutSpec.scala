@@ -28,7 +28,6 @@ class LayoutSpec extends SparkSpec {
 
   test("every 4096-key tile bounds a 64x64 block on the fixture") {
     val s = spark
-    import s.implicits._
     val rows = Layout.q98ZorderLayout(s, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -256,7 +255,6 @@ class LayoutSpec extends SparkSpec {
   test("q202 zone maps: read superset of match, natural layout prunes " +
       "nothing, sorted prunes only its own dimension, z-order prunes both") {
     val s = spark
-    import s.implicits._
     val rows = Layout.q202ZoneMapAudit(s, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),

@@ -73,7 +73,6 @@ class RetrievalSpec extends SparkSpec {
 
   test("fixture run: 5 per query, rrf descending within query, no self-hit") {
     val s = spark
-    import s.implicits._
     val rows = Retrieval.q94HybridRetrieval(s, sf).collect()
     val byQ = rows.groupBy(_.getLong(0))
     assert(byQ.size === 10)
@@ -87,7 +86,6 @@ class RetrievalSpec extends SparkSpec {
 
   test("q114 quality gate: 5 families x 10 queries, metric invariants, fusion lifts relevance") {
     val s = spark
-    import s.implicits._
     val rows = Retrieval.q114RetrievalQuality(s, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.length === 50)
@@ -247,7 +245,6 @@ class RetrievalSpec extends SparkSpec {
 
   test("q143 packing invariants: running sum, budget line, single partial fit") {
     val s = spark
-    import s.implicits._
     val rows = Retrieval.q143ContextAssembly(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5), r.getLong(6)))

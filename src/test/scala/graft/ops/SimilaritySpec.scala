@@ -21,7 +21,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("q73: codes fit 4 bits each, packed code fits 32 bits — the 64× compression") {
     val s = spark
-    import s.implicits._
     val rows = Similarity.q73AnnPq(s, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.forall { r =>
@@ -161,7 +160,6 @@ class SimilaritySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import java.nio.file.Files
-    import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft-sanity-").toString
     // 200 vectors: id 0 is all-zero (undefined cosine), ids 1..198 have
     // norm² = id² · 64 (strictly increasing), id 199 is an outlier blob.
@@ -204,7 +202,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("q120 SQ8: quantization error bounded by half a bucket on real vectors") {
     val s = spark
-    import s.implicits._
     val rows = graft.Tables(s, sf, "embeddings").collect()
     val dims = 64
     val vecs = rows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
@@ -307,7 +304,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("q184 Lloyd step: occupancy reconciles, shift equals a local recompute") {
     val s = spark
-    import s.implicits._
     val got = Similarity.q184KmeansStep(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val total = graft.Tables(s, sf, "embeddings").count()

@@ -26,7 +26,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q130: ranks are the true suffix order (hand fixture + permutation invariant)") {
     val s = spark
-    import s.implicits._
     val dir = writeDocs(Seq(1L -> "a b a b a", 2L -> "x", 3L -> "b b b"))
     val got = SuffixIndex.q130SuffixRank(s, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -51,7 +50,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q131: stats equal brute-force substring enumeration on random docs") {
     val s = spark
-    import s.implicits._
     val rnd = new scala.util.Random(20260813L)
     val alphabet = Vector("a", "b", "c")
     val docs = (1L to 25L).map { id =>
@@ -81,7 +79,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q132: global ranks share across identical suffixes; per-doc order agrees with q130") {
     val s = spark
-    import s.implicits._
     // docs 1 and 2 identical → their suffixes must share global ranks
     val dir = writeDocs(Seq(1L -> "a b", 2L -> "a b", 3L -> "b a"))
     val got = SuffixIndex.q132GlobalSuffixRank(s, dir).collect()
@@ -144,7 +141,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q130/q132: random corpora match naive suffix sorts (per-doc and global)") {
     val s = spark
-    import s.implicits._
     val rnd = new scala.util.Random(424242L)
     val alphabet = Vector("a", "b")
     // tiny alphabet → dense rank collisions, duplicate suffixes across
@@ -180,7 +176,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q134: planted contamination reads exact lengths; brute-force cross-check") {
     val s = spark
-    import s.implicits._
     // doc 97 is the eval slice (97 % 97 = 0); the corpus plants a 9-token
     // verbatim leak (over the 8-token threshold), a 6-token quote (under),
     // a disjoint-alphabet clean doc, and an exact eval twin
@@ -218,7 +213,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q135: the transpose gate scores eval docs against the corpus") {
     val s = spark
-    import s.implicits._
     val evalText = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     // two eval docs: 97 is leaked into corpus doc 1 (9-token run), 194
     // shares nothing with the corpus
@@ -265,7 +259,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q167 span scrub: planted leaks cut exactly, overlaps merge, full wipe hashes empty") {
     val s = spark
-    import s.implicits._
     def sha(t: String): String = java.security.MessageDigest
       .getInstance("SHA-256").digest(t.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -300,7 +293,6 @@ class SuffixIndexSpec extends SparkSpec {
 
   test("q131: driver-fixture invariants (bounds, repeat iff lrs > 0)") {
     val s = spark
-    import s.implicits._
     val rows = SuffixIndex.q131SuffixStats(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)

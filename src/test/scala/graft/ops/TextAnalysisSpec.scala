@@ -119,7 +119,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q105 BPE pairs: frequency-weighted, in-word multiplicity, tie-broken") {
     val s = spark
-    import s.implicits._
     val dir = writeDocs(Seq(
       (1L, "aaa bb aaa"),   // aaa twice: "aa" counts 2 per occurrence → 4
       (2L, "ab ab cd x"),   // "x" is sub-pair length — filtered out
@@ -147,7 +146,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q109 chunking: window geometry, 16-token overlap, content hashes") {
     val s = spark
-    import s.implicits._
     def words(n: Int): Seq[String] = (1 to n).map(i => s"w$i")
     val dir = writeDocs(Seq(
       (1L, words(10).mkString(" ")),   // short doc → its own single chunk
@@ -177,7 +175,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q112 winnowing: rightmost ties, short-doc window, substring guarantee") {
     val s = spark
-    import s.implicits._
     // doc 1: 9 identical tokens → 7 identical shingle hashes; window starts
     // 0..3 each pick the RIGHTMOST position of their 4-hash window → fps at
     // positions 3,4,5,6, one shared hash. doc 2: 5 tokens → 3 shingles < W,
@@ -205,7 +202,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q112 winnowing property: matches an independent reimplementation on random docs") {
     val s = spark
-    import s.implicits._
     // independent formulation: explicit per-window argmin with a separate
     // rightmost-tie pass — no shared arithmetic with the production
     // int64-encoding trick, so an encoding bug cannot hide
@@ -242,7 +238,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q117 memorization risk: cross-doc window sharing, not within-doc repetition") {
     val s = spark
-    import s.implicits._
     val run8 = (1 to 8).map(i => s"c$i").mkString(" ")
     val dir = writeDocs(Seq(
       (1L, s"a1 a2 $run8"),        // 10 toks → 3 windows, 1 shared (c1..c8)
@@ -261,7 +256,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q109 chunk geometry property: random lengths, independent slice hashes") {
     val s = spark
-    import s.implicits._
     val rnd = new scala.util.Random(23)
     val docs = (1L to 30L).map(i => (i, 1 + rnd.nextInt(300)))
     val dir = writeDocs(docs.map { case (i, n) =>
@@ -518,7 +512,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q165 vocab growth: Heaps curve equals a local fold on a growing corpus") {
     val s = spark
-    import s.implicits._
     // doc i has i+1 tokens and introduces exactly one new word — vocab
     // grows linearly while occurrences grow quadratically, so beta is
     // strictly between 0 and 1000 and the curve is non-degenerate
@@ -596,7 +589,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q181 canonicalization: case/punct twins dedup under the canonical hash only") {
     val s = spark
-    import s.implicits._
     // docs 1/2: raw-distinct, canonical-equal (case + punctuation + extra
     // whitespace). docs 3/4: byte-identical (raw dups, and therefore
     // canonical dups too). doc 5: unique under both.
@@ -620,7 +612,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q182 unigram Viterbi equals a full local DP; q183 usage equals a local recount") {
     val s = spark
-    import s.implicits._
     // a corpus where one substring ("abab") is overwhelmingly frequent, so
     // the LM must prefer it over char paths, plus rare words that must
     // fall back to chars
@@ -699,7 +690,6 @@ class TextAnalysisSpec extends SparkSpec {
   test("q196 collocations: perfect pair tops the list at qlog(N/df), " +
       "independent pair scores ~0, min-support prunes") {
     val s = spark
-    import s.implicits._
     def qlog(x: Long): Long = {
       val b = java.lang.Long.toBinaryString(x).length - 1
       b * 1000L + (x - (1L << b)) * 1000L / (1L << b)

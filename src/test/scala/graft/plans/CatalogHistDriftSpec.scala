@@ -35,7 +35,6 @@ class CatalogHistDriftSpec extends AnyFunSuite {
       "contract (+ the bounded carry-placement caveat); an untouched " +
       "catalog loads byte-identically") {
     val s = ExtSession.spark
-    import s.implicits._
     val art = Planner.ensureJoinArtifacts(s, sf)
     // two private copies: A stays on the r18 flat path, B upgrades
     val tmpA = java.nio.file.Files.createTempDirectory("graft-drift-a")

@@ -220,7 +220,6 @@ class SkewSaltSpec extends AnyFunSuite {
     val s = ExtSession.spark
     import s.implicits._
     import graft.ops.{CatalogColumn, CatalogSpec, CatalogTable}
-    import org.apache.spark.sql.functions.{expr, lit}
     // the EnumPropertySpec ground-number fixture, materialized: F 8000
     // rows (fa uniform over 1000, fb uniform over 4), A 400 rows with a
     // 351-row hot head on ka = 7, B 2 rows. Uniform pricing opens with

@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** S11 streaming MERGE: per-batch upsert with real update semantics, a

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -235,5 +234,136 @@ class SigningStreamSpec extends SparkSpec {
     val before = rows(dirB)
     SigningStream.migrateLegacyLayout(dirB, schema)(s) // no-op re-run
     assert(rows(dirB) === before, "re-running migration changed the table")
+  }
+
+  private val LakeSchema = "payload string, ts timestamp, s3_path string"
+
+  /** The table's rows, read with its explicit schema. */
+  private def table(sigDir: String) = spark.read.schema(
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "pk string, key_id bigint, address string, signature string, " +
+        "s3_path string, pk_bucket string")).parquet(sigDir)
+
+  /** Files each scan of `dir` in the stream's latest batch read. Spark
+    * keeps an initial state's plan as a child of the state operator in
+    * every batch but executes it in batch 0 only, so a later batch's scan
+    * reads none. */
+  private def filesRead(q: org.apache.spark.sql.streaming.StreamingQuery, dir: String) =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collectWithSubqueries {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains(dir)) =>
+          f.metrics("numFiles").value
+      }
+
+  test("a fresh checkpoint over an existing table seeds the pk index from it, once") {
+    val s = spark
+    implicit val sp = s
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-sign-seed-").toString
+    val sigDir = s"$root/sigs"
+    val ts0 = Timestamp.valueOf("2024-01-05 10:00:00")
+    def land(dir: String, rows: (String, String)*): Unit =
+      rows.map { case (id, path) => (s"""{"id": "$id"}""", ts0, path) }
+        .toDF("payload", "ts", "s3_path").coalesce(1)
+        .write.mode("append").parquet(dir)
+    // a first stream signs x and y
+    land(s"$root/live", "x" -> "raw/p0/x.json", "y" -> "raw/p0/y.json")
+    SigningStream.run(s.readStream.schema(LakeSchema).parquet(s"$root/live"),
+      keyring, sigDir, s"$root/ckpt_live", Trigger.AvailableNow()).awaitTermination(60000)
+    assert(table(sigDir).count() === 2)
+
+    // a second stream on a new checkpoint drains a backlog into the same
+    // table, one file per batch; its first batch repeats x
+    land(s"$root/backlog", "x" -> "raw/p1/x.json", "z" -> "raw/p1/z.json")
+    val q = SigningStream.run(s.readStream.schema(LakeSchema).parquet(s"$root/backlog"),
+      keyring, sigDir, s"$root/ckpt_drain", Trigger.ProcessingTime(0))
+    try {
+      q.processAllAvailable()
+      // batch 0 reads the table's pks as the index's initial state
+      assert(filesRead(q, sigDir).sum > 0)
+      for (batch <- Seq(Seq("z" -> "raw/p2/z.json", "w" -> "raw/p2/w.json"),
+          Seq("x" -> "raw/p3/x.json", "w" -> "raw/p3/w.json", "v" -> "raw/p3/v.json"))) {
+        land(s"$root/backlog", batch: _*)
+        q.processAllAvailable()
+        val read = filesRead(q, sigDir)
+        assert(read.forall(_ == 0), s"a later batch read $read files of the table")
+      }
+    } finally q.stop()
+    assert(q.recentProgress.map(_.batchId).max === 2L)
+    val sigs = table(sigDir)
+    assert(sigs.count() === 5)
+    assert(sigs.select("pk").distinct().count() === 5)
+    // the repeated x kept its first signing, by the first stream
+    assert(sigs.filter($"s3_path".endsWith("x.json")).select("s3_path")
+      .as[String].collect().toSeq === Seq("raw/p0/x.json"))
+  }
+
+  test("a batch replayed after its rows landed but before its commit adds no row") {
+    val s = spark
+    implicit val sp = s
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-sign-crash-").toString
+    val (lake, sigDir, ckpt) = (s"$root/lake", s"$root/sigs", s"$root/ckpt")
+    val ts0 = Timestamp.valueOf("2024-01-05 10:00:00")
+    def land(ids: String*): Unit =
+      ids.map(id => (s"""{"id": "$id"}""", ts0, s"raw/p0/$id.json"))
+        .toDF("payload", "ts", "s3_path").coalesce(1)
+        .write.mode("append").parquet(lake)
+    def drain(): Unit = {
+      val q = SigningStream.run(s.readStream.schema(LakeSchema).parquet(lake),
+        keyring, sigDir, ckpt, Trigger.ProcessingTime(0))
+      try q.processAllAvailable() finally q.stop()
+    }
+    land("a", "b")
+    drain()
+    land("c", "d")
+    drain() // batch 1 resumes the checkpoint
+    assert(table(sigDir).count() === 4)
+    // a crash between batch 1's sink write and its commit: its rows are in
+    // the table, its commit is not
+    val fs = new org.apache.hadoop.fs.Path(ckpt)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    for (f <- Seq("commits/1", "commits/.1.crc"))
+      fs.delete(new org.apache.hadoop.fs.Path(ckpt, f), false)
+    land("e")
+    drain() // replays batch 1, then signs e in batch 2
+    val sigs = table(sigDir)
+    assert(sigs.select("pk").distinct().count() === 5)
+    assert(sigs.count() === 5, "the replayed batch duplicated its rows")
+  }
+
+  test("a payload repeated hours later in event time is suppressed by state") {
+    val s = spark
+    implicit val sp = s
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-sign-late-").toString
+    val (lake, sigDir) = (s"$root/lake", s"$root/sigs")
+    val ts0 = Timestamp.valueOf("2024-01-05 10:00:00")
+    val later = new Timestamp(ts0.getTime + 5 * 3600 * 1000L)
+    def land(id: String, ts: Timestamp, path: String): Unit =
+      Seq((s"""{"id": "$id"}""", ts, path)).toDF("payload", "ts", "s3_path")
+        .write.mode("append").parquet(lake)
+    land("x", ts0, "raw/p0/x.json")
+    val q = SigningStream.run(s.readStream.schema(LakeSchema).parquet(lake),
+      keyring, sigDir, s"$root/ckpt", Trigger.ProcessingTime(0))
+    try {
+      q.processAllAvailable()
+      // y moves event time 5 hours on: a 10-minute watermark would now
+      // have evicted x
+      land("y", later, "raw/p0/y.json")
+      q.processAllAvailable()
+      land("x", later, "raw/p1/x.json")
+      q.processAllAvailable()
+    } finally q.stop()
+    val last = q.recentProgress.filter(_.batchId == 2L)
+    assert(last.nonEmpty)
+    // the repeat reached the index, which held x: no state row changed,
+    // and the plain append of batch 2 wrote nothing
+    assert(last.head.stateOperators.head.numRowsTotal === 2L)
+    assert(last.head.stateOperators.head.numRowsUpdated === 0L)
+    val sigs = table(sigDir)
+    assert(sigs.count() === 2)
+    assert(sigs.filter($"s3_path" === "raw/p1/x.json").count() === 0)
   }
 }

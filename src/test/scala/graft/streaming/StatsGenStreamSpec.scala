@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** S30 staged-bounds generation cutover: in-range traffic never elects,
