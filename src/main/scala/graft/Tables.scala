@@ -116,10 +116,12 @@ object GraftSession {
         classOf[graft.io.LocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.io.LocalFs].getName)
-      // Listing more than 32 paths (a stream's anti-join over touched
-      // pk_bucket directories) runs as a Spark job with one task per path
-      // by default; each task deserializes a whole Hadoop Configuration,
-      // which costs far more than listing one directory. One task per core.
+      // Listing more than 32 paths (a read of many pruned files or group
+      // directories: ManifestStream's pruned read, CompactStream's group
+      // merge, JoinAudit's wide stats) runs as a Spark job with one task
+      // per path by default; each task deserializes a whole Hadoop
+      // Configuration, which costs far more than listing one directory.
+      // One task per core.
       .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
       // Spark's generated-class cache is an LRU of 100 entries by default,
       // while the engine's working set is far larger: the 15 corpus_mix

@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Layout: the target is Hive-partitioned by `xxhash64(key) mod nBuckets`
   * ([[BucketCol]]) — each batch touches only the bucket directories its
   * keys hash into (directory-level partition pruning via `isin` on the
-  * partition column, the SigningStream discipline), so per-batch cost is
+  * partition column), so per-batch cost is
   * O(batch + touched buckets), independent of total table history.
   *
   * Exactly-once protocol, two halves with different tools:

@@ -1,10 +1,10 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StringType
 
 import graft.functions.Djb2
 
@@ -17,7 +17,7 @@ import graft.functions.Djb2
   * streaming dedup against a state-store pk index (S4 "signed only once",
   * README.md:120–122) → broadcast keyring join (C1/C2; 100 keys) →
   * deterministic surrogate signature (F8) → idempotent append into the
-  * signatures table (C3/A6, the DynamoDB `PutItem` analog).
+  * flat signatures table (C3/A6, the DynamoDB `PutItem` analog).
   */
 object SigningStream {
 
@@ -63,9 +63,11 @@ object SigningStream {
     * pk index held in the state store (one `Boolean` per pk, no timeout):
     * a pk the index holds emits nothing, a new pk emits its first row by
     * `s3_path` and enters the index. The survivors are signed and appended
-    * to the signatures table partitioned by [[BucketCol]], with no listing
-    * and no read of the table. Per trigger that is O(batch) state lookups
-    * and O(batch) writes, whatever the table's size.
+    * to the flat signatures table as one file, with no listing and no read
+    * of the table. Per trigger that is O(batch) state lookups and one file
+    * written, whatever the table's size: signing, the keyring join and the
+    * lookups run across the state partitions, and one task encodes the
+    * survivors. A trigger whose rows are all known writes an empty file.
     *
     * The table stays the truth, and the index is a cache of it:
     *  - on a checkpoint with no committed batch (a new stream, or one whose
@@ -88,18 +90,17 @@ object SigningStream {
       // a seeded pk is also called once in batch 0, with no rows
       if (seen.exists || !rows.hasNext) Iterator.empty
       else { seen.update(true); Iterator.single(rows.minBy(_.s3_path)) }
-    val schema = signRecords(lake, keyring, keyField).schema
-      .add(BucketCol, StringType)
-    migrateLegacyLayout(sigDir, schema)(spark)
+    migrateLegacyLayout(sigDir)(spark)
     val resumed = hasCommits(checkpoint)(spark)
     val deduped =
-      if (resumed || storedBuckets(sigDir)(spark).isEmpty)
+      if (resumed || !exists(sigDir)(spark))
         keyed.flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(firstNew)
       else {
         // an initial state with a repeated key fails the query, and the
         // table's pks are unique only while one stream at a time writes it
-        val seed = spark.read.schema(schema).parquet(sigDir).select("pk")
+        val seed = spark.read.schema(signRecords(lake, keyring, keyField).schema)
+          .parquet(sigDir).select("pk")
           .distinct().groupBy("pk").as[String, String].mapValues(_ => true)
         keyed.flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout, seed)(firstNew)
@@ -111,8 +112,7 @@ object SigningStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (antiJoinNext.getAndSet(false)) upsert(batch, sigDir)(batch.sparkSession)
-        else batch.withColumn(BucketCol, substring(col("pk"), 1, 2))
-          .write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(sigDir)
+        else append(batch, sigDir)
       }
       .start()
   }
@@ -120,7 +120,7 @@ object SigningStream {
   /** Whether the stream checkpointed at `checkpoint` has committed a batch:
     * its `commits` directory holds a file named by a batch id. */
   private def hasCommits(checkpoint: String)(spark: SparkSession): Boolean = {
-    val commits = new org.apache.hadoop.fs.Path(checkpoint, "commits")
+    val commits = new Path(checkpoint, "commits")
     val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(commits) && fs.listStatus(commits).exists { st =>
       val n = st.getPath.getName
@@ -128,23 +128,22 @@ object SigningStream {
     }
   }
 
-  /** Hive partition column of the signatures table: the first two hex chars
-    * of the sha-256 PK — 256 uniformly-populated buckets (the PK is a
-    * cryptographic hash, so bucket skew is impossible by construction).
-    */
-  val BucketCol = "pk_bucket"
+  private def exists(dir: String)(spark: SparkSession): Boolean = {
+    val path = new Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  }
+
+  /** Append `rows` to the table root as one parquet file. */
+  private def append(rows: DataFrame, sigDir: String): Unit =
+    rows.repartition(1).write.mode(SaveMode.Append).parquet(sigDir)
 
   /** C3: left-anti against existing PKs, then append — "if the same
     * transaction is seen again, the signature is not duplicated". The
     * stream sends only the first batch of a resumed run here (see [[run]]).
     *
-    * The table is written Hive-partitioned by [[BucketCol]], and the
-    * anti-join lists and reads only the stored bucket directories whose
-    * prefixes occur in the batch; a batch touching no stored bucket skips
-    * it. That bounds the read by the touched buckets, not by the batch: a
-    * batch of n uniform pks touches about 256·(1 − e^(−n/256)) of the 256
-    * buckets, so from about 1,200 rows on it reads back nearly the whole
-    * table, O(table history).
+    * The anti-join reads the pks of the whole table, its root as one path
+    * (O(table) once), and the survivors land as one file like any
+    * trigger's. Any older layout is migrated first.
     */
   def upsert(batch: DataFrame, sigDir: String)(spark: SparkSession): Unit = {
     // deterministic survivor per pk (batch q22 uses first-by-event_id; the
@@ -153,130 +152,64 @@ object SigningStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pk")).orderBy(col("s3_path"))
     val fresh = batch
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-      .withColumn(BucketCol, substring(col("pk"), 1, 2))
-      // evaluated twice (prefix collect + write) — cache so the signing
-      // join doesn't re-run
-      .persist()
-    try {
-      migrateLegacyLayout(sigDir, fresh.schema)(spark)
-      val stored = storedBuckets(sigDir)(spark)
-      // ≤256 two-hex-char strings — bounded driver-side metadata, not a
-      // data collect
-      val touched =
-        if (stored.isEmpty) Seq.empty
-        else fresh.select(BucketCol).distinct()
-          .collect().map(_.getString(0)).toSeq.filter(stored)
-      val toWrite =
-        if (touched.isEmpty) fresh
-        else fresh.join(existingPks(sigDir, touched, fresh.schema)(spark),
-          Seq("pk"), "left_anti")
-      toWrite.write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(sigDir)
-    } finally { fresh.unpersist(); () }
+    migrateLegacyLayout(sigDir)(spark)
+    append(
+      if (!exists(sigDir)(spark)) fresh
+      else fresh.join(spark.read.schema(fresh.schema).parquet(sigDir).select("pk"),
+        Seq("pk"), "left_anti"),
+      sigDir)
   }
 
-  /** PKs already present in the buckets named by `prefixes`, each of which
-    * must exist as a directory. Only those directories are listed and read
-    * (`basePath` keeps [[BucketCol]] as a partition column); listing the
-    * table root and pruning afterwards would list every file of every
-    * bucket, O(table history) per batch.
-    *
-    * The schema is passed explicitly rather than inferred: partition-column
-    * type inference would read `pk_bucket` as an INT whenever every bucket
-    * directory read happens to be digit-only hex (`pk_bucket=07`,
-    * `pk_bucket=42`), making the column's type flip between string and int
-    * across batches. With a user schema the partition column is stably a
-    * 2-char string. */
-  def existingPks(sigDir: String, prefixes: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)(
-      spark: SparkSession): DataFrame =
-    spark.read.schema(schema).option("basePath", sigDir)
-      .parquet(prefixes.map(p => s"$sigDir/$BucketCol=$p"): _*)
-      .select("pk")
-
-  /** One-time migration of a signatures table written before the
-    * [[BucketCol]] partitioning (flat parquet files at the table root).
-    * Appending partitioned data next to flat files would produce a mixed
-    * layout Spark's partition discovery rejects outright, so the legacy
-    * files are rewritten into bucket directories and removed.
-    *
-    * Protocol — every row lives in exactly ONE place at all times, so a
-    * crash at any point neither loses nor duplicates data, and the next
-    * call resumes:
-    *  1. move the flat files into `<dir>.migrating-src` (per-file rename,
-    *     atomic on HDFS/local; a crash mid-step leaves each file at root
-    *     or in src, never both);
-    *  2. rewrite src → `<dir>.migrating-out` partitioned by [[BucketCol]]
-    *     (skipped on resume when out's `_SUCCESS` marker already exists;
-    *     a partial out without the marker is discarded and rebuilt from
-    *     src, which still holds every row);
-    *  3. move out's bucket files into the table (per-file rename; files
-    *     already moved by a crashed prior attempt are gone from out, so
-    *     resuming moves only the remainder — no row lands twice);
-    *  4. delete src, then out.
-    * Any rename the filesystem refuses (`rename` returns false — how
-    * Hadoop filesystems report most failures) aborts with an exception
-    * BEFORE any delete, so nothing is dropped on a failed move. */
-  private[streaming] def migrateLegacyLayout(sigDir: String,
-      schema: org.apache.spark.sql.types.StructType)(
+  /** Moves a signatures table written in an older layout to the flat one,
+    * where every data file sits at the table root:
+    *  - a `pk_bucket=<xx>/<file>` directory per pk prefix becomes
+    *    `<root>/<xx>-<file>` (file names repeat across bucket directories),
+    *    and each emptied directory is deleted;
+    *  - leftovers of the older flat→bucketed migration finish flat: once
+    *    its rewrite `<dir>.migrating-out` was complete (`_SUCCESS`), the
+    *    files it has not yet moved into the table are flattened in the same
+    *    way and its source copy `<dir>.migrating-src` is dropped; before
+    *    that, the partial rewrite is dropped and the source files move back
+    *    to the root.
+    * Each rename is atomic and nothing is deleted while it holds the only
+    * copy of a row, so after a crash every row is in exactly one place and
+    * the next call finishes the job. A rename the file system refuses
+    * (`rename` returns false, as Hadoop file systems report most failures)
+    * throws before any delete. Every listing and rename goes through the
+    * root's own FileSystem. */
+  private[streaming] def migrateLegacyLayout(sigDir: String)(
       spark: SparkSession): Unit = {
-    val path = new org.apache.hadoop.fs.Path(sigDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    def strictRename(a: org.apache.hadoop.fs.Path,
-        b: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(a, b))
-        throw new java.io.IOException(s"migration rename failed: $a -> $b")
-    def dataFiles(p: org.apache.hadoop.fs.Path) =
-      if (!fs.exists(p)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    val root = new Path(sigDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def move(f: Path, to: Path): Unit =
+      if (!fs.rename(f, to))
+        throw new java.io.IOException(s"migration rename failed: $f -> $to")
+    def list(dir: Path) =
+      if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+    def dataFiles(dir: Path) = list(dir).collect {
+      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") => st.getPath
+    }
+    def flatten(dir: Path): Unit =
+      for (st <- list(dir) if st.isDirectory && st.getPath.getName.startsWith("pk_bucket=")) {
+        val prefix = st.getPath.getName.stripPrefix("pk_bucket=")
+        for (f <- dataFiles(st.getPath)) move(f, new Path(root, s"$prefix-${f.getName}"))
+        fs.delete(st.getPath, true)
       }
-    val src = new org.apache.hadoop.fs.Path(sigDir + ".migrating-src")
-    val out = new org.apache.hadoop.fs.Path(sigDir + ".migrating-out")
-    val flatFiles = dataFiles(path).map(_.getPath)
-    if (flatFiles.isEmpty && !fs.exists(src)) return
-    // 1. root → src
-    if (flatFiles.nonEmpty) fs.mkdirs(src)
-    for (f <- flatFiles) strictRename(f, new org.apache.hadoop.fs.Path(src, f.getName))
-    if (dataFiles(src).isEmpty) { fs.delete(src, true); fs.delete(out, true); return }
-    // 2. src → out (resume-aware: a completed rewrite is marked by _SUCCESS)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS"))) {
+    val src = new Path(sigDir + ".migrating-src")
+    val out = new Path(sigDir + ".migrating-out")
+    if (fs.exists(src) || fs.exists(out)) {
+      fs.mkdirs(root)
+      if (fs.exists(new Path(out, "_SUCCESS"))) flatten(out)
+      else {
+        fs.delete(out, true)
+        for (f <- dataFiles(src)) move(f, new Path(root, f.getName))
+      }
+      fs.delete(src, true)
       fs.delete(out, true)
-      spark.read.schema(org.apache.spark.sql.types.StructType(
-          schema.filterNot(_.name == BucketCol)))
-        .parquet(src.toString)
-        .withColumn(BucketCol, substring(col("pk"), 1, 2))
-        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(out.toString)
     }
-    // 3. out buckets → table
-    for (bucket <- fs.listStatus(out) if bucket.isDirectory) {
-      val target = new org.apache.hadoop.fs.Path(path, bucket.getPath.getName)
-      fs.mkdirs(target)
-      for (f <- dataFiles(bucket.getPath))
-        strictRename(f.getPath,
-          new org.apache.hadoop.fs.Path(target, f.getPath.getName))
-    }
-    // 4. cleanup — src first: once out's rows are in the table, src is the
-    // only copy that could re-introduce duplicates on a resume.
-    fs.delete(src, true)
-    fs.delete(out, true)
-  }
-
-  /** The [[BucketCol]] values with a directory in the table, from one
-    * listing of the table root through the Hadoop FileSystem API (works on
-    * HDFS/S3A, not just the local FS). A missing or empty table (e.g. left
-    * by a previous failed attempt before any parquet landed) has none. */
-  private def storedBuckets(dir: String)(spark: SparkSession): Set[String] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = s"$BucketCol="
-    if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith(prefix) =>
-        st.getPath.getName.stripPrefix(prefix)
-    }.toSet
+    flatten(root)
   }
 }

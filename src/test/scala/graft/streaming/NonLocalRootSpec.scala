@@ -118,4 +118,28 @@ class NonLocalRootSpec extends SparkSpec {
     assert(VectorIndexStream.probe(s, root, corpus, vec(1, 0), k = 2, nprobe = 1)
       .collect().map(_.getLong(0)).toSet === Set(1L, 3L))
   }
+
+  test("signatures on a non-local root migrate flat, then upsert") {
+    val s = spark
+    import s.implicits._
+    val sigDir = s"${mockRoot(s, "graft-nl-sig-")}/sigs"
+    def signed(rows: (String, String)*) = rows.toDF("pk", "s3_path")
+      .select($"pk", lit(1L).as("key_id"), lit("0xaddr").as("address"),
+        lit("s" * 64).as("signature"), $"s3_path")
+    val (a, b, c) = ("07" + "a" * 62, "42" + "b" * 62, "99" + "c" * 62)
+    // the layout before the flat one: a pk_bucket=<xx> directory per prefix
+    signed(a -> "raw/p0/a.json", b -> "raw/p1/b.json")
+      .withColumn("pk_bucket", substring($"pk", 1, 2))
+      .repartition(1).write.partitionBy("pk_bucket").parquet(sigDir)
+
+    // a resumed run's first batch: a replay of a and a new c
+    SigningStream.upsert(signed(a -> "raw/p2/a.json", c -> "raw/p2/c.json"),
+      sigDir)(s)
+    val p = new Path(sigDir)
+    assert(p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .forall(_.isFile), "a bucket directory was left behind")
+    assert(s.read.parquet(sigDir).select($"pk", $"s3_path").as[(String, String)]
+      .collect().toSet === Set(a -> "raw/p0/a.json", b -> "raw/p1/b.json",
+        c -> "raw/p2/c.json"))
+  }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, lit, substring}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -55,28 +57,11 @@ class SigningStreamSpec extends SparkSpec {
     val row = sigs2.filter($"s3_path" === "raw/p2/obj-3.json").head
     assert(row.getAs[String]("signature").length === 64)
 
-    // the table is Hive-partitioned on the pk prefix, and the per-batch
-    // anti-join probe prunes to just the buckets present in the batch:
-    // reading one bucket must touch ONLY that bucket's directory
-    val buckets = sigs2.select(SigningStream.BucketCol).distinct()
-      .collect().map(_.getString(0)).sorted
-    assert(buckets.forall(_.length == 2))
-    assert(buckets.length >= 2) // 3 random sha-256 prefixes collide w.p. ~1e-4
-    val one = buckets.head
-    val sigSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "pk string, key_id bigint, address string, signature string, " +
-        "s3_path string, pk_bucket string")
-    val pruned = SigningStream.existingPks(sigDir, Seq(one), sigSchema)(s)
-    pruned.collect() // populate scan metrics
-    // Dataset.inputFiles ignores pushed filters — the proof of directory
-    // pruning is the scan node's numFiles metric after execution
-    val scan = pruned.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    val totalFiles = s.read.parquet(sigDir).inputFiles.length
-    assert(totalFiles >= buckets.length)
-    assert(scan.metrics("numFiles").value < totalFiles,
-      s"bucket read not pruned: ${scan.metrics("numFiles").value} of $totalFiles files")
+    // one file per trigger that carried rows, every one at the table root
+    val triggers = Seq(q1, q2).map(_.recentProgress.count(_.numInputRows > 0)).sum
+    assert(triggers === 2)
+    assert(dataFiles(sigDir).length === triggers)
+    assert(subdirs(sigDir).isEmpty)
   }
 
   test("signature seam: the real ECDSA signer plugs into signRecords and verifies") {
@@ -106,18 +91,18 @@ class SigningStreamSpec extends SparkSpec {
     assert(sur.forall(_.getAs[String]("signature").matches("[0-9a-f]{64}")))
   }
 
-  test("upsert lists only touched buckets, in jobs no wider than the cores") {
+  test("upsert reads the table root once and appends one file") {
     val s = spark
     import s.implicits._
-    val sigDir = Files.createTempDirectory("graft-wide-").toString + "/sigs"
-    // 64 rows in 64 buckets: past Spark's 32-path parallel-listing threshold
+    val sigDir = Files.createTempDirectory("graft-upsert-").toString + "/sigs"
+    // 64 rows under 64 pk prefixes, which the old layout spread over 64
+    // bucket directories
     val batch = (0 until 64).map(i =>
       (f"$i%02x" + "a" * 62, i.toLong, s"0xaddr$i", "s" * 64, s"raw/p0/$i.json"))
       .toDF("pk", "key_id", "address", "signature", "s3_path")
     SigningStream.upsert(batch, sigDir)(s)
-    val bucketDirs = new java.io.File(sigDir).listFiles()
-      .count(_.getName.startsWith(SigningStream.BucketCol + "="))
-    assert(bucketDirs === 64)
+    assert(dataFiles(sigDir).length === 1)
+    assert(subdirs(sigDir).isEmpty)
 
     // (description, widest stage) of every job one upsert starts
     def jobsOf(upsert: => Unit): Seq[(String, Int)] = {
@@ -136,105 +121,132 @@ class SigningStreamSpec extends SparkSpec {
       } finally s.sparkContext.removeSparkListener(listener)
       jobs.toArray.toSeq.map(_.asInstanceOf[(String, Int)])
     }
-    def isListing(job: (String, Int)) = job._1.startsWith("Listing leaf files")
 
-    // replaying all 64 buckets: the listing job is one task per core
+    // a replay of all 64 rows: the root is listed on the driver, not by a
+    // listing job, and the anti-join drops every row
     val cores = s.sparkContext.defaultParallelism
     val replay = jobsOf(SigningStream.upsert(batch, sigDir)(s))
-    assert(replay.exists(isListing))
+    assert(!replay.exists(_._1.startsWith("Listing leaf files")), s"listing job: $replay")
     assert(replay.forall(_._2 <= cores), s"job wider than $cores cores: $replay")
-    assert(s.read.parquet(sigDir).count() === 64) // the replay added no row
+    assert(table(sigDir).count() === 64)
+    assert(dataFiles(sigDir).length <= 2) // at most one file per upsert
 
-    // one row into one stored bucket: that directory alone is listed, on
-    // the driver, not all 64 through a listing job
-    val one = Seq(("00" + "b" * 62, 64L, "0xaddr64", "s" * 64, "raw/p0/64.json"))
+    // one new row and one replayed row: only the new one is appended
+    val mixed = Seq(("00" + "b" * 62, 64L, "0xaddr64", "s" * 64, "raw/p0/64.json"),
+      ("00" + "a" * 62, 0L, "0xaddr0", "s" * 64, "raw/p1/0.json"))
       .toDF("pk", "key_id", "address", "signature", "s3_path")
-    val single = jobsOf(SigningStream.upsert(one, sigDir)(s))
-    assert(!single.exists(isListing), s"whole table listed: $single")
-    assert(s.read.parquet(sigDir).count() === 65)
+    SigningStream.upsert(mixed, sigDir)(s)
+    assert(table(sigDir).count() === 65)
+    assert(table(sigDir).select("pk").distinct().count() === 65)
+    assert(dataFiles(sigDir).length <= 3)
   }
 
-  test("legacy flat signatures table is migrated to the bucketed layout") {
+  /** Signed rows with the given pks and lake paths. */
+  private def signed(rows: Seq[(String, String)]) = {
     val s = spark
     import s.implicits._
-    val sigDir = Files.createTempDirectory("graft-legacy-").toString + "/sigs"
-    // a pre-pk_bucket table: flat parquet files at the root, digit-only pk
-    // prefixes (the partition-type-inference trap: 07/42 would infer INT)
-    val legacy = Seq(
-      ("07" + "a" * 62, 1L, "0xaddr1", "s" * 64, "raw/p0/old-1.json"),
-      ("42" + "b" * 62, 2L, "0xaddr2", "t" * 64, "raw/p1/old-2.json"),
-    ).toDF("pk", "key_id", "address", "signature", "s3_path")
-    legacy.write.parquet(sigDir)
-    val fs = new org.apache.hadoop.fs.Path(sigDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rootFlatFiles() = fs.listStatus(new org.apache.hadoop.fs.Path(sigDir))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    rows.toDF("pk", "s3_path").select($"pk", lit(1L).as("key_id"),
+      lit("0xaddr").as("address"), lit("s" * 64).as("signature"), $"s3_path")
+  }
 
-    assert(rootFlatFiles().nonEmpty)
-    // batch: a replay of one legacy pk + one new record
+  /** `rows` written in the layout before the flat one: one `pk_bucket=<xx>`
+    * directory per pk prefix, every file named alike (one writer task). */
+  private def writeBucketed(rows: Seq[(String, String)], dir: String): Unit =
+    signed(rows).withColumn("pk_bucket", substring(col("pk"), 1, 2))
+      .repartition(1).write.partitionBy("pk_bucket").parquet(dir)
+
+  private val BucketedRows = Seq(
+    ("07" + "a" * 62, "raw/p0/old-1.json"), ("07" + "d" * 62, "raw/p0/old-4.json"),
+    ("42" + "b" * 62, "raw/p1/old-2.json"), ("9f" + "c" * 62, "raw/p2/old-3.json"))
+
+  /** The pks of the table at `dir`, sorted, a repeated pk repeated. */
+  private def pks(dir: String): Seq[String] = {
+    val s = spark
+    import s.implicits._
+    table(dir).select($"pk").as[String].collect().toSeq.sorted
+  }
+
+  test("bucketed signatures table is migrated to the flat layout") {
+    val s = spark
+    import s.implicits._
+    val sigDir = Files.createTempDirectory("graft-bucketed-").toString + "/sigs"
+    writeBucketed(BucketedRows, sigDir)
+    assert(subdirs(sigDir).length === 3)
+    // a batch: a replay of one stored pk and one new record
     val batch = Seq(
       ("07" + "a" * 62, 1L, "0xaddr1", "s" * 64, "raw/p0/replay.json"),
       ("99" + "c" * 62, 3L, "0xaddr3", "u" * 64, "raw/p2/new-3.json"),
     ).toDF("pk", "key_id", "address", "signature", "s3_path")
     SigningStream.upsert(batch, sigDir)(s)
 
-    // migration: no flat files remain, everything lives in pk_bucket= dirs
-    assert(rootFlatFiles().isEmpty)
-    // explicit schema: with inference the all-digit buckets (07/42/99) would
-    // come back as INTs and "07" would silently become 7
-    val after = s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-      "pk string, key_id bigint, address string, signature string, " +
-        "s3_path string, pk_bucket string")).parquet(sigDir)
-    assert(after.count() === 3) // replayed legacy pk suppressed by anti-join
-    assert(after.filter($"pk".startsWith("07")).count() === 1)
-    assert(after.filter($"pk".startsWith("07")).select("s3_path").head.getString(0)
-      === "raw/p0/old-1.json") // the legacy row, not the replay, survived
-    val bucketVals = after.select(SigningStream.BucketCol).distinct()
-      .as[String].collect().sorted
-    assert(bucketVals.toSeq === Seq("07", "42", "99"))
+    // every file at the root, the bucket directories gone
+    assert(subdirs(sigDir).isEmpty)
+    assert(dataFiles(sigDir).length === 4) // 3 moved + 1 appended
+    assert(pks(sigDir) === (BucketedRows.map(_._1) :+ "99" + "c" * 62).sorted)
+    // the stored row, not the replay, survived
+    assert(table(sigDir).filter($"pk".startsWith("07a")).select("s3_path")
+      .as[String].collect().toSeq === Seq("raw/p0/old-1.json"))
   }
 
   test("migration resumes after a crash without losing or duplicating rows") {
-    val s = spark
-    import s.implicits._
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "pk string, key_id bigint, address string, signature string, " +
-        "s3_path string, pk_bucket string")
-    def freshLegacy(): String = {
-      val dir = Files.createTempDirectory("graft-legacy-crash-").toString + "/sigs"
-      Seq(
-        ("07" + "a" * 62, 1L, "0xaddr1", "s" * 64, "raw/p0/old-1.json"),
-        ("42" + "b" * 62, 2L, "0xaddr2", "t" * 64, "raw/p1/old-2.json"),
-      ).toDF("pk", "key_id", "address", "signature", "s3_path")
-        .write.parquet(dir)
-      dir
-    }
-    def rows(dir: String) =
-      s.read.schema(schema).parquet(dir).select($"pk").as[String].collect().toSet
+    val want = BucketedRows.map(_._1).sorted
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString + "/sigs"
 
-    // Crash window A: flat files already moved to the src staging dir,
-    // rewrite not yet run (simulated by doing step 1 by hand).
-    val dirA = freshLegacy()
-    val fsA = new org.apache.hadoop.fs.Path(dirA)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val srcA = new org.apache.hadoop.fs.Path(dirA + ".migrating-src")
-    fsA.mkdirs(srcA)
-    for (f <- fsA.listStatus(new org.apache.hadoop.fs.Path(dirA))
-        if f.isFile && !f.getPath.getName.startsWith("_"))
-      assert(fsA.rename(f.getPath,
-        new org.apache.hadoop.fs.Path(srcA, f.getPath.getName)))
-    SigningStream.migrateLegacyLayout(dirA, schema)(s) // resume
-    assert(rows(dirA).size === 2)
-    assert(!fsA.exists(srcA))
+    // a crash mid-flatten: bucket 07's file already moved to the root as
+    // 07-<file>, the other buckets not yet
+    val dirA = tmp("graft-flat-crash-")
+    writeBucketed(BucketedRows, dirA)
+    val fs = fsOf(dirA)
+    for (f <- dataFiles(s"$dirA/pk_bucket=07"))
+      assert(fs.rename(new Path(f), new Path(dirA, s"07-${new Path(f).getName}")))
+    fs.delete(new Path(dirA, "pk_bucket=07"), true)
+    SigningStream.migrateLegacyLayout(dirA)(spark)
+    assert(subdirs(dirA).isEmpty)
+    assert(pks(dirA) === want)
+    SigningStream.migrateLegacyLayout(dirA)(spark) // a no-op on a flat table
+    assert(pks(dirA) === want)
 
-    // Crash window B: rewrite completed (out dir with _SUCCESS), src still
-    // present, buckets not yet moved — a resume must move them exactly once.
-    val dirB = freshLegacy()
-    SigningStream.migrateLegacyLayout(dirB, schema)(s) // full migration
-    val before = rows(dirB)
-    SigningStream.migrateLegacyLayout(dirB, schema)(s) // no-op re-run
-    assert(rows(dirB) === before, "re-running migration changed the table")
+    // leftovers of the older flat→bucketed migration, first window: the
+    // flat files moved to <dir>.migrating-src, the bucketed rewrite in
+    // <dir>.migrating-out unfinished (no _SUCCESS)
+    val dirB = tmp("graft-legacy-crash-")
+    signed(BucketedRows).write.parquet(s"$dirB.migrating-src")
+    writeBucketed(BucketedRows.take(1), s"$dirB.migrating-out")
+    fs.delete(new Path(s"$dirB.migrating-out", "_SUCCESS"), false)
+    SigningStream.migrateLegacyLayout(dirB)(spark)
+    assert(pks(dirB) === want)
+
+    // second window: the rewrite complete, bucket 07 already moved into
+    // the table, the rest still in <dir>.migrating-out, and
+    // <dir>.migrating-src still holding every row
+    val dirC = tmp("graft-legacy-crash-")
+    signed(BucketedRows).write.parquet(s"$dirC.migrating-src")
+    writeBucketed(BucketedRows, s"$dirC.migrating-out")
+    fs.mkdirs(new Path(dirC))
+    assert(fs.rename(new Path(s"$dirC.migrating-out", "pk_bucket=07"),
+      new Path(dirC, "pk_bucket=07")))
+    SigningStream.migrateLegacyLayout(dirC)(spark)
+    assert(subdirs(dirC).isEmpty)
+    assert(pks(dirC) === want)
+
+    for (d <- Seq(dirB, dirC); leftover <- Seq("src", "out"))
+      assert(!fs.exists(new Path(s"$d.migrating-$leftover")))
   }
+
+  private def fsOf(dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The data files directly under `dir`, as path strings. */
+  private def dataFiles(dir: String): Seq[String] =
+    fsOf(dir).listStatus(new Path(dir)).toSeq.collect {
+      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") => st.getPath.toString
+    }
+
+  /** The names of the directories directly under `dir`. */
+  private def subdirs(dir: String): Seq[String] =
+    fsOf(dir).listStatus(new Path(dir)).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName)
 
   private val LakeSchema = "payload string, ts timestamp, s3_path string"
 
@@ -242,7 +254,7 @@ class SigningStreamSpec extends SparkSpec {
   private def table(sigDir: String) = spark.read.schema(
     org.apache.spark.sql.types.StructType.fromDDL(
       "pk string, key_id bigint, address string, signature string, " +
-        "s3_path string, pk_bucket string")).parquet(sigDir)
+        "s3_path string")).parquet(sigDir)
 
   /** Files each scan of `dir` in the stream's latest batch read. Spark
     * keeps an initial state's plan as a child of the state operator in
